@@ -76,9 +76,10 @@ object Anf {
   }
 
   /** QUOTIENT fast path for the 2-round ANF over the bidirectional
-    * (brand, size ± 1) part edit-graph — the KTruss/Mis/Jaccard/PPR
-    * pattern. In the class blow-up, the standard ball-union induction
-    * M_v^(t) = ∪_{d(u,v) ≤ t} unit(u) collapses class-level at t = 2:
+    * (brand, size ± 1) blow-up of a `(node, brand, size)` vertex
+    * table with its probed class map. In the class blow-up, the
+    * standard ball-union induction M_v^(t) = ∪_{d(u,v) ≤ t} unit(u)
+    * collapses class-level at t = 2:
     * B(v, 2) = {v} ∪ members(adj(c)) ∪ members(adj(adj(c))), and
     * since every node in [[run]]'s counter table has ≥ 1 neighbor,
     * c ∈ adj(adj(c)) — so B(v, 2) is exactly the member set of the
@@ -92,53 +93,14 @@ object Anf {
     * The exact `ball2` verification anchor is the same class
     * function (Σ member counts over the ball), so the |E|·deg wedge
     * join the exact 2-ball needed — the 27×-growth term the SCALING
-    * ladder flagged — disappears with it. Spec-pinned against
-    * [[run]] + the exact ball on random class graphs and both
-    * shipped SFs (QuotientPropertySpec discipline).
+    * ladder flagged — disappears with it.
     *
-    * Emits the g_anf surface: (node, ball2, anf_ok) for sampled
-    * nodes, where anf_ok = |est − ball2| ≤ tol·ball2.
-    */
-  def quotientPartEdit(s: SparkSession, sfDir: String, sampleMod: Int,
-                       tol: Double): DataFrame = {
-    import s.implicits._
-    quotientBlowup(s, graft.Tables.part(s, sfDir)
-        .select($"p_partkey".cast("long").as("node"), $"p_brand".as("brand"),
-          $"p_size".cast("long").as("size")),
-      sampleMod, tol)
-  }
-
-  /** The class-ball computation over any (node, brand, size) blow-up
-    * vertex table — factored out for the property spec. Same surface
-    * as [[quotientPartEdit]]: (node, ball2, anf_ok). */
-  private[graft] def quotientBlowup(s: SparkSession, parts: DataFrame,
-                                    sampleMod: Int, tol: Double): DataFrame =
-    quotientBlowupEst(s, parts, sampleMod, tol).select("node", "ball2", "anf_ok")
-
-  /** [[quotientBlowup]] over a PRECOMPUTED class map — so [[Dispatch]]
-    * can reuse its probe's collect instead of aggregating the vertex
-    * table twice per call (the KTruss.quotientBlowup pattern). */
-  private[graph] def quotientBlowup(s: SparkSession,
-      classes: Map[(String, Long), Long], parts: DataFrame,
-      sampleMod: Int, tol: Double): DataFrame =
-    quotientBlowupEst(s, classes, parts, sampleMod, tol)
-      .select("node", "ball2", "anf_ok")
-
-  /** [[quotientBlowup]] WITH the est column — the equivalence specs
-    * compare est doubles against [[run]]'s (est is a pure function of
-    * the registers, so est equality pins the claimed bit-identical
-    * register merge, not just the anf_ok booleans). */
-  private[graft] def quotientBlowupEst(s: SparkSession, parts: DataFrame,
-                                       sampleMod: Int, tol: Double): DataFrame = {
-    import s.implicits._
-    // shares Quotient's guarded-collect discipline; runs off the
-    // caller's vertex table so the spec can feed synthetic graphs
-    quotientBlowupEst(s, Quotient.collectClasses(
-      parts.groupBy($"brand", $"size").agg(count(lit(1)).as("cnt"))),
-      parts, sampleMod, tol)
-  }
-
-  private def quotientBlowupEst(s: SparkSession,
+    * Emits (node, ball2, est, anf_ok) for sampled nodes, where
+    * anf_ok = |est − ball2| ≤ tol·ball2 — [[propagationReference]]'s
+    * shape, so the equivalence specs compare est bit-for-bit
+    * (QuotientPropertySpec, RoundEightOpsSpec); [[Dispatch.anf]] drops
+    * est for the g_anf surface. */
+  private[graft] def quotientBlowup(s: SparkSession,
       classes: Map[(String, Long), Long], parts: DataFrame,
       sampleMod: Int, tol: Double): DataFrame = {
     import s.implicits._

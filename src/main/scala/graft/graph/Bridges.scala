@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   * function of the (brand, size) CLASS graph, whose node count is
   * bounded by the attribute domain (|brands| × |sizes|) regardless
   * of how many fact parts populate each class. So the plan is one
-  * distributed distinct over the fact table, an in-process Tarjan
-  * bridge pass over the collected class graph (limit-guarded: the
-  * collect refuses if the class count exceeds the domain bound,
-  * mirroring DagDepth), and the bounded per-class-edge result —
-  * never a fact-scaled connectivity iteration. A naive distributed
+  * bounded class probe over the fact table ([[Dispatch.probe]]), an
+  * in-process Tarjan bridge pass over the probed class graph, and
+  * the bounded per-class-edge result — never a fact-scaled
+  * connectivity iteration (past the class bound, the distributed
+  * definitional engine answers instead). A naive distributed
   * per-edge BFS would be |edges| full traversals of a graph that
   * fits in one task.
   *
@@ -80,11 +80,11 @@ object Bridges {
 
   /** Bridge classification of the widened (±1, ±2) part edit rule's
     * class graph: one row per canonical class edge
-    * (brand, size_lo, size_hi, is_bridge). ROUTED (round-10: the
-    * Dispatch discipline — round 9's collectClasses THREW past the
-    * domain bound): within `bound` the probe's class rows feed the
-    * in-process Tarjan pass; past it, the distributed definitional
-    * engine ([[edgeBridgesDistributed]]) answers instead. */
+    * (brand, size_lo, size_hi, is_bridge). ROUTED by
+    * [[Dispatch.probe]]: within the class bound the probed classes
+    * feed the in-process Tarjan pass; past it, the distributed
+    * definitional engine ([[edgeBridgesDistributed]]) answers
+    * instead. */
   def classEdgeBridges(s: SparkSession, d: String,
                        bound: Int = -1): DataFrame = {
     import s.implicits._
@@ -96,13 +96,9 @@ object Bridges {
     * factored out so the routing spec can drive synthetic tables. */
   private[graph] def classBridgesOf(s: SparkSession, classSrc: DataFrame,
                                     bound: Int = -1): DataFrame = {
-    val classes = classSrc.select(col("brand"), col("size").cast("long").as("size"))
-      .distinct()
-    Quotient.probeRows(classes, math.min(
-        Quotient.resolve(bound, s, Quotient.maxClasses), Quotient.maxClasses(s))) match {
-      case Some(rows) =>
-        val cls = rows.map(r => (r.getString(0), r.getLong(1))).toSeq
-        val bySize = cls.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    Dispatch.probe(classSrc, bound) match {
+      case Some(classes) =>
+        val bySize = classes.keys.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
         // canonical up-edges under the widened rule
         val edges = for {
           (brand, sizes) <- bySize.toSeq
@@ -112,7 +108,8 @@ object Bridges {
         } yield (brand, a, a + delta)
         s.createDataFrame(bridgesOf(edges))
           .toDF("brand", "size_lo", "size_hi", "is_bridge")
-      case None => edgeBridgesDistributed(s, classes)
+      case None => edgeBridgesDistributed(s,
+        classSrc.select(col("brand"), col("size").cast("long").as("size")).distinct())
     }
   }
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * function of the (brand, size) equivalence class (two parts of one
   * class have identical predecessor classes), and the class domain is
   * bounded by |brands| × |size domain| at ANY fact scale. So the
-  * plan is: one distributed distinct to derive the class set, an
+  * plan is: one bounded class probe ([[Dispatch.probe]]), an
   * in-process longest-path DP over it (sizes ascend, so one pass in
   * size order is the topological sweep), and one broadcast join
   * stamping class depths back onto the fact-scaled part table. A
@@ -25,11 +25,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * iteration to a driver array and leaves facts with a single
   * broadcast-joined scan.
   *
-  * The class-domain bound is a ROUTING decision (round-10: the
-  * Dispatch discipline — round 9's `require()` THREW past it): the
-  * probe's collected class rows feed the driver DP directly; a class
-  * domain past the bound (size behaving like a continuous value, say)
-  * routes to [[classDepthDistributed]] — per-level relaxation over
+  * The class-domain bound is a ROUTING decision: the probed class
+  * map feeds the driver DP directly; a class domain past the bound
+  * (size behaving like a continuous value, say) routes to
+  * [[classDepthDistributed]] — per-level relaxation over
   * the distributed class graph — and still answers, with the depth
   * stamp becoming a shuffle join instead of a broadcast.
   *
@@ -65,19 +64,13 @@ object DagDepth {
     import s.implicits._
     val p = p0.select($"part".cast("long").as("part"), $"brand",
       $"size".cast("long").as("size"))
-    val classes = p.select($"brand", $"size").distinct()
-    // class-domain bound single-sourced from [[Quotient.maxClasses]]
-    // (round-13, verdict #6 — was a private 2^16 constant that could
-    // drift from the sibling routes' clamp)
-    Quotient.probeRows(classes, math.min(
-        Quotient.resolve(bound, s, Quotient.maxClasses), Quotient.maxClasses(s))) match {
-      case Some(rows) =>
-        val classDepth = classDepthDriver(s,
-          rows.map(r => (r.getString(0), r.getLong(1))))
-        p.join(broadcast(classDepth), Seq("brand", "size"))
+    Dispatch.probe(p, bound) match {
+      case Some(classes) =>
+        p.join(broadcast(classDepthDriver(s, classes.keys.toArray)), Seq("brand", "size"))
           .select($"part", $"depth")
       case None =>
-        p.join(classDepthDistributed(s, classes), Seq("brand", "size"))
+        p.join(classDepthDistributed(s, p.select($"brand", $"size").distinct()),
+            Seq("brand", "size"))
           .select($"part", $"depth")
     }
   }

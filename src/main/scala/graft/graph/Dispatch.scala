@@ -3,67 +3,52 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Automatic quotient dispatch (round-9 #1): ONE cheap bounded
-  * class-count probe routes each class-structured graph operator to
-  * its quotient fast path (in-process sweep of the dimension-bounded
-  * class graph + broadcast stamp) or to the general fact-level engine
-  * over the materialized blow-up edges — per call, as ENGINE
-  * behavior, not per-benchmark wiring.
-  *
-  * Before this layer the seven quotient keys hard-wired their fast
-  * path and [[Quotient.collectClasses]] THREW past MAX_CLASSES: an
-  * unstructured graph (every node its own class) did not get a slower
-  * answer, it got an exception. Now the bound is a routing decision:
+/** Automatic quotient dispatch: ONE cheap bounded class-count probe
+  * routes each class-structured graph operator to its quotient fast
+  * path (in-process sweep of the dimension-bounded class graph +
+  * broadcast stamp) or to the general fact-level engine over the
+  * materialized blow-up edges — per call, as engine behavior.
   *
   *   - probe: one partial-aggregable `(brand, size)` groupBy count
   *     with the limit INSIDE the collect (≤ bound + 1 rows ever reach
-  *     the driver) — fact-linear, map-side combinable, one job;
-  *   - within the bound, the collected class map feeds the quotient
-  *     path directly (the probe IS the quotient's class collect — no
-  *     second aggregation for ktruss/hits/ra/anf/jaccard, which
-  *     consume the plain map; MIS's per-round undecided collect and
-  *     PPR's seed-refined classes genuinely cannot reuse it, so for
-  *     those two the probe is the routing cost alone);
+  *     the driver) — fact-linear, map-side combinable, one job. It is
+  *     the only code that collects a class map, and its bound is
+  *     [[Quotient.classBound]]: the caller's, else
+  *     `spark.graft.quotient.maxClasses`, clamped to the latter;
+  *   - within the bound, the probed map IS the kernel's input: every
+  *     quotient kernel is a function of `(s, classes, parts, …)`, and
+  *     kernels that need a finer per-round collect (MIS's undecided
+  *     classes, PPR's seed-refined classes) size their guards from the
+  *     probed map, so a route the probe admitted never throws;
   *   - past the bound, the general engine runs over
   *     [[GraphBuilder.blowupEdges]] of the same vertex table — the
   *     same edit rule materialized as equi-joins, so the fallback is
   *     the measured distributed engine, not a failure.
   *
   * Both routes are bit-identical on any dimension-bounded blow-up
-  * (QuotientPropertySpec pins each pair; DispatchSpec pins the
-  * ROUTING: an unstructured graph past an injected bound falls back
-  * and still answers, and both routes agree wherever both run).
+  * (QuotientPropertySpec pins each kernel against its engine;
+  * DispatchSpec pins the ROUTING: an unstructured graph past an
+  * injected bound falls back and still answers, and both routes agree
+  * wherever both run).
   *
-  * Vertex-table contract: `(node LONG, brand STRING, size LONG)` —
-  * plus `is_seed BOOLEAN` for [[ppr]]. The per-operator edit rules
-  * match the shipped derived graphs: wide symmetric (±1, ±2) for
-  * MIS / k-truss / RA / node-Jaccard, narrow symmetric (±1) for
-  * PPR / ANF, directed size-up (+1) for HITS.
+  * Vertex-table contract, shared by every route and kernel:
+  * `(node LONG, brand STRING, size LONG)` — plus `is_seed BOOLEAN` for
+  * [[ppr]]. The per-operator edit rules match the shipped derived
+  * graphs: wide symmetric (±1, ±2) for MIS / k-truss / RA /
+  * node-Jaccard / Louvain / graphlets, narrow symmetric (±1) for
+  * PPR / ANF / CC / expansion, directed size-up (+1) for HITS.
   */
 object Dispatch {
 
   /** The probe: Some(class map) when the `(brand, size)` domain of
-    * `parts` is within `bound`, None past it. One bounded collect,
-    * shared guard discipline with [[Quotient.collectClasses]].
-    *
-    * The default (bound = −1) and the cap both resolve from
-    * [[Quotient.maxClasses]] — conf-tunable via
-    * `spark.graft.quotient.maxClasses`, default unchanged at
-    * [[Quotient.MAX_CLASSES]] (round-11, verdict #8). The cap exists
-    * because the quotient engines re-guard their own internal
-    * collects at the same limit, so routing a larger class graph to
-    * them would trade the documented fall-back for their throw;
-    * clamping keeps the contract — ANY bound routes, never raises —
-    * at the cost of a larger-than-cap request falling back earlier
-    * than asked. */
+    * `parts` is within [[Quotient.classBound]], None past it. */
   def probe(parts: DataFrame,
-            bound: Int = -1): Option[Map[(String, Long), Long]] = {
-    val max = Quotient.maxClasses(parts.sparkSession)
-    Quotient.probeClasses(
+            bound: Int = -1): Option[Map[(String, Long), Long]] =
+    Quotient.probeRows(
       parts.groupBy(col("brand"), col("size").cast("long").as("size"))
         .agg(count(lit(1)).as("cnt")),
-      math.min(Quotient.resolve(bound, parts.sparkSession, Quotient.maxClasses), max))
-  }
+      Quotient.classBound(parts.sparkSession, bound))
+      .map(_.map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap)
 
   /** The shipped part-table vertex set in the dispatch contract's
     * column shape. */
@@ -76,7 +61,7 @@ object Dispatch {
   def mis(s: SparkSession, parts: DataFrame, maxIter: Int = 25,
           bound: Int = -1): DataFrame =
     probe(parts, bound) match {
-      case Some(_) => Mis.quotientBlowup(s, parts, maxIter)
+      case Some(classes) => Mis.quotientBlowup(s, classes, parts, maxIter)
       case None => Mis.run(s, parts.select(col("node").as("id")),
         GraphBuilder.blowupEdges(parts, Seq(1L, 2L), symmetric = true), maxIter)
     }
@@ -94,7 +79,7 @@ object Dispatch {
   def hits(s: SparkSession, parts: DataFrame, iters: Int,
            bound: Int = -1): DataFrame =
     probe(parts, bound) match {
-      case Some(classes) => Hits.classBlowup(s, classes, parts, iters)
+      case Some(classes) => Hits.quotientBlowup(s, classes, parts, iters)
       case None => Hits.run(
         GraphBuilder.blowupEdges(parts, Seq(1L), symmetric = false), iters)
     }
@@ -104,24 +89,19 @@ object Dispatch {
   def resourceAllocation(s: SparkSession, parts: DataFrame, topK: Int,
                          bound: Int = -1): DataFrame =
     probe(parts, bound) match {
-      case Some(classes) => LinkPrediction.quotientWithClasses(s, classes,
-        parts.select(col("node").as("p_partkey"), col("brand").as("p_brand"),
-          col("size").as("p_size")), topK)
+      case Some(classes) => LinkPrediction.quotientBlowup(s, classes, parts, topK)
       case None => LinkPrediction.resourceAllocation(
         GraphBuilder.blowupEdges(parts, Seq(1L, 2L), symmetric = true), topK)
     }
 
   /** A20 personalized PageRank over the narrow (±1) blow-up of
     * `parts(node, brand, size, is_seed)`. The refined-quotient path
-    * splits each class by the seed flag (≤ 2× the probed count, its
-    * own guard inside), so the plain class probe is the right
-    * routing signal. */
+    * splits each class by the seed flag (≤ 2× the probed count), so
+    * the plain class probe is the right routing signal. */
   def ppr(s: SparkSession, parts: DataFrame, iters: Int,
           bound: Int = -1): DataFrame =
     probe(parts, bound) match {
-      case Some(_) => PersonalizedPageRank.quotientRefined(s,
-        parts.select(col("node").as("id"), col("brand"), col("size"),
-          col("is_seed")), iters)
+      case Some(classes) => PersonalizedPageRank.quotientRefined(s, classes, parts, iters)
       case None => PersonalizedPageRank.run(s,
         GraphBuilder.blowupEdges(parts, Seq(1L), symmetric = true),
         parts.filter(col("is_seed")).select(col("node")), iters)
@@ -131,21 +111,18 @@ object Dispatch {
     * blow-up of `parts`. */
   def anf(s: SparkSession, parts: DataFrame, sampleMod: Int, tol: Double,
           bound: Int = -1): DataFrame =
-    probe(parts, bound) match {
+    (probe(parts, bound) match {
       case Some(classes) => Anf.quotientBlowup(s, classes, parts, sampleMod, tol)
       case None => Anf.propagationReference(s,
-          GraphBuilder.blowupEdges(parts, Seq(1L), symmetric = true),
-          sampleMod, tol)
-        .select(col("node"), col("ball2"), col("anf_ok"))
-    }
+        GraphBuilder.blowupEdges(parts, Seq(1L), symmetric = true), sampleMod, tol)
+    }).select(col("node"), col("ball2"), col("anf_ok"))
 
   /** A13 neighbor-set Jaccard over the wide (±1, ±2) blow-up of
     * `parts`. */
   def jaccard(s: SparkSession, parts: DataFrame,
               bound: Int = -1): DataFrame =
     probe(parts, bound) match {
-      case Some(classes) => NodeSimilarity.quotientStamp(s, classes,
-        parts.select(col("node").as("id"), col("brand"), col("size")))
+      case Some(classes) => NodeSimilarity.quotientBlowup(s, classes, parts)
       case None => NodeSimilarity.jaccard(s,
         GraphBuilder.blowupEdges(parts, Seq(1L, 2L), symmetric = true))
     }
@@ -173,20 +150,16 @@ object Dispatch {
     * frontier-join engine runs over the materialized typed blow-up.
     * `parts` carries `(node, brand, size, ptype)`. */
   def expandTyped(s: SparkSession, parts: DataFrame, seeds: DataFrame, depth: Int,
-                  bound: Int = -1): DataFrame = {
-    val max = Quotient.maxClasses(parts.sparkSession)
-    val eff = math.min(Quotient.resolve(bound, parts.sparkSession,
-      Quotient.maxClasses), max)
+                  bound: Int = -1): DataFrame =
     Quotient.probeRows(
-      parts.groupBy(col("brand"), col("size").cast("long").as("size"), col("ptype"))
-        .agg(count(lit(1)).as("cnt")), eff)
+      parts.select(col("brand"), col("size").cast("long").as("size"), col("ptype")).distinct(),
+      Quotient.classBound(s, bound))
       .map(_.map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet) match {
       case Some(classes) => Bfs.quotientExpandTyped(s, classes, parts, seeds, depth)
       case None => Bfs.expand(
         GraphBuilder.typedBlowupEdges(parts).select(col("src"), col("dst")),
         seeds, depth)
     }
-  }
 
   /** The shipped part-table vertex set WITH the type attribute —
     * [[expandTyped]]'s contract shape. */

@@ -361,7 +361,7 @@ object GraphPack extends QueryPack {
     // pure class function, so each round is one vertex-set groupBy +
     // a guarded class collect + one broadcast-join filter — the
     // quadratic blown-up edge set is never materialized (see
-    // [[Mis.quotientPartEdit]]); the general edge-set engine
+    // [[Mis.quotientBlowup]]); the general edge-set engine
     // [[Mis.run]] is its spec-pinned bit-identical twin
     // (QuotientPropertySpec discipline, mis_round included).
     // ROUTED through [[Dispatch]] (round 9): the class-count probe
@@ -397,7 +397,7 @@ object GraphPack extends QueryPack {
     // triangles within the truss.
     // A26: the widened edit-graph is a (brand, size) class blow-up, so
     // the decomposition runs on the QUOTIENT (in-process weighted peel
-    // + one broadcast stamp join — see [[KTruss.quotientPartEdit]]);
+    // + one broadcast stamp join — see [[KTruss.quotientBlowup]]);
     // the general incremental-peel engine [[KTruss.run]] is its
     // spec-pinned distributed twin (QuotientPropertySpec discipline).
     // ROUTED through [[Dispatch]] (round 9).
@@ -535,7 +535,7 @@ object GraphPack extends QueryPack {
     // adjacency exclusion is a left-anti equi-join, contributions are
     // DECIMAL(28,12)-quantized before the exact sum, and the global
     // top-k is Spark's TakeOrdered (map-side k, never a full sort).
-    // QUOTIENT fast path (see LinkPrediction.resourceAllocationQuotient):
+    // QUOTIENT fast path (see LinkPrediction.quotientBlowup):
     // on the widened edit rule the RA score is a pure (brand, size)
     // class function, and the fact-level wedge join's Σdeg² work
     // grows QUADRATICALLY with SF (class sizes grow with the data) —
@@ -826,7 +826,7 @@ object GraphPack extends QueryPack {
     // V-sized per-class register merge + a bounded class-ball merge
     // reproduce the 2-round propagation's registers bit-for-bit
     // (max-merge associativity) AND the exact ball2 anchor (Σ member
-    // counts) — see [[Anf.quotientPartEdit]]. [[Anf.run]] stays the
+    // counts) — see [[Anf.quotientBlowup]]. [[Anf.run]] stays the
     // general engine, spec-pinned and ladder-measured.
     // ROUTED through [[Dispatch]] (round 9).
     "g_anf" -> { (s, d) =>

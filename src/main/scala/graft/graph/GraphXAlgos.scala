@@ -39,14 +39,4 @@ object GraphXAlgos {
       .partitionBy(PartitionStrategy.RandomVertexCut)
       .triangleCount().vertices.toDF("id", "n_triangles")
   }
-
-  /** Fixed-iteration PageRank via GraphX (rank₀ = 1,
-    * rank = 0.15 + 0.85·Σ rank_u/outdeg_u). Spec-checked against the
-    * deterministic DataFrame implementation in [[PageRank]]; the
-    * verified query uses [[PageRank]] because GraphX's double message
-    * sum is partial-order dependent and the oracle compare is exact. */
-  def pageRank(s: SparkSession, vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    import s.implicits._
-    graphOf(vertices, edges).staticPageRank(iters).vertices.toDF("id", "rank")
-  }
 }

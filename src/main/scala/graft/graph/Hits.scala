@@ -33,20 +33,11 @@ object Hits {
 
   import Quotient.q12
 
-  /** The g_hits quotient fast path end-to-end: guarded class collect,
+  /** QUOTIENT fast path over the directed size-up (+1) blow-up of a
+    * `(node, brand, size)` vertex table with its probed class map:
     * size-up class edges, [[quotientScores]], one broadcast-join
-    * stamp onto parts. Lives here (not inline in the pack) so the
-    * spec and the query pin ONE implementation. */
-  def classHits(s: org.apache.spark.sql.SparkSession, d: String, iters: Int): DataFrame =
-    classBlowup(s, Quotient.collectClasses(s, d),
-      graft.Tables.part(s, d)
-        .select(col("p_partkey").as("node"), col("p_brand").as("brand"),
-          col("p_size").cast("long").as("size")), iters)
-
-  /** The class-level rounds + stamp over any class map and matching
-    * `(node, brand, size)` vertex table — factored out so [[Dispatch]]
-    * can reuse the probe's class collect. */
-  private[graph] def classBlowup(s: org.apache.spark.sql.SparkSession,
+    * stamp onto `parts`. */
+  private[graph] def quotientBlowup(s: org.apache.spark.sql.SparkSession,
       sizes: Map[(String, Long), Long], parts: DataFrame, iters: Int): DataFrame = {
     val edges = sizes.keys.toSeq
       .filter { case (b, sz) => sizes.contains((b, sz + 1)) }

@@ -184,36 +184,24 @@ object KTruss {
     alive.select($"a", $"b", $"support")
   }
 
-  /** QUOTIENT fast path for the widened (brand, size ± 1-or-2) part
-    * edit-graph — the A29/A30/A33 pattern applied to truss peeling:
-    * that graph is a pure class BLOW-UP (every part of class
-    * c = (brand, size) has the identical class neighborhood, and no
-    * within-class edges exist), so the support of a fact edge
-    * u ∈ c₁, v ∈ c₂ is a pure class function —
-    * Σ_{c₃ adjacent to both} |c₃| (u, v themselves never lie in a
-    * qualifying c₃: |Δsize| = 0 is not an edit rule) — and all fact
-    * edges of one class-pair peel TOGETHER. The whole decomposition
-    * therefore runs in-process over the dimension-bounded class graph
-    * (weighted support peel, ≤ |classes|·4 / 2 class edges), and ONE
-    * broadcast join + one (brand, size)-keyed equi-join stamp the
-    * surviving class-pair supports onto fact pairs. What the
-    * fact-scale path spends on wedge enumeration + 3-per-triangle
-    * support aggregation (≈5M triangles at sf0.1) becomes a driver
-    * loop over a few thousand class edges; spec-pinned bit-identical
-    * to [[run]] on the same graph (QuotientPropertySpec discipline).
-    */
-  def quotientPartEdit(s: SparkSession, sfDir: String, k: Int): DataFrame = {
-    import s.implicits._
-    val parts = graft.Tables.part(s, sfDir)
-      .select($"p_partkey".cast("long").as("node"), $"p_brand".as("brand"),
-        $"p_size".cast("long").as("size"))
-    quotientBlowup(s, Quotient.collectClasses(s, sfDir), parts, k)
-  }
-
-  /** The in-process weighted peel + stamp over any class map and
-    * matching `(node, brand, size)` vertex table — factored out so
-    * [[Dispatch]] can reuse the probe's class collect and the specs
-    * can drive synthetic graphs through it. */
+  /** QUOTIENT fast path: the in-process weighted peel + stamp over a
+    * probed class map and its matching `(node, brand, size)` vertex
+    * table. The widened (brand, size ± 1-or-2) edit-graph is a pure
+    * class BLOW-UP (every node of class c = (brand, size) has the
+    * identical class neighborhood, and no within-class edges exist),
+    * so the support of a fact edge u ∈ c₁, v ∈ c₂ is a pure class
+    * function — Σ_{c₃ adjacent to both} |c₃| (u, v themselves never
+    * lie in a qualifying c₃: |Δsize| = 0 is not an edit rule) — and
+    * all fact edges of one class-pair peel TOGETHER. The whole
+    * decomposition therefore runs in-process over the
+    * dimension-bounded class graph (weighted support peel,
+    * ≤ |classes|·4 / 2 class edges), and ONE broadcast join + one
+    * (brand, size)-keyed equi-join stamp the surviving class-pair
+    * supports onto fact pairs. What the fact-scale path spends on
+    * wedge enumeration + 3-per-triangle support aggregation (≈5M
+    * triangles at sf0.1) becomes a driver loop over a few thousand
+    * class edges; bit-identical to [[run]] on the same graph
+    * (QuotientPropertySpec, RoundSevenOpsSpec). */
   private[graph] def quotientBlowup(s: SparkSession,
       classes: Map[(String, Long), Long], parts: DataFrame, k: Int): DataFrame = {
     import s.implicits._

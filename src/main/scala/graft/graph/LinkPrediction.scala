@@ -27,34 +27,26 @@ import org.apache.spark.sql.functions._
 object LinkPrediction {
   import Quotient.q12
 
-  /** QUOTIENT fast path for the widened (±1, ±2) edit rule: the RA
-    * score of a pair (u, v) is a pure function of their (brand, size)
-    * CLASSES — every witness class contributes size(w)·Dec(1/deg(w)),
-    * deg(w) itself a class function — so per-pair scores come from an
-    * in-process sweep of the dimension-bounded class graph, and only
-    * the top-tier candidate class-pairs ever materialize part pairs.
-    * This removes the fact-level plan's scale defect: class sizes
-    * grow with SF, so the wedge join's Σdeg² work grows
-    * QUADRATICALLY with the data, while the quotient's work is
-    * constant in SF (classes are domain-bounded) plus one
-    * TakeOrdered over the ≥topK candidate pairs. Arithmetic is the
-    * fact plan's exactly: summing size(w) copies of one quantized
-    * decimal is integer multiplication; the BigDecimal sum equals
-    * Spark's exact DECIMAL(38,12) accumulation digit-for-digit.
+  /** QUOTIENT fast path over the widened (±1, ±2) blow-up of a
+    * `(node, brand, size)` vertex table with its probed class map:
+    * the RA score of a pair (u, v) is a pure function of their
+    * (brand, size) CLASSES — every witness class contributes
+    * size(w)·Dec(1/deg(w)), deg(w) itself a class function — so
+    * per-pair scores come from an in-process sweep of the
+    * dimension-bounded class graph, and only the top-tier candidate
+    * class-pairs ever materialize part pairs. This removes the
+    * fact-level plan's scale defect: class sizes grow with SF, so the
+    * wedge join's Σdeg² work grows QUADRATICALLY with the data, while
+    * the quotient's work is constant in SF (classes are
+    * domain-bounded) plus one TakeOrdered over the ≥topK candidate
+    * pairs. Arithmetic is the fact plan's exactly: summing size(w)
+    * copies of one quantized decimal is integer multiplication; the
+    * BigDecimal sum equals Spark's exact DECIMAL(38,12) accumulation
+    * digit-for-digit.
     *
-    * @param parts (p_partkey, p_brand, p_size)-shaped DataFrame.
     * @return same schema/semantics as [[resourceAllocation]] on the
     *         widened symmetric edit graph of `parts`. */
-  def resourceAllocationQuotient(s: org.apache.spark.sql.SparkSession,
-      parts: DataFrame, topK: Int): DataFrame =
-    quotientWithClasses(s, Quotient.collectClasses(parts
-      .groupBy(col("p_brand").as("brand"), col("p_size").cast("long").as("size"))
-      .agg(count(lit(1)).as("cnt"))), parts, topK)
-
-  /** The class sweep + candidate-tier stamp over a precomputed class
-    * map — factored out so [[Dispatch]] can reuse the probe's class
-    * collect instead of aggregating twice. */
-  private[graph] def quotientWithClasses(s: org.apache.spark.sql.SparkSession,
+  private[graph] def quotientBlowup(s: org.apache.spark.sql.SparkSession,
       sizes: Map[(String, Long), Long], parts: DataFrame, topK: Int): DataFrame = {
     import s.implicits._
     type C = (String, Long)
@@ -107,10 +99,10 @@ object LinkPrediction {
     }
     val candDF = s.createDataFrame(cand)
       .toDF("ba", "sa", "bb", "sb", "n_common", "score")
-    val pa = parts.select(col("p_partkey").cast("long").as("u"),
-      col("p_brand").as("ba"), col("p_size").cast("long").as("sa"))
-    val pb = parts.select(col("p_partkey").cast("long").as("v"),
-      col("p_brand").as("bb"), col("p_size").cast("long").as("sb"))
+    val pa = parts.select(col("node").cast("long").as("u"),
+      col("brand").as("ba"), col("size").cast("long").as("sa"))
+    val pb = parts.select(col("node").cast("long").as("v"),
+      col("brand").as("bb"), col("size").cast("long").as("sb"))
     pa.join(broadcast(candDF), Seq("ba", "sa"))
       .join(pb, Seq("bb", "sb"))
       .filter(col("u") < col("v"))

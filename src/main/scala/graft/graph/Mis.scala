@@ -112,13 +112,13 @@ object Mis {
       .select($"node", $"mis_round".isNotNull.as("in_mis"), $"mis_round")
   }
 
-  /** QUOTIENT fast path for the widened (brand, size ± 1-or-2) part
-    * edit-graph — the KTruss.quotientPartEdit pattern applied to
-    * Luby's game. Unlike the truss (where support is a pure class
-    * function), Luby's per-node md5 priorities BREAK within-class
-    * symmetry, so the MIS itself is not a class function — but the
-    * blow-up structure still collapses every edge-set computation in
-    * [[run]] to a class-level one:
+  /** QUOTIENT fast path: Luby over any pure (brand, size ± 1-or-2)
+    * blow-up vertex table `(node, brand, size)` with its probed class
+    * map. Unlike the truss (where support is a pure class function),
+    * Luby's per-node md5 priorities BREAK within-class symmetry, so
+    * the MIS itself is not a class function — but the blow-up
+    * structure still collapses every edge-set computation in [[run]]
+    * to a class-level one:
     *
     *   - the graph is a pure class blow-up (every node of class
     *     c = (brand, size) is adjacent to EVERY node of every
@@ -139,30 +139,20 @@ object Mis {
     *     class had a winner, ∅ otherwise.
     *
     * So each round is ONE partial-aggregable (brand, size) groupBy
-    * over the UNDECIDED VERTEX SET (min-hash + count), one guarded
-    * ≤ MAX_CLASSES collect, driver-side threshold/removal computation
-    * over the dimension-bounded class graph, and one broadcast-join
-    * filter — the quadratic blown-up edge set (the thing [[run]]
-    * groupBys and semi-join-prunes every round) is NEVER
-    * materialized. Round-faithful and hash-faithful, hence
+    * over the UNDECIDED VERTEX SET (min-hash per class), one bounded
+    * collect (the undecided classes are a subset of the probed ones,
+    * so `classes.size` bounds it), driver-side threshold/removal
+    * computation over the dimension-bounded class graph, and one
+    * broadcast-join filter — the quadratic blown-up edge set (the
+    * thing [[run]] groupBys and semi-join-prunes every round) is
+    * NEVER materialized. Round-faithful and hash-faithful, hence
     * bit-identical to [[run]] on the same graph including
-    * `mis_round` (spec-pinned: QuotientPropertySpec +
-    * RoundEightOpsSpec). The convergence probe rides the same
-    * collect; non-convergence throws ([[run]]'s contract).
-    */
-  def quotientPartEdit(s: SparkSession, sfDir: String, maxIter: Int = 25): DataFrame = {
-    import s.implicits._
-    val parts = graft.Tables.part(s, sfDir)
-      .select($"p_partkey".cast("long").as("node"), $"p_brand".as("brand"),
-        $"p_size".cast("long").as("size"))
-    quotientBlowup(s, parts, maxIter)
-  }
-
-  /** Class-level Luby over any pure (brand, size ± 1-or-2) blow-up
-    * vertex table `(node, brand, size)` — factored out so the
-    * property spec can drive it over random class graphs. */
-  private[graph] def quotientBlowup(s: SparkSession, parts: DataFrame,
-                                    maxIter: Int): DataFrame = {
+    * `mis_round` (QuotientPropertySpec, RoundEightOpsSpec). The
+    * convergence probe rides the same collect; non-convergence throws
+    * ([[run]]'s contract). */
+  private[graph] def quotientBlowup(s: SparkSession,
+      classes: Map[(String, Long), Long], parts: DataFrame,
+      maxIter: Int): DataFrame = {
     import s.implicits._
     val verts = parts.localCheckpoint(false)
     var u = verts.localCheckpoint()
@@ -182,20 +172,20 @@ object Mis {
     }
     while (undecided) {
       // class state of the undecided set: min round-(iter+1) hash per
-      // class. The limit sits INSIDE the collect (Quotient
-      // .collectClasses discipline) — never more than the bound + 1
-      // rows on the driver. Checking BEFORE bumping iter keeps the
-      // round accounting identical to [[run]]: run does work rounds
-      // 1..maxIter and succeeds iff the undecided set is empty after
-      // any of them — a game needing exactly maxIter rounds must
-      // converge here too, not spuriously throw.
+      // class. The limit sits INSIDE the collect — never more than
+      // the probed class count + 1 rows on the driver. Checking
+      // BEFORE bumping iter keeps the round accounting identical to
+      // [[run]]: run does work rounds 1..maxIter and succeeds iff the
+      // undecided set is empty after any of them — a game needing
+      // exactly maxIter rounds must converge here too, not spuriously
+      // throw.
       val r = iter + 1
       val h = md5(concat(lit(s"${r}_"), $"node".cast("string")))
       val cls = u.groupBy($"brand", $"size")
         .agg(min(h).as("mh"))
-        .limit(Quotient.MAX_CLASSES + 1).collect()
-      if (cls.length > Quotient.MAX_CLASSES) freeAndThrow(
-        s"class graph exceeds the ${Quotient.MAX_CLASSES} domain bound — not a dimension-bounded quotient")
+        .limit(classes.size + 1).collect()
+      if (cls.length > classes.size) freeAndThrow(
+        s"undecided vertices span more than the ${classes.size} probed classes")
       if (cls.isEmpty) undecided = false
       else {
         iter += 1

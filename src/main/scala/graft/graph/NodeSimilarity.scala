@@ -118,11 +118,12 @@ object NodeSimilarity {
       .select($"a".as("node_a"), $"b".as("node_b"), $"n_common", $"jaccard")
   }
 
-  /** QUOTIENT fast path for the widened (brand, size ± 1-or-2) part
-    * edit-graph — the KTruss/Mis pattern applied to neighbor-set
-    * similarity. In a pure class blow-up every node of class
-    * c = (brand, size) has the IDENTICAL neighbor set N(c) = the
-    * union of adjacent classes' members, so for u ∈ c₁, v ∈ c₂:
+  /** QUOTIENT fast path: neighbor-set Jaccard over the widened
+    * (brand, size ± 1-or-2) blow-up of a `(node, brand, size)` vertex
+    * table with its probed class map. In a pure class blow-up every
+    * node of class c = (brand, size) has the IDENTICAL neighbor set
+    * N(c) = the union of adjacent classes' members, so for
+    * u ∈ c₁, v ∈ c₂:
     *
     *   |N(u) ∩ N(v)| = Σ_{c₃ adjacent to both} |c₃|   (a pure
     *   class-pair function; c₁ = c₂ gives n_common = deg — two
@@ -131,32 +132,20 @@ object NodeSimilarity {
     *
     * Only same-brand class pairs within size distance ≤ 4 can share a
     * neighbor, so the class-pair table is domain-bounded (≤ 5 rows
-    * per class) and computed in-process off the guarded class
-    * collect; ONE broadcast stamp join against part × part emits the
-    * fact pairs in the same canonical (node_a < node_b) order, each
-    * exactly once (cross-class pairs via least/greatest over disjoint
-    * classes, within-class pairs via uid < vid). The output is
-    * inherently quadratic in class membership — what the fast path
-    * removes is the WEDGE ENUMERATION (Σ deg² rows, 27× the output at
-    * the sf0.3x rung: 120 s → stamp cost). The Jaccard division is
-    * the same single IEEE double division of exact integers the fact
-    * path performs, so rows are bit-identical (QuotientPropertySpec +
-    * RoundEightOpsSpec vs [[jaccard]]).
-    */
-  def jaccardQuotientPartEdit(s: SparkSession, sfDir: String): DataFrame = {
-    import s.implicits._
-    val classes = Quotient.collectClasses(s, sfDir)
-    quotientStamp(s, classes,
-      graft.Tables.part(s, sfDir).select(col("p_partkey").cast("long").as("id"),
-        col("p_brand").as("brand"), col("p_size").cast("long").as("size")))
-  }
-
-  /** The class-pair computation + stamp, factored over any class map
-    * and matching (id, brand, size) vertex table so the property spec
-    * can drive random class graphs through it. */
-  private[graph] def quotientStamp(s: SparkSession,
-                                   classes: Map[(String, Long), Long],
-                                   parts: DataFrame): DataFrame = {
+    * per class) and computed in-process off the probed map; ONE
+    * broadcast stamp join against part × part emits the fact pairs in
+    * the same canonical (node_a < node_b) order, each exactly once
+    * (cross-class pairs via least/greatest over disjoint classes,
+    * within-class pairs via uid < vid). The output is inherently
+    * quadratic in class membership — what the fast path removes is
+    * the WEDGE ENUMERATION (Σ deg² rows, 27× the output at the sf0.3x
+    * rung: 120 s → stamp cost). The Jaccard division is the same
+    * single IEEE double division of exact integers the fact path
+    * performs, so rows are bit-identical (QuotientPropertySpec +
+    * RoundEightOpsSpec vs [[jaccard]]). */
+  private[graph] def quotientBlowup(s: SparkSession,
+                                    classes: Map[(String, Long), Long],
+                                    parts: DataFrame): DataFrame = {
     import s.implicits._
     val cnt = classes.withDefaultValue(0L)
     def nbrSum(b: String, sz: Long): Long =
@@ -181,8 +170,8 @@ object NodeSimilarity {
       StructField("brand", StringType), StructField("slo", LongType),
       StructField("shi", LongType), StructField("n_common", LongType),
       StructField("jaccard", DoubleType))))
-    val p = parts.select($"id".as("uid"), $"brand".as("ubrand"), $"size".as("usize"))
-    val q = parts.select($"id".as("vid"), $"brand".as("vbrand"), $"size".as("vsize"))
+    val p = parts.select($"node".as("uid"), $"brand".as("ubrand"), $"size".as("usize"))
+    val q = parts.select($"node".as("vid"), $"brand".as("vbrand"), $"size".as("vsize"))
     val cross = p
       .join(broadcast(pairDF.filter($"slo" < $"shi")),
         $"ubrand" === $"brand" && $"usize" === $"slo")

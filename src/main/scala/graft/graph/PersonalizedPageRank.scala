@@ -187,11 +187,11 @@ object PersonalizedPageRank {
   }
 
   /** REFINED-QUOTIENT fast path for the bidirectional (brand,
-    * size ± 1) part edit-graph — the KTruss/Mis/Jaccard pattern with
-    * one twist: the seed set breaks plain class symmetry (two nodes
-    * of one class can differ in teleport), but REFINING each class by
-    * the seed flag restores it. Within a refined class
-    * c = (brand, size, is_seed):
+    * size ± 1) blow-up of a `(node, brand, size, is_seed)` vertex
+    * table with its probed class map. The seed set breaks plain class
+    * symmetry (two nodes of one class can differ in teleport), but
+    * REFINING each class by the seed flag restores it. Within a
+    * refined class c = (brand, size, is_seed):
     *
     *   - teleport is constant (base if is_seed else 0);
     *   - outdeg is constant — Σ |(brand, size ± 1)|, a function of
@@ -204,7 +204,7 @@ object PersonalizedPageRank {
     * exactly: n identical DECIMAL(28,12) contributions sum to
     * contribution × n (integer BigDecimal multiply — exact). The
     * whole iteration runs in-process over ≤ 2·|classes| entries off
-    * ONE guarded groupBy collect (the seed COUNTS ride the groupBy;
+    * ONE bounded groupBy collect (the seed COUNTS ride the groupBy;
     * seed IDS are never collected — at fact scale the seed set is
     * fact-sized, only its per-class histogram is domain-bounded), and
     * one broadcast stamp join emits (node, rank). Bit-identical to
@@ -212,33 +212,23 @@ object PersonalizedPageRank {
     * per contribution, same once-quantized teleport/α row, same
     * exact decimal sums, same final 0.85 · sum.doubleValue
     * (QuotientPropertySpec on random class graphs with RANDOM seed
-    * flags + RoundEightOpsSpec on both shipped SFs).
-    */
-  def quotientPartEdit(s: SparkSession, sfDir: String, iters: Int): DataFrame = {
-    import s.implicits._
-    quotientRefined(s, graft.Tables.part(s, sfDir)
-      .select($"p_partkey".cast("long").as("id"), $"p_brand".as("brand"),
-        $"p_size".cast("long").as("size"),
-        ($"p_partkey" % 100 === 0).as("is_seed")), iters)
-  }
-
-  /** The refined-class iteration + stamp over any
-    * `(id, brand, size, is_seed)` vertex table of the ±1 blow-up —
-    * factored out so the property spec can drive random class graphs
-    * with random seed flags through it. */
-  private[graph] def quotientRefined(s: SparkSession, parts: DataFrame,
-                                     iters: Int): DataFrame = {
+    * flags + RoundEightOpsSpec on both shipped SFs). */
+  private[graph] def quotientRefined(s: SparkSession,
+      classes: Map[(String, Long), Long], parts: DataFrame,
+      iters: Int): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{BooleanType, Decimal, DoubleType, LongType, StringType, StructField, StructType}
     import scala.collection.mutable
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.functions.{broadcast, col, count, lit}
+    // each probed class splits into at most two refined ones
+    val bound = 2 * classes.size
     val cls: Map[(String, Long, Boolean), Long] = {
       val rows = parts.groupBy(col("brand"), col("size"), col("is_seed"))
         .agg(count(lit(1)).as("cnt"))
-        .limit(2 * Quotient.MAX_CLASSES + 1).collect()
-      require(rows.length <= 2 * Quotient.MAX_CLASSES,
-        s"refined class graph exceeds the ${2 * Quotient.MAX_CLASSES} domain bound")
+        .limit(bound + 1).collect()
+      require(rows.length <= bound,
+        s"refined class graph exceeds twice the ${classes.size} probed classes")
       rows.map(r => (r.getString(0), r.getLong(1), r.getBoolean(2)) -> r.getLong(3)).toMap
     }
     val cnt = cls.withDefaultValue(0L)
@@ -285,6 +275,6 @@ object PersonalizedPageRank {
       StructField("rank", DoubleType)))
     parts.join(broadcast(s.createDataFrame(rows.asJava, schema)),
         Seq("brand", "size", "is_seed"))
-      .select(col("id").as("node"), col("rank"))
+      .select(col("node"), col("rank"))
   }
 }

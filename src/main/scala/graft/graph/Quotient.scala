@@ -1,35 +1,30 @@
 package graft.graph
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Shared scaffolding for the QUOTIENT fast paths (A29/A30/A31/A33):
-  * operators whose result is a pure function of the dimension-bounded
-  * (brand, size) class graph collect that graph — guarded — and run
-  * in-process, then stamp results back onto the fact table. One
-  * domain bound, one guarded collect, one quantizer, so the fast
-  * paths cannot drift apart. */
+/** Shared scaffolding for the QUOTIENT fast paths: operators whose
+  * result is a pure function of the dimension-bounded (brand, size)
+  * class graph run in-process over that graph, then stamp results
+  * back onto the fact table.
+  *
+  * The class map itself is collected in ONE place, [[Dispatch.probe]]:
+  * a routed call probes once, and the probed map is both the routing
+  * decision and the kernel's input. This object holds what the probe
+  * and the row-probe routes share — the two conf-tunable bounds, the
+  * one resolution of a class bound ([[classBound]]), the bounded
+  * collect ([[probeRows]]) and the decimal quantizer. */
 object Quotient {
 
-  /** Domain bound for any collected class graph (|brands|·|sizes|
+  /** Default domain bound for any collected class graph (|brands|·|sizes|
     * is attribute-domain-bounded regardless of fact count). */
   val MAX_CLASSES = 100000
 
-  /** Conf keys for the routing bounds (round-11, verdict #8): a
-    * deployment can move each in-process/distributed crossover
-    * without a rebuild — defaults unchanged. `maxClasses` governs
-    * every class-domain probe and the quotient engines' own guarded
-    * collects; `probeBound` governs the row-probe sweeps (bounded
-    * BFS spine, Brandes σ). Explicit `bound` arguments still win —
-    * the conf only replaces the DEFAULT.
-    *
-    * These two are THE routing bounds — every probe-routed operator
-    * resolves its crossover through [[maxClasses]]/[[probeBound]]
-    * (round-13, verdict #6: eccentricity/betweenness/label-prop/
-    * PageRank/PPR's in-process variants and DagDepth's class DP each
-    * carried a private copy; a drive-by edit to one silently changed
-    * which engine answered at a given scale). DispatchSpec pins both
-    * values AND each operator's route at the shipped SFs. */
+  /** Conf keys for the routing bounds: a deployment can move each
+    * in-process/distributed crossover without a rebuild. `maxClasses`
+    * governs every class-domain probe; `probeBound` governs the
+    * row-probe sweeps (bounded BFS spine, Brandes σ, the dimension-
+    * bounded PageRank/PPR/label-propagation variants). DispatchSpec
+    * pins both values AND each operator's route at the shipped SFs. */
   val MAX_CLASSES_KEY = "spark.graft.quotient.maxClasses"
   val PROBE_BOUND_KEY = "spark.graft.dispatch.probeBound"
 
@@ -50,6 +45,14 @@ object Quotient {
   private[graph] def resolve(bound: Int, s: SparkSession, default: SparkSession => Int): Int =
     if (bound < 0) default(s) else bound
 
+  /** THE class bound every class-domain route probes at: the caller's
+    * `bound`, else the conf default, clamped to [[maxClasses]]. The
+    * conf is the deployment's cap on how many class rows one collect
+    * may bring to the driver, so an explicit larger request falls back
+    * earlier than asked rather than past the cap. */
+  private[graph] def classBound(s: SparkSession, bound: Int): Int =
+    math.min(resolve(bound, s, maxClasses), maxClasses(s))
+
   /** The engine-wide message quantizer (DECIMAL(28,12) HALF_UP —
     * Spark's double→decimal cast semantics), used wherever an
     * in-process fast path must replicate a distributed decimal
@@ -57,45 +60,11 @@ object Quotient {
   def q12(d: Double): BigDecimal =
     BigDecimal.decimal(d).setScale(12, BigDecimal.RoundingMode.HALF_UP)
 
-  /** Guarded collect of the part table's (brand, size) classes with
-    * member counts: the limit sits INSIDE the collect (never
-    * materializing more than the bound + 1 rows on the driver), and
-    * a caller lying about boundedness fails loudly. */
-  def collectClasses(s: SparkSession, d: String): Map[(String, Long), Long] = {
-    import s.implicits._
-    collectClasses(graft.Tables.part(s, d)
-      .groupBy($"p_brand", $"p_size".cast("long").as("size"))
-      .agg(count(lit(1)).as("cnt")))
-  }
-
-  /** The same guard over a caller-supplied class-count aggregate —
-    * columns (String class attr, Long class attr, Long member count)
-    * in that order. Serves the fast paths that run off an arbitrary
-    * vertex table (Anf's property-spec blow-ups, LinkPrediction's
-    * widened graph) so the guard discipline stays single-sourced. */
-  def collectClasses(classCounts: org.apache.spark.sql.DataFrame): Map[(String, Long), Long] = {
-    val bound = maxClasses(classCounts.sparkSession)
-    probeClasses(classCounts, bound).getOrElse(throw new IllegalArgumentException(
-      s"requirement failed: class graph exceeds the $bound domain bound — not a dimension-bounded quotient"))
-  }
-
-  /** The NON-THROWING form of the guard — [[Dispatch]]'s probe. Same
-    * bounded collect (the limit INSIDE, ≤ bound + 1 rows ever reach
-    * the driver); a class graph past the bound answers None (route to
-    * the general engine) where [[collectClasses]] throws (a caller
-    * that HARD-ASSERTED boundedness was lying). */
-  def probeClasses(classCounts: org.apache.spark.sql.DataFrame,
-                   bound: Int): Option[Map[(String, Long), Long]] =
-    probeRows(classCounts, bound)
-      .map(_.map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap)
-
   /** The generic bounded probe every routed operator shares: Some(the
     * collected rows) when `df` is within `bound`, None past it. The
     * limit sits INSIDE the collect — at most bound + 1 rows ever
     * reach the driver, whatever the input size — and the rows ARE the
-    * fast path's input, so routing costs no second job. Single-sourced
-    * here so the in-process fast paths (class maps, bounded BFS edge
-    * lists, σ sweeps) cannot drift apart in guard discipline. */
+    * fast path's input, so routing costs no second job. */
   def probeRows(df: org.apache.spark.sql.DataFrame,
                 bound: Int): Option[Array[org.apache.spark.sql.Row]] = {
     val rows = df.limit(bound + 1).collect()

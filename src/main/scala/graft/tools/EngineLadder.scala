@@ -46,25 +46,32 @@ object EngineLadder {
       .select(col("p_partkey").as("id"))
     def wide = GraphBuilder.partEdgesWide(s, sfDir)
     def up = GraphBuilder.partEdges(s, sfDir)
+    // the *_quotient rows call the routed operators with an explicit
+    // bound at the session's class cap (the largest bound the probe
+    // honours): a row leaves the quotient route only when the class
+    // graph itself exceeds that cap
+    def verts = Dispatch.partVertices(s, sfDir)
+    val quotient = Quotient.maxClasses(s)
 
     val allEngines: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "ktruss_run" -> (() => KTruss.run(s, wide, k = 4)),
-      "ktruss_quotient" -> (() => KTruss.quotientPartEdit(s, sfDir, k = 4)),
+      "ktruss_quotient" -> (() => Dispatch.ktruss(s, verts, k = 4, bound = quotient)),
       "mis_run" -> (() => Mis.run(s, parts, wide)),
-      "mis_quotient" -> (() => Mis.quotientPartEdit(s, sfDir)),
+      "mis_quotient" -> (() => Dispatch.mis(s, verts, bound = quotient)),
       "hits_run" -> (() => Hits.run(up, iters = 8)),
-      "hits_quotient" -> (() => Hits.classHits(s, sfDir, iters = 8)),
+      "hits_quotient" -> (() => Dispatch.hits(s, verts, iters = 8, bound = quotient)),
       "ra_run" -> (() => LinkPrediction.resourceAllocation(wide, topK = 100)),
       "jaccard_run" -> (() => NodeSimilarity.jaccard(s, wide)),
-      "jaccard_quotient" -> (() => NodeSimilarity.jaccardQuotientPartEdit(s, sfDir)),
+      "jaccard_quotient" -> (() => Dispatch.jaccard(s, verts, bound = quotient)),
       "ppr_run" -> (() => {
         val seeds = graft.Tables.part(s, sfDir)
           .filter(col("p_partkey") % 100 === 0).select(col("p_partkey").as("node"))
         PersonalizedPageRank.run(s, GraphBuilder.partEdges(s, sfDir), seeds,
           GraphPack.PPR_ITERS)
       }),
-      "ppr_quotient" -> (() =>
-        PersonalizedPageRank.quotientPartEdit(s, sfDir, GraphPack.PPR_ITERS)),
+      "ppr_quotient" -> (() => Dispatch.ppr(s,
+        verts.withColumn("is_seed", col("node") % 100 === 0), GraphPack.PPR_ITERS,
+        bound = quotient)),
       // the g_anf reference composition (2-round propagation + exact
       // wedge-join 2-ball anchor), single-sourced in Anf so the
       // ladder measures exactly what the quotient replaced — surface
@@ -72,11 +79,10 @@ object EngineLadder {
       "anf_run" -> (() => Anf.propagationReference(s,
         GraphBuilder.partEdges(s, sfDir), GraphPack.ANF_SAMPLE, GraphPack.ANF_TOL)
         .select(col("node"), col("ball2"), col("anf_ok"))),
-      "anf_quotient" -> (() =>
-        Anf.quotientPartEdit(s, sfDir, GraphPack.ANF_SAMPLE, GraphPack.ANF_TOL)),
-      "ra_quotient" -> (() => LinkPrediction.resourceAllocationQuotient(s,
-        graft.Tables.part(s, sfDir)
-          .select(col("p_partkey"), col("p_brand"), col("p_size")), 100)),
+      "anf_quotient" -> (() => Dispatch.anf(s, verts, GraphPack.ANF_SAMPLE,
+        GraphPack.ANF_TOL, bound = quotient)),
+      "ra_quotient" -> (() => Dispatch.resourceAllocation(s, verts, topK = 100,
+        bound = quotient)),
       // round-10 routed ops: fast (in-process sweep) vs FORCED
       // fallback (bound=1 → the distributed general engine) on the
       // same inputs — the quotient-twin story for the four operators

@@ -18,7 +18,7 @@ class RoundEightOpsSpec extends SparkSpec {
       val dist = asSet(graph.Mis.run(spark,
         Tables.part(spark, d).select($"p_partkey".as("id")),
         graph.GraphBuilder.partEdgesWide(spark, d)))
-      val fast = asSet(graph.Mis.quotientPartEdit(spark, d))
+      val fast = asSet(graph.Dispatch.mis(spark, graph.Dispatch.partVertices(spark, d)))
       assert(fast === dist, s"quotient diverges from the edge-set loop at $d")
       // non-vacuous: a real MIS on this graph has members AND
       // non-members, and takes more than one round
@@ -33,7 +33,7 @@ class RoundEightOpsSpec extends SparkSpec {
     for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val dist = asSet(graph.NodeSimilarity.jaccard(spark,
         graph.GraphBuilder.partEdgesWide(spark, d)))
-      val fast = asSet(graph.NodeSimilarity.jaccardQuotientPartEdit(spark, d))
+      val fast = asSet(graph.Dispatch.jaccard(spark, graph.Dispatch.partVertices(spark, d)))
       assert(fast === dist, s"quotient diverges from the block engine at $d")
       assert(fast.exists(_._4 < 1.0) && fast.exists(_._4 == 1.0),
         s"degenerate Jaccard spectrum at $d — equivalence under-exercised")
@@ -49,7 +49,8 @@ class RoundEightOpsSpec extends SparkSpec {
         .select($"p_partkey".as("node"))
       val dist = asMap(graph.PersonalizedPageRank.run(spark,
         graph.GraphBuilder.partEdges(spark, d), seeds, 6))
-      val fast = asMap(graph.PersonalizedPageRank.quotientPartEdit(spark, d, 6))
+      val fast = asMap(graph.Dispatch.ppr(spark, graph.Dispatch.partVertices(spark, d)
+        .withColumn("is_seed", $"node" % 100 === 0), 6))
       assert(fast.keySet === dist.keySet, s"node sets diverge at $d")
       fast.foreach { case (n, r) => assert(dist(n) === r, s"rank of $n at $d") }
       // non-vacuity lives at sf0.01: at sf0.001 no seed class touches
@@ -74,10 +75,9 @@ class RoundEightOpsSpec extends SparkSpec {
       val ref = asSet(graph.Anf.propagationReference(spark,
         graph.GraphBuilder.partEdges(spark, d),
         graph.GraphPack.ANF_SAMPLE, graph.GraphPack.ANF_TOL))
-      val fast = asSet(graph.Anf.quotientBlowupEst(spark,
-        Tables.part(spark, d).select($"p_partkey".cast("long").as("node"),
-          $"p_brand".as("brand"), $"p_size".cast("long").as("size")),
-        graph.GraphPack.ANF_SAMPLE, graph.GraphPack.ANF_TOL))
+      val parts = graph.Dispatch.partVertices(spark, d)
+      val fast = asSet(graph.Anf.quotientBlowup(spark, graph.Dispatch.probe(parts).get,
+        parts, graph.GraphPack.ANF_SAMPLE, graph.GraphPack.ANF_TOL))
       assert(fast === ref, s"ANF quotient diverges at $d (est compared bit-for-bit)")
       assert(fast.nonEmpty && fast.forall(_._4), s"anf_ok must hold everywhere at $d")
       // non-vacuous register check at the richer SF: estimates take

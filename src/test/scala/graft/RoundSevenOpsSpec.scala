@@ -54,7 +54,8 @@ class RoundSevenOpsSpec extends SparkSpec {
     var sawPartialPeel = false
     for (k <- Seq(4, 5, 6)) {
       val dist = asSet(graph.KTruss.run(spark, edges, k = k))
-      val fast = asSet(graph.KTruss.quotientPartEdit(spark, d01, k = k))
+      val fast = asSet(graph.Dispatch.ktruss(spark,
+        graph.Dispatch.partVertices(spark, d01), k = k))
       assert(fast === dist, s"quotient diverges from the distributed peel at k=$k")
       if (dist.nonEmpty && dist.size < mTotal) sawPartialPeel = true
     }

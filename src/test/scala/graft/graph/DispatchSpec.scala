@@ -14,8 +14,9 @@ import graft.SparkSpec
   *      completion and agrees row-for-row.
   *   3. UNSTRUCTURED FALLBACK — a graph where every node is its own
   *      class (class count ≫ any useful bound) routes to the general
-  *      engine through the dispatcher and answers; the direct
-  *      quotient guard would have thrown.
+  *      engine through the dispatcher and answers.
+  *   4. ONE BOUND — every class route reads the same conf cap, and a
+  *      route the probe admits never throws on its class count.
   *
   * Same seeded-RNG random-class-graph discipline as
   * QuotientPropertySpec (whose per-engine twins pin the arithmetic;
@@ -97,20 +98,11 @@ class DispatchSpec extends SparkSpec {
   test("unstructured graph: class count past the bound falls back to the general engine and answers") {
     import spark.implicits._
     // every node its own class — a 40-node path per the ±1 rule, with
-    // ±2 chords under the wide rule; 40 classes > bound 8. The direct
-    // quotient guard throws on this; the dispatcher must route to the
-    // general engine instead and produce a real answer.
+    // ±2 chords under the wide rule; 40 classes > bound 8. The
+    // dispatcher must route to the general engine and produce a real
+    // answer.
     val parts = (1L to 40L).map(i => (i, "B", i)).toDF("node", "brand", "size")
     assert(Dispatch.probe(parts, bound = 8) === None)
-    // the guard pair: the same bounded collect that answers None here
-    // is what collectClasses turns into a throw — exercise THAT path
-    // directly with a class domain past the hard MAX_CLASSES bound
-    // (the probe's injected bound of 8 doesn't reach collectClasses,
-    // whose bound is the hard limit)
-    val past = spark.range(Quotient.MAX_CLASSES + 1)
-      .select(lit("B").as("brand"), $"id".as("size"), lit(1L).as("cnt"))
-    val ex = intercept[IllegalArgumentException] { Quotient.collectClasses(past) }
-    assert(ex.getMessage.contains("domain bound"))
 
     val mis = Dispatch.mis(spark, parts, bound = 8).collect()
     assert(mis.length === 40)
@@ -147,15 +139,32 @@ class DispatchSpec extends SparkSpec {
         "conf bound of 1 must route every non-empty class graph to the fallback")
       assert(asRows(Dispatch.ktruss(spark, parts, k = 4)) === viaQuotient,
         "conf-forced general route diverged from the quotient route")
-      // the conf cap clamps even an explicit LARGER bound: the
-      // quotient engines' internal guards follow the same conf, so
-      // routing past it would trade the fallback for their throw
+      // the conf cap clamps even an explicit LARGER bound: it caps
+      // how many class rows one collect may bring to the driver
       assert(Dispatch.probe(parts, bound = Quotient.MAX_CLASSES) === None,
         "explicit bound above the conf cap must still clamp to the cap")
     } finally spark.conf.unset(Quotient.MAX_CLASSES_KEY)
     // explicit argument below the default still wins (no conf set)
     assert(Dispatch.probe(parts, bound = 1) === None && Dispatch.probe(parts).isDefined,
       "explicit bound below the default must force the fallback route")
+    // every class route reads the same cap: bridges (Tarjan pass vs
+    // the distributed flood) and the typed expansion (class BFS vs
+    // the frontier join over the typed blow-up) fall back under it
+    // and still agree with their default routes
+    val typed = Dispatch.partVerticesTyped(spark, sfDir)
+    val typedSeeds = typed.filter($"node" % 100 === 0).select($"node")
+    val classSrc = typed.select($"brand", $"size")
+    val bridgesDefault = asRows(Bridges.classBridgesOf(spark, classSrc))
+    val expandDefault = asRows(Dispatch.expandTyped(spark, typed, typedSeeds, depth = 3))
+    assert(bridgesDefault.nonEmpty && expandDefault.nonEmpty,
+      "bridges / typed expansion answered empty — the agreement is vacuous")
+    spark.conf.set(Quotient.MAX_CLASSES_KEY, "1")
+    try {
+      assert(asRows(Bridges.classBridgesOf(spark, classSrc)) === bridgesDefault,
+        "conf-forced distributed bridges diverged from the Tarjan route")
+      assert(asRows(Dispatch.expandTyped(spark, typed, typedSeeds, depth = 3)) === expandDefault,
+        "conf-forced typed frontier join diverged from the class BFS")
+    } finally spark.conf.unset(Quotient.MAX_CLASSES_KEY)
     // the row-probe key reroutes the BFS spine the same way
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     val seeds = Seq((1L, 1L)).toDF("root", "node")
@@ -164,6 +173,37 @@ class DispatchSpec extends SparkSpec {
     try assert(asRows(Bfs.bfsAuto(edges, seeds)) === fast,
       "conf-forced distributed BFS diverged from the in-process sweep")
     finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
+  }
+
+  test("raised class cap: MIS and PPR answer on a graph past the default class bound") {
+    import spark.implicits._
+    // 50,000 brands with classes (b, 1) and (b, 2) — an edge-connected
+    // class pair per brand — plus one isolated class: 100,001 classes,
+    // one past the default bound, each with one seed and one non-seed
+    // member. A conf cap of 100,002 admits the graph, so both routes
+    // take their kernels, whose own collects must follow the probed
+    // map rather than the default bound.
+    val pairs = 50000
+    val parts = (0 until pairs).flatMap { b =>
+      Seq(1L, 2L).flatMap(sz => Seq(true, false).map(f =>
+        (b.toLong * 4 + (sz - 1) * 2 + (if (f) 0 else 1), s"B$b", sz, f)))
+    } ++ Seq((4L * pairs, "LONE", 1L, true), (4L * pairs + 1, "LONE", 1L, false))
+    val seeded = parts.toDF("node", "brand", "size", "is_seed").localCheckpoint()
+    val plain = seeded.select($"node", $"brand", $"size")
+    spark.conf.set(Quotient.MAX_CLASSES_KEY, (Quotient.MAX_CLASSES + 2).toString)
+    try {
+      assert(Dispatch.probe(plain).map(_.size) === Some(Quotient.MAX_CLASSES + 1),
+        "the raised cap must admit the class graph")
+      // Luby on K_{2,2} per brand: exactly one class of each pair joins,
+      // both members of the isolated class join in round 1
+      val mis = Dispatch.mis(spark, plain).filter($"in_mis")
+      assert(mis.count() === 2L * pairs + 2)
+      // every paired member has a neighbor and is ranked; the isolated
+      // class has no edge and is not a PPR node
+      val ppr = Dispatch.ppr(spark, seeded, iters = 2)
+      assert(ppr.count() === 4L * pairs)
+      assert(ppr.agg(sum($"rank")).head.getDouble(0) > 0.0)
+    } finally spark.conf.unset(Quotient.MAX_CLASSES_KEY)
   }
 
   test("route pins at the shipped SF (round-13): constants single-sourced, every probe-routed operator on its fast path") {
@@ -205,9 +245,9 @@ class DispatchSpec extends SparkSpec {
       }
       assert(exS.getMessage.contains("exceeds 1 rows"))
     } finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
-    // DagDepth consults maxClasses now (was a private 2^16): a conf
-    // cap of 1 must route its class DP to the distributed fallback —
-    // which still answers and agrees with the driver DP
+    // DagDepth consults maxClasses: a conf cap of 1 must route its
+    // class DP to the distributed fallback — which still answers and
+    // agrees with the driver DP
     val viaDriver = asRows(DagDepth.partEditDepth(spark, sfDir))
     spark.conf.set(Quotient.MAX_CLASSES_KEY, "1")
     try assert(asRows(DagDepth.partEditDepth(spark, sfDir)) === viaDriver,

@@ -62,7 +62,7 @@ class HitsSpec extends SparkSpec {
   test("quotient fast path is bit-identical to the distributed loop on the size-up graph") {
     val dist = Hits.run(GraphBuilder.partEdgesUp(spark, sfDir), iters = 4)
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val fast = Hits.classHits(spark, sfDir, iters = 4)
+    val fast = Dispatch.hits(spark, Dispatch.partVertices(spark, sfDir), iters = 4)
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     assert(fast.keySet === dist.keySet)
     fast.foreach { case (n, (hub, auth)) =>

@@ -44,12 +44,11 @@ class LinkPredictionSpec extends SparkSpec {
   }
 
   test("quotient fast path is bit-identical to the fact-level operator on the edit graph") {
-    import spark.implicits._
     val facts = LinkPrediction.resourceAllocation(
       GraphBuilder.partEdgesWide(spark, sfDir), 100).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-    val quot = LinkPrediction.resourceAllocationQuotient(spark,
-      graft.Tables.part(spark, sfDir).select($"p_partkey", $"p_brand", $"p_size"), 100).collect()
+    val quot = Dispatch.resourceAllocation(spark,
+      Dispatch.partVertices(spark, sfDir), 100).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
     assert(quot.toSeq === facts.toSeq)
   }

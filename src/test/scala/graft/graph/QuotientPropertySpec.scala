@@ -69,7 +69,7 @@ class QuotientPropertySpec extends SparkSpec {
     for (trial <- 1 to 6) {
       val sizes = randomClasses(rng)
       val parts = partsOf(sizes)
-      val partsDF = parts.toDF("p_partkey", "p_brand", "p_size")
+      val partsDF = parts.toDF("node", "brand", "size")
       val byClass = parts.groupBy(p => (p._2, p._3)).view.mapValues(_.map(_._1)).toMap
       val up = for {
         ((b, s), srcs) <- byClass.toSeq
@@ -82,7 +82,7 @@ class QuotientPropertySpec extends SparkSpec {
         val sym = (up ++ up.map(_.swap)).toDF("src", "dst")
         val facts = LinkPrediction.resourceAllocation(sym, 50).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-        val quot = LinkPrediction.resourceAllocationQuotient(spark, partsDF, 50).collect()
+        val quot = LinkPrediction.quotientBlowup(spark, sizes, partsDF, 50).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
         assert(quot.toSeq === facts.toSeq, s"trial $trial")
       }
@@ -111,8 +111,8 @@ class QuotientPropertySpec extends SparkSpec {
           df.collect().map(r =>
             (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
         val dist = asSet(NodeSimilarity.jaccard(spark, sym))
-        val fast = asSet(NodeSimilarity.quotientStamp(spark, sizes,
-          parts.toDF("id", "brand", "size")))
+        val fast = asSet(NodeSimilarity.quotientBlowup(spark, sizes,
+          parts.toDF("node", "brand", "size")))
         assert(fast === dist, s"trial $trial: quotient diverges (sizes=$sizes)")
       }
     }
@@ -142,8 +142,8 @@ class QuotientPropertySpec extends SparkSpec {
         def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
           df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
         val dist = asMap(PersonalizedPageRank.run(spark, sym, seeds, iters = 4))
-        val fast = asMap(PersonalizedPageRank.quotientRefined(spark,
-          flagged.toDF("id", "brand", "size", "is_seed"), iters = 4))
+        val fast = asMap(PersonalizedPageRank.quotientRefined(spark, sizes,
+          flagged.toDF("node", "brand", "size", "is_seed"), iters = 4))
         assert(fast.keySet === dist.keySet, s"trial $trial node sets (sizes=$sizes)")
         fast.foreach { case (n, r) =>
           assert(dist(n) === r, s"trial $trial rank of $n") }
@@ -176,7 +176,7 @@ class QuotientPropertySpec extends SparkSpec {
         def asSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double, Boolean)] =
           df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
         val ref = asSet(Anf.propagationReference(spark, e, sampleMod = 1, tol = 0.4))
-        val fast = asSet(Anf.quotientBlowupEst(spark,
+        val fast = asSet(Anf.quotientBlowup(spark, sizes,
           parts.toDF("node", "brand", "size"), sampleMod = 1, tol = 0.4))
         assert(fast === ref, s"trial $trial: quotient diverges (sizes=$sizes)")
       }
@@ -209,7 +209,7 @@ class QuotientPropertySpec extends SparkSpec {
           df.collect().map(r => (r.getLong(0), r.getBoolean(1),
             if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
         val dist = asSet(Mis.run(spark, vertsDF, sym))
-        val fast = asSet(Mis.quotientBlowup(spark, partsDF, maxIter = 25))
+        val fast = asSet(Mis.quotientBlowup(spark, sizes, partsDF, maxIter = 25))
         assert(fast === dist, s"trial $trial: quotient diverges (sizes=$sizes)")
       }
     }
