@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Iterative frontier-join BFS and wavefront expansion over an edge
   * DataFrame (src, dst).
@@ -9,16 +10,20 @@ import org.apache.spark.sql.functions._
   * Spark-first re-expression of the reference's in-memory traversal:
   * `query()` keeps previous/current/next wavefront *sets* on one
   * machine (main.py:272-305) and `add_relations` expands a frontier
-  * depth-bounded (main.py:212-242). Here the frontier and the visited
-  * set are DataFrames — one hash join per wave, nothing collected to
-  * the driver.
+  * depth-bounded (main.py:212-242). The routed traversals
+  * ([[bfsAuto]], [[wavePair]], [[wavePairs]]) make one bounded row
+  * probe ([[Quotient.probeRows]] at [[Quotient.probeBound]]): within
+  * the bound the probed rows become one in-process [[Adjacency]] and
+  * the reference's own BFS runs over it; past the bound, as in [[bfs]]
+  * and [[expand]], the frontier and the visited set are DataFrames —
+  * one hash join per wave, nothing collected to the driver.
   *
-  * Scale design (SURVEY §5): edges are hash-partitioned on `src` once
-  * and persisted, so every wave's join reuses the same exchange; the
-  * frontier side is small and reshuffles cheaply (or AQE broadcasts
-  * it). Every wave is localCheckpoint-ed (eager) to truncate lineage —
-  * without that the plan doubles per wave and a deep traversal dies in
-  * the optimizer long before any shuffle does.
+  * Scale design of the distributed route (SURVEY §5): edges are
+  * hash-partitioned on `src` once and persisted, so every wave's join
+  * reuses the same exchange; the frontier side is small and reshuffles
+  * cheaply (or AQE broadcasts it). Every wave is localCheckpoint-ed to
+  * truncate lineage — without that the plan doubles per wave and a
+  * deep traversal dies in the optimizer long before any shuffle does.
   */
 object Bfs {
 
@@ -32,6 +37,124 @@ object Bfs {
     * ~3 scheduler round-trips per wave of pure overhead. */
   private def settle(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = false)
+
+  /** A bounded edge set's adjacency in CSR form — the ONE adjacency
+    * build behind every in-process route: [[bfsAuto]]'s multi-root
+    * sweep, the [[wavePair]]/[[wavePairs]] point lookups and
+    * [[GraphDB]]'s per-version edge handle. `ids` are the sorted
+    * distinct endpoint ids; node `ids(i)`'s out-neighbours are the
+    * indices `tgt(off(i) until off(i + 1))`. `rows` counts the probed
+    * rows (null endpoints included) and `srcNodes` the distinct
+    * non-null sources — `GraphDB.stats`' two aggregates. */
+  private[graph] final class Adjacency private (
+      ids: Array[Long], off: Array[Int], tgt: Array[Int],
+      val rows: Long, val srcNodes: Long) {
+
+    /** Layer-by-layer BFS: the distinct `seeds` are wave 1 (on the
+      * graph or not), each later wave the unseen out-neighbours of the
+      * previous one, up to wave `maxWaves` — [[bfs]]'s wave semantics.
+      * `visit(node, wave)` runs once per reached node in first-seen
+      * order; the sweep stops early once it returns false. */
+    def sweep(seeds: Seq[Long], maxWaves: Long)(visit: (Long, Long) => Boolean): Unit = {
+      val seen = new java.util.BitSet(ids.length)
+      var frontier = Array.newBuilder[Int]
+      var go = true
+      val it = seeds.distinct.iterator
+      while (go && it.hasNext) {
+        val n = it.next()
+        val i = java.util.Arrays.binarySearch(ids, n)
+        if (i >= 0) { seen.set(i); frontier += i }
+        go = visit(n, 1L)
+      }
+      var cur = frontier.result()
+      var w = 1L
+      while (go && w < maxWaves && cur.nonEmpty) {
+        w += 1
+        frontier = Array.newBuilder[Int]
+        var a = 0
+        while (go && a < cur.length) {
+          var k = off(cur(a))
+          while (go && k < off(cur(a) + 1)) {
+            val j = tgt(k)
+            if (!seen.get(j)) {
+              seen.set(j)
+              frontier += j
+              go = visit(ids(j), w)
+            }
+            k += 1
+          }
+          a += 1
+        }
+        cur = frontier.result()
+      }
+    }
+
+    /** [[wavePairs]]' answers in-process: one early-exit sweep per
+      * distinct source, shared by every probe from it. */
+    def pairWaves(pairs: Seq[(Long, Long)], maxWaves: Int): Seq[(Long, Long, Long)] = {
+      val answered = scala.collection.mutable.Map.empty[(Long, Long), Long]
+      pairs.distinct.groupBy(_._1).foreach { case (a, ps) =>
+        val open = scala.collection.mutable.Set(ps.map(_._2): _*)
+        sweep(Seq(a), maxWaves) { (n, w) =>
+          if (open.remove(n)) answered((a, n)) = w
+          open.nonEmpty
+        }
+      }
+      pairs.map(p => (p._1, p._2, answered.getOrElse(p, -1L)))
+    }
+  }
+
+  private[graph] object Adjacency {
+    /** Builds the CSR from probed (src, dst) rows of LONG-or-null
+      * endpoints; a row with a null endpoint counts in `rows` (and its
+      * non-null src in `srcNodes`) but joins nothing, as in the
+      * distributed routes. */
+    def apply(rows: Array[Row]): Adjacency = {
+      val linked = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      val src = linked.map(_.getLong(0))
+      val dst = linked.map(_.getLong(1))
+      val ids = distinctSorted(src ++ dst)
+      val si = src.map(java.util.Arrays.binarySearch(ids, _))
+      val off = new Array[Int](ids.length + 1)
+      si.foreach(i => off(i + 1) += 1)
+      for (i <- 1 to ids.length) off(i) += off(i - 1)
+      val fill = off.clone()
+      val tgt = new Array[Int](si.length)
+      for (k <- si.indices) {
+        tgt(fill(si(k))) = java.util.Arrays.binarySearch(ids, dst(k))
+        fill(si(k)) += 1
+      }
+      val srcNodes = distinctSorted(rows.filterNot(_.isNullAt(0)).map(_.getLong(0))).length
+      new Adjacency(ids, off, tgt, rows.length.toLong, srcNodes.toLong)
+    }
+
+    private def distinctSorted(xs: Array[Long]): Array[Long] = {
+      val a = xs.clone()
+      java.util.Arrays.sort(a)
+      var n = 0
+      for (i <- a.indices) if (i == 0 || a(i) != a(i - 1)) { a(n) = a(i); n += 1 }
+      java.util.Arrays.copyOf(a, n)
+    }
+  }
+
+  /** The point-lookup routes' probe: Some(the version's [[Adjacency]])
+    * when the edge table's (src, dst) projection is within `bound`
+    * rows (the caller's, else [[Quotient.probeBound]]), None past it —
+    * and None without a job when an endpoint column is not integral,
+    * where a cast to BIGINT would change which rows the distributed
+    * routes' joins match. The probe keeps null endpoints so `rows` and
+    * `srcNodes` see what a DataFrame aggregate over the table sees. */
+  private[graph] def probeAdjacency(edges: DataFrame, bound: Int = -1): Option[Adjacency] = {
+    val integral = Seq("src", "dst").forall(c => edges.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+    if (!integral) None
+    else Quotient.probeRows(
+        edges.select(col("src").cast("long"), col("dst").cast("long")),
+        Quotient.resolve(bound, edges.sparkSession, Quotient.probeBound))
+      .map(Adjacency(_))
+  }
 
   /** Multi-root BFS. `seeds` has columns (root, node); returns
     * (root, node, wave) for every reachable node, where the seed
@@ -65,41 +188,14 @@ object Bfs {
     visited
   }
 
-  /** Dimension-bounded BFS fast path — same contract as [[bfs]], for
-    * graphs whose NODE set is a bounded dimension (e.g. the nation
-    * trade graph: deriving its edges scans the facts, but the graph
-    * itself is ≤ |dims|² rows). One distributed job materializes that
-    * dim-sized edge set; the traversal then runs on the driver like
-    * any other broadcast-dimension computation, instead of paying
-    * join+distinct+anti-join shuffles per wave to move a few hundred
-    * rows. Guarded: refuses fact-sized inputs. */
-  def bfsBounded(edges: DataFrame, seeds: DataFrame, maxWaves: Int = 100): DataFrame = {
-    // single-sourced route bound (round-13, verdict #6)
-    val limit = Quotient.probeBound(edges.sparkSession)
-    // Node ids normalize to BIGINT — the same coercion the distributed
-    // path's seed∪frontier union applies, and the graph contract
-    // (SURVEY: all node id columns are emitted as BIGINT). The limit
-    // rides INSIDE the collect so a fact-sized input is refused after
-    // shipping at most limit+1 rows, not after an OOM-sized collect.
-    // Null ids never join in the distributed path — drop them here so
-    // the fast path matches instead of NPE-ing in getLong.
-    val e = Quotient.probeRows(normEdges(edges), limit).getOrElse(
-      throw new IllegalArgumentException(
-        s"requirement failed: bfsBounded edge set exceeds $limit rows — not dimension-bounded; use bfs"))
-    val seedRows = Quotient.probeRows(normSeeds(seeds), limit).getOrElse(
-      throw new IllegalArgumentException(
-        s"requirement failed: bfsBounded seed set exceeds $limit rows — not dimension-bounded; use bfs"))
-    boundedSweep(edges.sparkSession, e, seedRows, maxWaves)
-  }
-
   /** ROUTED multi-root BFS (round-10: the Dispatch discipline applied
-    * to the all-pairs spine) — same contract as [[bfs]]/[[bfsBounded]],
-    * but the dimension bound is a ROUTING decision, not a guard:
-    * within `bound`, the probe's collected edge/seed rows feed the
-    * in-process sweep directly (the probe IS the fast path's collect —
-    * no second job); past it, the distributed frontier-join loop runs
-    * instead of throwing. Both routes emit identical (root, node,
-    * wave) multisets on long-typed inputs (FallbackRoutingSpec). */
+    * to the all-pairs spine) — same contract as [[bfs]], but the
+    * dimension bound is a ROUTING decision, not a guard: within
+    * `bound`, the probe's collected edge/seed rows feed the in-process
+    * sweep directly (the probe IS the fast path's collect — no second
+    * job); past it, the distributed frontier-join loop runs instead.
+    * Both routes emit identical (root, node, wave) multisets on
+    * long-typed inputs (FallbackRoutingSpec, BfsSpec). */
   def bfsAuto(edges: DataFrame, seeds: DataFrame, maxWaves: Int = 100,
               bound: Int = -1): DataFrame = {
     val eff = Quotient.resolve(bound, edges.sparkSession, Quotient.probeBound)
@@ -113,7 +209,7 @@ object Bfs {
     val routed = for {
       sd <- Quotient.probeRows(normSeeds(seeds), eff)
       e <- Quotient.probeRows(normEdges(edges), eff)
-    } yield boundedSweep(edges.sparkSession, e, sd, maxWaves)
+    } yield boundedSweep(edges.sparkSession, Adjacency(e), sd, maxWaves)
     routed.getOrElse(bfs(normEdges(edges), normSeeds(seeds), maxWaves))
   }
 
@@ -126,51 +222,51 @@ object Bfs {
       .filter(col("root").isNotNull && col("node").isNotNull)
       .distinct() // same multiplicity contract as bfs (which dedups seeds too)
 
-  /** The in-process multi-root sweep both bounded entry points share:
-    * one adjacency map, one frontier loop per root, (root, node, wave)
-    * rows out — wave semantics identical to [[bfs]]. */
-  private def boundedSweep(spark: org.apache.spark.sql.SparkSession,
-                           e: Array[org.apache.spark.sql.Row],
-                           seedRows: Array[org.apache.spark.sql.Row],
-                           maxWaves: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import scala.collection.mutable
+  /** [[bfsAuto]]'s in-process route: one [[Adjacency.sweep]] per root
+    * over its seed nodes, (root, node, wave) rows out in (root, node)
+    * order — wave semantics identical to [[bfs]]. */
+  private def boundedSweep(spark: SparkSession, adj: Adjacency,
+                           seedRows: Array[Row], maxWaves: Int): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
-    e.foreach(r => adj.getOrElseUpdate(r.getLong(0), mutable.ArrayBuffer.empty) += r.getLong(1))
-    val out = mutable.ArrayBuffer.empty[Row]
-    seedRows.groupBy(_.getLong(0)).foreach { case (root, rs) =>
-      val wave = mutable.HashMap.empty[Long, Long]
-      var frontier = rs.map(_.getLong(1)).distinct.toSeq
-      frontier.foreach(n => wave.update(n, 1L))
-      var w = 1L
-      while (w < maxWaves && frontier.nonEmpty) {
-        w += 1
-        frontier = frontier.flatMap(n => adj.getOrElse(n, Nil))
-          .distinct.filterNot(wave.contains)
-        frontier.foreach(n => wave.update(n, w))
-      }
-      wave.foreach { case (n, wv) => out += Row(root, n, wv) }
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    seedRows.groupBy(_.getLong(0)).toSeq.sortBy(_._1).foreach { case (root, rs) =>
+      val reached = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      adj.sweep(rs.map(_.getLong(1)).toSeq, maxWaves) { (n, w) => reached += (n -> w); true }
+      reached.sortBy(_._1).foreach { case (n, w) => out += Row(root, n, w) }
     }
     val schema = StructType(Seq(
       StructField("root", LongType),
       StructField("node", LongType),
       StructField("wave", LongType)))
-    spark.createDataFrame(out.sortBy(r => (r.getLong(0), r.getLong(1))).asJava, schema)
+    spark.createDataFrame(out.asJava, schema)
   }
 
   /** Single-pair early-exit BFS — the reference's `query(from, to)`
     * (main.py:272-305): source counts as wave 1, each hop adds one,
-    * -1 if unreachable; src == dst short-circuits to 1 without
-    * touching the graph. Distributed frontier loop like [[bfs]], but
-    * it STOPS the moment the target enters the frontier — on a
+    * -1 if unreachable within `maxWaves`; src == dst short-circuits to
+    * 1 without touching the graph. Routed like [[bfsAuto]]: within
+    * `bound` rows (the caller's, else [[Quotient.probeBound]]) the
+    * probe's rows become an [[Adjacency]] and the BFS runs in-process,
+    * stopping at the target — one job in all; past it (or for
+    * non-integral ids) [[frontierPair]] runs. g_query_pair puts the
+    * same code under the DuckDB oracle (through [[wavePairs]]). */
+  def wavePair(edges: DataFrame, src: Long, dst: Long, maxWaves: Int = 100,
+               bound: Int = -1): Long =
+    if (src == dst) 1L
+    else probeAdjacency(edges, bound) match {
+      case Some(adj) => adj.pairWaves(Seq(src -> dst), maxWaves).head._3
+      case None => frontierPair(edges, src, dst, maxWaves)
+    }
+
+  /** [[wavePair]]'s distributed route: a frontier loop like [[bfs]],
+    * but it STOPS the moment the target enters the frontier — on a
     * 100 TB graph with a 3-hop answer, that is 3 co-partitioned joins
     * total, not a full reachability closure. Each wave's loop control
-    * (frontier size + target hit) is a single aggregation job.
-    * [[GraphDB.query]] delegates here; g_query_pair puts the same
-    * code path on the driver's oracle signal. */
-  def wavePair(edges: DataFrame, src: Long, dst: Long, maxWaves: Int = 100): Long = {
+    * (frontier size + target hit) is a single aggregation job; nothing
+    * is collected to the driver. [[GraphDB.query]] calls it directly
+    * once its per-version probe has found the store past the bound. */
+  private[graph] def frontierPair(edges: DataFrame, src: Long, dst: Long,
+                                  maxWaves: Int): Long = {
     if (src == dst) return 1L
     val spark = edges.sparkSession
     import spark.implicits._
@@ -198,18 +294,30 @@ object Bfs {
   }
 
   /** Batched early-exit pair queries — [[wavePair]]'s semantics for a
-    * SET of (src, dst) probes in ONE traversal. Sequential wavePair
-    * calls pay the per-wave scheduler jobs once per pair; here the
-    * frontier is root-tagged, so every wave's expansion join AND its
-    * single loop-control job are shared by all still-open probes
-    * (pairs sharing a source also share the traversal outright). Per
-    * probe the semantics are identical: src == dst answers 1 without
-    * touching the graph, a probe stops contributing the moment its
-    * target is reached, a root whose frontier empties answers −1 for
-    * its remaining probes.
+    * SET of (src, dst) probes. Per probe the semantics are identical:
+    * src == dst answers 1 without touching the graph, a probe stops
+    * contributing the moment its target is reached, a source whose
+    * frontier empties answers −1 for its remaining probes. Routed on
+    * the same probe as [[wavePair]] (skipped when every probe is
+    * src == dst): in-process, one sweep per distinct source; past the
+    * bound, [[frontierPairs]].
     * Returns (src, dst, wave) in the input's (src, dst) order. */
-  def wavePairs(edges: DataFrame, pairs: Seq[(Long, Long)], maxWaves: Int = 100)
-    : Seq[(Long, Long, Long)] = {
+  def wavePairs(edges: DataFrame, pairs: Seq[(Long, Long)], maxWaves: Int = 100,
+                bound: Int = -1): Seq[(Long, Long, Long)] =
+    if (pairs.forall(p => p._1 == p._2)) pairs.map(p => (p._1, p._2, 1L))
+    else probeAdjacency(edges, bound) match {
+      case Some(adj) => adj.pairWaves(pairs, maxWaves)
+      case None => frontierPairs(edges, pairs, maxWaves)
+    }
+
+  /** [[wavePairs]]' distributed route, ONE traversal for all probes.
+    * Sequential [[frontierPair]] calls pay the per-wave scheduler jobs
+    * once per pair; here the frontier is root-tagged, so every wave's
+    * expansion join AND its single loop-control job are shared by all
+    * still-open probes (pairs sharing a source also share the
+    * traversal outright). */
+  private[graph] def frontierPairs(edges: DataFrame, pairs: Seq[(Long, Long)],
+                                   maxWaves: Int): Seq[(Long, Long, Long)] = {
     val spark = edges.sparkSession
     import spark.implicits._
     val answered = scala.collection.mutable.Map.empty[(Long, Long), Long]
@@ -271,7 +379,7 @@ object Bfs {
   private[graph] def quotientExpand(s: org.apache.spark.sql.SparkSession,
       classes: Map[(String, Long), Long], parts: DataFrame, seeds: DataFrame,
       depth: Int, deltas: Seq[Long] = Seq(1L)): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.StringType
     import scala.jdk.CollectionConverters._
     val sd = seeds.select(col("node").cast("long").as("node")).distinct()
       .localCheckpoint(false)
@@ -326,7 +434,7 @@ object Bfs {
   private[graph] def quotientExpandTyped(s: org.apache.spark.sql.SparkSession,
       classes: Set[(String, Long, String)], parts: DataFrame, seeds: DataFrame,
       depth: Int): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.StringType
     import scala.jdk.CollectionConverters._
     val sd = seeds.select(col("node").cast("long").as("node")).distinct()
       .localCheckpoint(false)

@@ -372,7 +372,7 @@ object GraphPack extends QueryPack {
     // A28: harmonic centrality — H(u) = Σ_{v≠u reachable} 1/d(u,v),
     // the disconnected-robust closeness variant (isolated pairs
     // contribute 0 instead of poisoning the mean). Rides the same
-    // dim-bounded all-pairs BFS spine as A10/A22; determinism comes
+    // ROUTED all-pairs BFS spine as A10/A22; determinism comes
     // from summing EXACT integers: per-(root, distance) counts times
     // the integer reciprocal 1e12 DIV d, one double division at the
     // end — no order-dependent float accumulation anywhere.
@@ -381,7 +381,7 @@ object GraphPack extends QueryPack {
       val edges = GraphBuilder.tradeEdges(s, d)
       val seeds = edges.select($"src".as("node")).distinct()
         .select($"node".as("root"), $"node")
-      Bfs.bfsBounded(edges, seeds)
+      Bfs.bfsAuto(edges, seeds)
         .withColumn("dist", $"wave" - 1L)
         .filter($"dist" > 0L)
         .groupBy($"root", $"dist").agg(count(lit(1)).as("c"))
@@ -446,14 +446,13 @@ object GraphPack extends QueryPack {
 
     // A4: BFS shortest path with the reference's wave semantics
     // (main.py:272-305): source is wave 1, unreachable is -1. The
-    // trade graph's node set is the nation dimension, so the bounded
-    // fast path applies (the fact-scale work is deriving the edges);
-    // the distributed Bfs.bfs keeps its fact-scaled representative in
-    // g_expand and its own specs.
+    // trade graph's node set is the nation dimension, so the routed
+    // BFS takes its in-process sweep (the fact-scale work is deriving
+    // the edges); past the probe bound it runs the distributed Bfs.bfs.
     "g_bfs" -> { (s, d) =>
       import s.implicits._
       val seeds = s.range(1).select(lit(0L).as("root"), lit(0L).as("node"))
-      val waves = Bfs.bfsBounded(GraphBuilder.tradeEdges(s, d), seeds).select($"node", $"wave")
+      val waves = Bfs.bfsAuto(GraphBuilder.tradeEdges(s, d), seeds).select($"node", $"wave")
       Tables.nation(s, d).select($"n_nationkey".cast("long").as("node"))
         .join(waves, Seq("node"), "left")
         .select($"node", coalesce($"wave", lit(-1L)).as("wave"))
@@ -498,8 +497,9 @@ object GraphPack extends QueryPack {
     // A9: fixed-iteration PageRank as a deterministic DataFrame plan
     // (decimal-quantized messages — see PageRank.scala's contract).
     // tradeEdges is bidirectional by construction, and its node set is
-    // the nation dimension (bounded at any fact scale), so the rank
-    // vector broadcasts and each iteration is one shuffle.
+    // the nation dimension (bounded at any fact scale), so smallRanks
+    // routes it to the in-process rank vector; past the probe bound
+    // each iteration is one shuffle.
     "g_pagerank" -> { (s, d) =>
       PageRank.run(GraphBuilder.tradeEdges(s, d), PR_ITERS,
         bidirectional = true, smallRanks = true)
@@ -633,7 +633,7 @@ object GraphPack extends QueryPack {
 
     // A23: exact betweenness centrality — Brandes-style shortest-path
     // counting over the dim-bounded trade graph (σ on the driver
-    // under bfsBounded's collect guard; the (s, t, v) pair-dependency
+    // within the probe bound; the (s, t, v) pair-dependency
     // sum in Spark SQL under the DECIMAL(28,12) quantize-then-exact-
     // sum contract). See graph/Betweenness.scala.
     "g_betweenness" -> { (s, d) =>
@@ -667,14 +667,14 @@ object GraphPack extends QueryPack {
     // Bfs.wavePair, main.py:272-305 parity) on the hard signal: a
     // handful of (src, dst) probes including the src==dst wave-1
     // fast path (on- and off-graph) and an unreachable target.
-    // The per-pair BFS loop is intrinsically driver-controlled (it
-    // IS the early-exit point lookup); the edge table is shared and
-    // each probe stops at its answer wave.
+    // Routed like GraphDB.query: within the probe bound one collect of
+    // the trade graph and an in-process sweep per source; past it one
+    // shared root-tagged frontier loop. Each probe stops at its answer
+    // wave.
     "g_query_pair" -> { (s, d) =>
       import s.implicits._
       val e = GraphBuilder.tradeEdges(s, d).localCheckpoint(false)
-      // batched root-tagged traversal: one shared frontier loop for
-      // all probes (wavePair semantics per probe — see Bfs.wavePairs)
+      // wavePair semantics per probe — see Bfs.wavePairs
       Bfs.wavePairs(e, QUERY_PAIRS).toDF("src", "dst", "wave")
     },
 

@@ -29,28 +29,33 @@ object PageRank {
     *              ≥ 1 message per iteration, so the dangling-node left
     *              join is provably a no-op and is skipped — one join
     *              fewer per iteration, same result.
-    * @param smallRanks caller asserts the NODE set is dimension-
-    *              bounded (does not grow with fact data — e.g. the
-    *              nation trade graph: deriving its edges scans the
-    *              facts, but the graph itself is ≤ |dims|² rows). The
-    *              message graph is then collected ONCE and the rank
-    *              vector iterated on the driver — dim-sized state,
-    *              exactly like any broadcast-dimension computation —
-    *              instead of paying a shuffle per iteration to update
-    *              25 numbers. Bit-identical to the distributed path
-    *              (same Decimal quantization, exact decimal sums).
-    *              Leave false for graphs whose node count scales with
-    *              the data.
+    * @param smallRanks route on the message graph's size: when the
+    *              (src, dst, outdeg) message graph is within
+    *              [[Quotient.probeBound]] rows (e.g. the nation trade
+    *              graph: deriving its edges scans the facts, but the
+    *              graph itself is ≤ |dims|² rows), the ONE bounded
+    *              collect that probes it is also the in-process
+    *              iteration's input — dim-sized state, exactly like any
+    *              broadcast-dimension computation — instead of paying a
+    *              shuffle per iteration to update 25 numbers.
+    *              Bit-identical to the distributed path (same Decimal
+    *              quantization, exact decimal sums). Past the bound the
+    *              distributed loop below runs. Leave false for graphs
+    *              whose node count scales with the data: the probe
+    *              would be wasted.
     * @return (node, rank) with rank as a raw double.
     */
   def run(edges: DataFrame, iters: Int, bidirectional: Boolean = false,
           smallRanks: Boolean = false): DataFrame = {
     val e = edges.select("src", "dst")
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    if (smallRanks) return runDimBounded(e, deg, iters, bidirectional)
-    val ed = e.join(deg, e("src") === deg("node"))
+    val msgGraph = e.join(deg, e("src") === deg("node"))
       .select(e("src"), e("dst"), col("outdeg"))
-      .repartition(col("src")).persist()
+    if (smallRanks) {
+      val probed = Quotient.probeRows(msgGraph, Quotient.probeBound(e.sparkSession))
+      if (probed.isDefined) return ranksInProcess(e, probed.get, iters, bidirectional)
+    }
+    val ed = msgGraph.repartition(col("src")).persist()
     var ranks = deg.select(col("node"), lit(1.0).as("rank"))
       .localCheckpoint(eager = false)
     for (i <- 1 to iters) {
@@ -80,31 +85,20 @@ object PageRank {
     out
   }
 
-  /** Dimension-bounded fast path: ONE distributed job derives the
-    * dim-sized (src, dst, outdeg) message graph from the fact data;
-    * the 10-iteration rank update then runs over that in-memory
+  /** Dimension-bounded route over the probed (src, dst, outdeg)
+    * message graph `ed`: the rank update runs over an in-memory
     * vector. Replicates the distributed path bit-for-bit: per-message
     * quantization uses Spark's own [[org.apache.spark.sql.types.Decimal]]
     * double→DECIMAL(28,12) cast (HALF_UP), message sums are exact
     * java.math.BigDecimal additions (order-independent), and the rank
     * update is the same IEEE double expression. */
-  private def runDimBounded(e: DataFrame, deg: DataFrame, iters: Int,
-                            bidirectional: Boolean): DataFrame = {
+  private def ranksInProcess(e: DataFrame, ed: Array[org.apache.spark.sql.Row], iters: Int,
+                             bidirectional: Boolean): DataFrame = {
     import org.apache.spark.sql.types.{Decimal, DoubleType, StructField, StructType}
     import org.apache.spark.sql.Row
     import scala.collection.mutable
     import scala.jdk.CollectionConverters._
     val spark = e.sparkSession
-    // single-sourced route bound (round-13, verdict #6)
-    val limit = Quotient.probeBound(spark)
-    // The limit rides INSIDE the collect so a fact-sized edge set is
-    // refused after shipping at most limit+1 rows, not after an
-    // OOM-sized collect.
-    val ed = e.join(deg, e("src") === deg("node"))
-      .select(e("src"), e("dst"), col("outdeg")).limit(limit + 1).collect()
-    require(ed.length <= limit,
-      s"smallRanks is set but the edge set exceeds $limit rows — " +
-        "not dimension-bounded; use the distributed path")
     val nodes: Array[Any] = ed.map(_.get(0)).distinct
     var rank: mutable.HashMap[Any, Double] =
       mutable.HashMap(nodes.map(n => n -> 1.0).toIndexedSeq: _*)

@@ -292,6 +292,30 @@ object GraphStore {
     commit(fresh, root, nextVersion(s, root), Some(parent))
   }
 
+  /** The newest readable compaction directory preserving version `v`
+    * (whose own directory is gone or was never committed). */
+  private def compactionOf(s: SparkSession, root: String, v: Int): Path =
+    readableCompacts(s, root).collectFirst { case (p, vs) if vs.contains(v) => p }
+      .getOrElse(throw new IllegalArgumentException(
+        s"requirement failed: no committed snapshot v=$v at $root"))
+
+  /** An identity for the files committed version `v` reads: the
+    * (name, length, modification time) listing of its own `v=<v>`
+    * directory, or of the compaction directory that preserves it once
+    * vacuumed. A cache of a version's contents keys on (v, stamp),
+    * never on the root path: a root deleted and re-initialised up to
+    * the same version number lists other files (every write names its
+    * part files afresh), and so does a version whose directory was
+    * rolled into a compaction. */
+  def versionStamp(s: SparkSession, root: String, v: Int): String = {
+    val dir =
+      if (committed(s, root, v)) new Path(snapshotPath(root, v))
+      else compactionOf(s, root, v)
+    fs(s, root).listStatus(dir).sortBy(_.getPath.getName)
+      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .mkString(s"$dir|", ",", "")
+  }
+
   /** Read the latest snapshot. */
   def read(s: SparkSession, root: String): DataFrame = {
     val v = latestVersion(s, root)
@@ -318,12 +342,7 @@ object GraphStore {
         case None    => own
       }
     } else {
-      val c = readableCompacts(s, root).collectFirst {
-          case (p, vs) if vs.contains(v) => p
-        }
-        .getOrElse(throw new IllegalArgumentException(
-          s"requirement failed: no committed snapshot v=$v at $root"))
-      s.read.parquet(c.toString)
+      s.read.parquet(compactionOf(s, root, v).toString)
         .filter(col("__first") <= v && col("__last") >= v)
         .drop("__first", "__last")
     }

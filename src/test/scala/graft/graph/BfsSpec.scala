@@ -42,7 +42,7 @@ class BfsSpec extends SparkSpec {
     assert(got === Set(1L, 2L))
   }
 
-  test("bfsBounded matches distributed bfs on seeded random multi-root graphs") {
+  test("bfsAuto matches distributed bfs on seeded random multi-root graphs") {
     import spark.implicits._
     val rng = new scala.util.Random(1717)
     for (_ <- 1 to 10) {
@@ -55,8 +55,12 @@ class BfsSpec extends SparkSpec {
         if (roots.nonEmpty) {
           val seeds = roots.map(r => (r, r)).toDF("root", "node")
           val want = Bfs.bfs(e, seeds).as[(Long, Long, Long)].collect().toSet
-          val got = Bfs.bfsBounded(e, seeds).as[(Long, Long, Long)].collect().toSet
-          assert(got === want, s"pairs=$pairs roots=$roots")
+          // the in-process sweep (default bound) and the distributed
+          // route (bound 1)
+          for (bound <- Seq(-1, 1)) {
+            val got = Bfs.bfsAuto(e, seeds, bound = bound).as[(Long, Long, Long)].collect().toSet
+            assert(got === want, s"bound=$bound pairs=$pairs roots=$roots")
+          }
         }
       }
     }
@@ -69,8 +73,9 @@ class BfsSpec extends SparkSpec {
     val want = Set((1L, 1L, 1L), (1L, 2L, 2L))
     assert(Bfs.bfs(e, seeds).as[(Long, Long, Long)].collect().toSeq.sorted
       === want.toSeq.sorted)
-    assert(Bfs.bfsBounded(e, seeds).as[(Long, Long, Long)].collect().toSeq.sorted
-      === want.toSeq.sorted)
+    for (bound <- Seq(-1, 1))
+      assert(Bfs.bfsAuto(e, seeds, bound = bound).as[(Long, Long, Long)].collect().toSeq.sorted
+        === want.toSeq.sorted, s"bound=$bound")
   }
 
   test("wavePairs matches sequential wavePair on every probe class") {
@@ -80,17 +85,25 @@ class BfsSpec extends SparkSpec {
     val e = edgesDf((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
     val probes = Seq((1L, 1L), (1L, 2L), (1L, 5L), (1L, 10L), (99L, 1L),
       (3L, 5L), (3L, 10L))
-    val batched = Bfs.wavePairs(e, probes)
-    probes.zip(batched).foreach { case ((a, b), (ga, gb, wave)) =>
-      assert((ga, gb) === ((a, b)))
-      assert(wave === Bfs.wavePair(e, a, b), s"probe ($a, $b)")
+    val sequential = probes.map { case (a, b) => Bfs.wavePair(e, a, b, bound = 1) }
+    // both routes of the batch: in-process (default bound) and the
+    // shared distributed traversal (bound 1)
+    for (bound <- Seq(-1, 1)) {
+      val batched = Bfs.wavePairs(e, probes, bound = bound)
+      probes.zip(batched).zip(sequential).foreach { case (((a, b), (ga, gb, wave)), want) =>
+        assert((ga, gb) === ((a, b)))
+        assert(wave === want, s"bound=$bound probe ($a, $b)")
+        assert(Bfs.wavePair(e, a, b) === want, s"in-process probe ($a, $b)")
+      }
     }
   }
 
   test("wavePairs preserves input order including duplicate probes") {
     val e = edgesDf((1L, 2L))
     val probes = Seq((1L, 2L), (1L, 2L), (2L, 1L))
-    assert(Bfs.wavePairs(e, probes) === Seq((1L, 2L, 2L), (1L, 2L, 2L), (2L, 1L, 2L)))
+    for (bound <- Seq(-1, 1))
+      assert(Bfs.wavePairs(e, probes, bound = bound) ===
+        Seq((1L, 2L, 2L), (1L, 2L, 2L), (2L, 1L, 2L)), s"bound=$bound")
   }
 
   test("expand is depth-bounded and first-seen wins") {

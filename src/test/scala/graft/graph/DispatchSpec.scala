@@ -231,15 +231,17 @@ class DispatchSpec extends SparkSpec {
     assert(trade <= Quotient.probeBound(spark),
       s"$trade trade edges exceed probeBound — the BFS spine would fall back")
     // single-sourcing is LIVE in the formerly-hardcoded sites: a conf
-    // bound of 1 must reach bfsBounded's and sigmaBounded's guards
+    // bound of 1 must route bfsAuto to its distributed loop (which
+    // answers as its default in-process sweep does) and reach
+    // sigmaBounded's guard
+    import spark.implicits._
+    val tiny = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val tinySeeds = Seq((1L, 1L), (3L, 3L)).toDF("root", "node")
+    val bfsDefault = asRows(Bfs.bfsAuto(tiny, tinySeeds))
     spark.conf.set(Quotient.PROBE_BOUND_KEY, "1")
     try {
-      import spark.implicits._
-      val tiny = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-      val exB = intercept[IllegalArgumentException] {
-        Bfs.bfsBounded(tiny, Seq(1L).toDF("node")).collect()
-      }
-      assert(exB.getMessage.contains("exceeds 1 rows"))
+      assert(asRows(Bfs.bfsAuto(tiny, tinySeeds)) === bfsDefault,
+        "bfsAuto conf-forced distributed route diverged from the in-process sweep")
       val exS = intercept[IllegalArgumentException] {
         Betweenness.sigmaBounded(tiny).collect()
       }

@@ -145,4 +145,18 @@ class FallbackRoutingSpec extends SparkSpec {
     assert((1L to 5L).forall(n => e(n) === 2L)) // 5-cycle ecc = 2
     assert(e(11L) === 1L && e(10L) === 2L && e(12L) === 2L)
   }
+
+  test("pagerank: smallRanks past a conf bound of 1 equals the in-process route") {
+    val edges = testEdges
+    val fast = PageRank.run(edges, 5, bidirectional = true, smallRanks = true)
+    spark.conf.set(Quotient.PROBE_BOUND_KEY, "1")
+    val fallback =
+      try PageRank.run(edges, 5, bidirectional = true, smallRanks = true).localCheckpoint()
+      finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
+    assertRoutesAgree(fast, fallback, "pagerank")
+    // anchor: the 3-path's ends are symmetric and rank below its middle
+    val pr = fallback.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(pr.size === 8)
+    assert(pr(10L) === pr(12L) && pr(11L) > pr(10L))
+  }
 }

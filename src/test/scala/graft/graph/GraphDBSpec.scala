@@ -15,6 +15,33 @@ class GraphDBSpec extends SparkSpec {
   private def freshDb(): GraphDB =
     new GraphDB(spark, Files.createTempDirectory("graft-db").resolve("g").toString)
 
+  /** A seeded random directed graph on nodes 0..n-1 plus a 0→1→…→6
+    * chain (so a small `maxWaves` cuts some targets off) and an
+    * island 100→101 that nothing reaches. */
+  private def randomGraph(rng: scala.util.Random): Seq[(Long, Long)] = {
+    val n = 8 + rng.nextInt(10)
+    val random = for {
+      a <- 0L until n.toLong
+      b <- 0L until n.toLong
+      if a != b && rng.nextInt(10) < 2
+    } yield (a, b)
+    (random ++ (0L until 6L).map(i => (i, i + 1)) :+ (100L, 101L)).distinct
+  }
+
+  /** Probes covering every answer class: reachable pairs, the island
+    * (unreachable), an off-graph source, src == dst on and off the
+    * graph, the chain's far end, and a duplicate probe. */
+  private def probesFor(rng: scala.util.Random): Seq[(Long, Long)] = {
+    val random = Seq.fill(6)((rng.nextInt(8).toLong, rng.nextInt(8).toLong))
+    random ++ Seq((0L, 6L), (0L, 101L), (999L, 1L), (3L, 3L), (999L, 999L),
+      (101L, 100L), (0L, 6L))
+  }
+
+  private def statsOf(edges: DataFrame): DataFrame =
+    edges.agg(countDistinct(col("src")).as("n_nodes"), count(lit(1)).as("n_edges"))
+      .withColumn("avg_degree",
+        round(col("n_edges").cast("double") / col("n_nodes").cast("double"), 2))
+
   private def chain(n: Long): DataFrame = {
     import spark.implicits._
     (0L until n).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("src", "dst")
@@ -136,5 +163,110 @@ class GraphDBSpec extends SparkSpec {
     val btw = db.betweenness().collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(btw(0L) === 0.0 && btw(3L) === 0.0) // chain endpoints carry nothing
     assert(btw(1L) === btw(2L) && btw(1L) > 0.0)
+  }
+
+  test("query and queryBatch on the handle equal the distributed BFS") {
+    import spark.implicits._
+    val rng = new scala.util.Random(4242)
+    for (_ <- 1 to 3) {
+      val db = freshDb()
+      db.init(randomGraph(rng).toDF("src", "dst"))
+      val probes = probesFor(rng)
+      for (maxWaves <- Seq(0, 1, 3, 100)) {
+        // bound 1: the distributed frontier loop, whatever the size
+        val want = Bfs.wavePairs(db.edges, probes, maxWaves, bound = 1)
+        assert(db.queryBatch(probes, maxWaves) === want, s"maxWaves=$maxWaves probes=$probes")
+        probes.zip(want).foreach { case ((a, b), (_, _, w)) =>
+          assert(db.query(a, b, maxWaves) === w, s"query($a, $b, $maxWaves)")
+        }
+      }
+      // the single-pair distributed loop agrees too, cut-off included
+      for ((a, b, mw) <- Seq((0L, 6L, 3), (0L, 6L, 100), (0L, 101L, 100), (999L, 1L, 100)))
+        assert(db.query(a, b, mw) === Bfs.wavePair(db.edges, a, b, mw, bound = 1),
+          s"query($a, $b, $mw)")
+    }
+  }
+
+  test("the handle follows commits, re-inits and a rebuilt root") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-db").resolve("g")
+    val db = new GraphDB(spark, dir.toString)
+    db.init(chain(2).union(Seq((10L, 11L), (11L, 10L)).toDF("src", "dst")))
+    assert(db.query(0L, 10L) === -1L)
+    assert(db.numberEntries() === 6L)
+    // an upsert between two queries changes the answer
+    db.addRelations(Seq((2L, 10L), (10L, 2L)).toDF("src", "dst"))
+    assert(db.query(0L, 10L) === 4L)
+    assert(db.numberEntries() === 8L)
+    // init resets the store to the new snapshot
+    db.init(Seq((5L, 6L)).toDF("src", "dst"))
+    assert(db.query(0L, 1L) === -1L)
+    assert(db.query(5L, 6L) === 2L)
+    assert(db.queryBatch(Seq((0L, 10L), (5L, 6L))) === Seq((0L, 10L, -1L), (5L, 6L, 2L)))
+    assert(db.numberEntries() === 1L)
+    // a root deleted and re-initialised reaches the same version number
+    // with other contents: the old adjacency must not be served
+    val before = graft.sources.GraphStore.latestVersion(spark, dir.toString)
+    graft.util.Scratch.deleteRecursively(dir)
+    var v = 0
+    while (v < before) v = db.init(Seq((7L, 8L), (8L, 9L)).toDF("src", "dst"))
+    assert(v === before)
+    assert(db.query(5L, 6L) === -1L)
+    assert(db.query(7L, 9L) === 3L)
+    assert(db.numberEntries() === 2L)
+    assert(db.stats().head().getLong(0) === 2L)
+  }
+
+  test("a conf probe bound of 1 routes every call to the distributed plans") {
+    import spark.implicits._
+    val rng = new scala.util.Random(99)
+    val dir = Files.createTempDirectory("graft-db").resolve("g").toString
+    new GraphDB(spark, dir).init(randomGraph(rng).toDF("src", "dst"))
+    val probes = probesFor(rng)
+    val local = new GraphDB(spark, dir)
+    val batch = local.queryBatch(probes)
+    val points = probes.map { case (a, b) => local.query(a, b) }
+    val stats = local.stats().collect().toSeq
+    val entries = local.numberEntries()
+    spark.conf.set(Quotient.PROBE_BOUND_KEY, "1")
+    try {
+      val db = new GraphDB(spark, dir)
+      assert(Bfs.probeAdjacency(db.edges).isEmpty, "bound 1 must route past the probe")
+      assert(db.queryBatch(probes) === batch)
+      assert(probes.map { case (a, b) => db.query(a, b) } === points)
+      assert(db.stats().collect().toSeq === stats)
+      assert(db.numberEntries() === entries)
+      // the verdict follows the conf on a handle built under another bound
+      assert(local.queryBatch(probes) === batch)
+    } finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
+  }
+
+  test("stats and numberEntries equal the aggregation, null endpoints and empty store") {
+    import spark.implicits._
+    val db = freshDb()
+    val withNulls = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(2L), Some(3L)),
+      (None, Some(1L)), (Some(4L), None), (None, None), (Some(4L), Some(4L)))
+      .toDF("src", "dst")
+    db.init(withNulls)
+    assert(db.stats().collect().toSeq === statsOf(db.edges).collect().toSeq)
+    assert(db.numberEntries() === db.edges.count())
+    assert(db.numberEntries() === 7L)
+    assert(db.stats().head().getLong(0) === 3L) // 1, 2, 4: null src is no node
+    // null endpoints join nothing on either route
+    val probes = Seq((1L, 3L), (4L, 1L), (4L, 4L), (3L, 1L))
+    assert(db.queryBatch(probes) === Bfs.wavePairs(db.edges, probes, bound = 1))
+
+    val empty = freshDb()
+    empty.init(Seq.empty[(Long, Long)].toDF("src", "dst"))
+    // avg_degree is 0 / 0 here, which ANSI arithmetic raises when it is
+    // evaluated (in a task, on either route); the counts alone must
+    // still read as the aggregation's, so nothing may evaluate it early
+    val counts = Seq("n_nodes", "n_edges").map(col)
+    assert(empty.stats().select(counts: _*).collect().toSeq ===
+      statsOf(empty.edges).select(counts: _*).collect().toSeq)
+    assert(empty.stats().select(counts: _*).head().toSeq === Seq(0L, 0L))
+    assert(empty.numberEntries() === 0L)
+    assert(empty.query(1L, 2L) === -1L && empty.query(1L, 1L) === 1L)
   }
 }

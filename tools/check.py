@@ -7,6 +7,11 @@ round ends: load each Verify output parquet, run the corresponding
 oracle SQL in DuckDB over the same test tables, and compare rows,
 schema (column names) and values exactly after sorting.
 
+Every key in Verify's oracle_sql.json is checked (or only the named
+ones): a key with no output directory — its Verify run threw — prints
+MISSING and counts as a failure. Output directories with no oracle SQL
+get a rows-only line.
+
 Usage: python3 tools/check.py <verify_out_dir> <sf_dir> [name ...]
 """
 import json, math, os, sys
@@ -34,10 +39,16 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    n_pass = n_fail = n_missing = 0
+    written = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
+    for name in sorted(set(oracle) | written | only):
+        if only and name not in only:
+            continue
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d) or (only and name not in only):
+        if name not in written:
+            print(f"{name}: MISSING (no output directory)")
+            n_missing += 1
+            n_fail += 1
             continue
         spark = con.execute(f"SELECT * FROM read_parquet('{d}/*.parquet')").df()
         if name not in oracle:
@@ -66,7 +77,7 @@ def main():
         else:
             n_fail += 1
         print(f"{name}: {status} rows={len(spark)}/{len(ora)} schema={ok_schema} ({sc if not ok_schema else ''}{oc if not ok_schema else ''})")
-    print(f"== {n_pass} pass, {n_fail} fail")
+    print(f"== {n_pass} pass, {n_fail} fail ({n_missing} missing)")
     sys.exit(1 if n_fail else 0)
 
 
