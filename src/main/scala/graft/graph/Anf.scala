@@ -26,9 +26,9 @@ import graft.functions.GraftFunctions
   */
 object Anf {
 
-  /** Round-loop storage discipline (KCore/KTruss, round-10): counters
-    * checkpoint EAGERLY on DISK each round and the previous round's
-    * blocks are freed as soon as the successor materializes. The
+  /** Round-loop storage: counters checkpoint EAGERLY on DISK each
+    * round and the [[Superstep]] driver frees the previous round's
+    * blocks as soon as the successor materializes. The
     * per-node 256-byte registers make the counter table the heaviest
     * vertex state of any iterative engine here — non-eager in-memory
     * checkpoints piled every round's generation into the unified pool
@@ -42,37 +42,31 @@ object Anf {
     import s.implicits._
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     GraftFunctions.register(s)
-    // the slim 2-column edge list, checkpointed once hash-partitioned
-    // on the join key (the other iterative vertex programs' contract)
-    val e = edges.select($"src", $"dst")
-      .repartition($"src").localCheckpoint(false, ROUND_LEVEL)
-    var counters = e.select($"src".as("node")).distinct()
-      .select($"node", GraftFunctions.hllUnit(xxhash64($"node")).as("regs"))
-      .localCheckpoint(true, ROUND_LEVEL)
-    for (_ <- 1 to rounds) {
-      // shuffle_hash: build the vertex-sized counter table, STREAM
-      // the edges — no per-round sort of the edge list, no exchange
-      // on the already-partitioned edge side; the one shuffle per
-      // round is the register-max aggregation, whose map-side combine
-      // caps it at O(V × 256 B) per partition
-      val msgs = e.join(counters.hint("shuffle_hash"), e("src") === counters("node"))
-        .select(e("dst").as("node"), $"regs")
-      val next = msgs.union(counters)
-        .groupBy($"node")
-        .agg(GraftFunctions.hllMerge($"regs").as("regs"))
-        .localCheckpoint(true, ROUND_LEVEL)
-      KTruss.freeCheckpoint(counters) // previous round: dead
-      counters = next
+    Superstep.run { sc =>
+      // the slim 2-column edge list, checkpointed once hash-partitioned
+      // on the join key (the other iterative vertex programs' contract)
+      val e = sc.pin(edges.select($"src", $"dst").repartition($"src"), ROUND_LEVEL,
+        eager = false)
+      val counters0 = sc.pin(e.select($"src".as("node")).distinct()
+        .select($"node", GraftFunctions.hllUnit(xxhash64($"node")).as("regs")), ROUND_LEVEL)
+      val counters = sc.rounds(counters0, rounds)(Seq(_)) { (counters, _) =>
+        // shuffle_hash: build the vertex-sized counter table, STREAM
+        // the edges — no per-round sort of the edge list, no exchange
+        // on the already-partitioned edge side; the one shuffle per
+        // round is the register-max aggregation, whose map-side
+        // combine caps it at O(V × 256 B) per partition
+        val msgs = e.join(counters.hint("shuffle_hash"), e("src") === counters("node"))
+          .select(e("dst").as("node"), $"regs")
+        sc.pin(msgs.union(counters)
+          .groupBy($"node")
+          .agg(GraftFunctions.hllMerge($"regs").as("regs")), ROUND_LEVEL)
+      }
+      // materialized eagerly, so the run frees every loop-long
+      // checkpoint — the edge list AND the last counters generation —
+      // now instead of leaving them for the session
+      sc.pin(counters
+        .select($"node", $"regs", GraftFunctions.hllCard($"regs").as("est")), ROUND_LEVEL)
     }
-    // materialize the output eagerly so every loop-long checkpoint —
-    // the edge list AND the last counters generation — can be freed
-    // now instead of living for the session (the PPR/HITS discipline)
-    val out = counters
-      .select($"node", $"regs", GraftFunctions.hllCard($"regs").as("est"))
-      .localCheckpoint(true, ROUND_LEVEL)
-    KTruss.freeCheckpoint(counters)
-    KTruss.freeCheckpoint(e)
-    out
   }
 
   /** QUOTIENT fast path for the 2-round ANF over the bidirectional

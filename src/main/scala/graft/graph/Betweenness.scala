@@ -100,44 +100,30 @@ object Betweenness {
     * SUM of its wave-(w−1) predecessors' σ — one co-partitioned join +
     * one partial-aggregable sum + one anti-join per wave, the [[Bfs]]
     * loop with path counting riding the aggregation. State is
-    * all-pairs-sized, so the per-wave checkpoints take the KCore
-    * DISK discipline (eager, previous generation freed per wave).
+    * all-pairs-sized, so the per-wave checkpoints live on DISK; the
+    * [[Superstep]] driver frees each wave's predecessor.
     * Emits the same (root, node, wave, sigma) rows as [[sigmaBounded]]
     * (FallbackRoutingSpec pins the multiset). */
-  private[graph] def sigmaDistributed(edges: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.DISK_ONLY
+  private[graph] def sigmaDistributed(edges: DataFrame): DataFrame = Superstep.run { sc =>
+    val lvl = Superstep.Disk
     // distinct: the in-process sweep's adjacency is a SET (a parallel
     // edge contributes one path, not two) — σ must count the same
-    val e = normEdges(edges).distinct().repartition(col("src"))
-      .localCheckpoint(false, lvl)
-    var frontier = e.select(col("src").as("root")).distinct()
+    val e = sc.pin(normEdges(edges).distinct().repartition(col("src")), lvl, eager = false)
+    val (frontier0, n0) = sc.count(e.select(col("src").as("root")).distinct()
       .select(col("root"), col("root").as("node"),
-        lit(1L).as("wave"), lit(1L).as("sigma"))
-      .localCheckpoint(true, lvl)
-    var visited = frontier
-    var wave = 1L
-    var n = frontier.count()
-    while (n > 0L) {
-      wave += 1
-      val next = frontier.join(e, frontier("node") === e("src"))
+        lit(1L).as("wave"), lit(1L).as("sigma")), lvl)
+    // (frontier, visited, frontier rows); waves end when no node is
+    // newly reached, at most one wave per node
+    val (_, visited, _) = sc.loop((frontier0, frontier0, n0), Int.MaxValue,
+        (_: (DataFrame, DataFrame, Long)) => "σ frontier")(st => Seq(st._1, st._2))(
+        (st, _) => st._3 == 0L) { case ((frontier, visited, _), done) =>
+      val (next, n) = sc.count(frontier.join(e, frontier("node") === e("src"))
         .groupBy(frontier("root"), e("dst").as("node"))
         .agg(sum(frontier("sigma")).as("sigma"))
         .join(visited.select("root", "node"), Seq("root", "node"), "left_anti")
-        .select(col("root"), col("node"), lit(wave).as("wave"), col("sigma"))
-        .localCheckpoint(true, lvl)
-      val nextVisited = visited.union(next).localCheckpoint(true, lvl)
-      n = next.count()
-      KTruss.freeCheckpoint(frontier)
-      KTruss.freeCheckpoint(visited)
-      frontier = next
-      visited = nextVisited
+        .select(col("root"), col("node"), lit(done + 2L).as("wave"), col("sigma")), lvl)
+      (next, sc.pin(visited.union(next), lvl), n)
     }
-    // zero-iteration path (empty edge set): visited IS frontier —
-    // freeing it would unpersist the returned checkpoint
-    if (!(frontier eq visited)) KTruss.freeCheckpoint(frontier)
-    // the loop-long edge checkpoint is dead once the final visited
-    // generation is materialized
-    KTruss.freeCheckpoint(e)
     visited
   }
 

@@ -482,35 +482,30 @@ object Bfs {
     * (node, first_wave).
     */
   def expand(edges: DataFrame, seedNodes: DataFrame, depth: Int): DataFrame = {
-    val e = edges.select("src", "dst").repartition(col("src")).persist()
-    // distinct: one output row per seed node however many times a
-    // caller repeats it — the set semantics bfs() applies to seeds.
-    var visited = seedNodes.select(col("node")).distinct()
-      .select(col("node"), lit(0L).as("first_wave"))
-      .localCheckpoint(eager = false)
-    var frontier = visited
-    var wave = 0L
-    // No per-wave isEmpty probe: the loop is depth-bounded (depth is
-    // small by contract), and once a frontier IS empty every later
-    // wave's join is empty-input-fast — cheaper than paying one
-    // scheduler job per wave just to maybe exit early.
-    while (wave < depth) {
-      wave += 1
-      val next = settle(
-        frontier.join(e, frontier("node") === e("src"))
-          .select(e("dst").as("node"))
-          .distinct()
-          .join(visited.select("node"), Seq("node"), "left_anti")
-          .withColumn("first_wave", lit(wave)))
-      visited = settle(visited.union(next))
-      frontier = next
+    Superstep.run { sc =>
+      val e = sc.persist(edges.select("src", "dst").repartition(col("src")), Superstep.Memory)
+      // distinct: one output row per seed node however many times a
+      // caller repeats it — the set semantics bfs() applies to seeds.
+      val visited0 = sc.pin(seedNodes.select(col("node")).distinct()
+        .select(col("node"), lit(0L).as("first_wave")), eager = false)
+      // No per-wave isEmpty probe: the loop is depth-bounded (depth is
+      // small by contract), and once a frontier IS empty every later
+      // wave's join is empty-input-fast — cheaper than paying one
+      // scheduler job per wave just to maybe exit early.
+      val (visited, _) = sc.rounds((visited0, visited0), depth)(st => Seq(st._1, st._2)) {
+        case ((visited, frontier), done) =>
+          val next = sc.pin(frontier.join(e, frontier("node") === e("src"))
+            .select(e("dst").as("node"))
+            .distinct()
+            .join(visited.select("node"), Seq("node"), "left_anti")
+            .withColumn("first_wave", lit(done + 1L)), eager = false)
+          (sc.pin(visited.union(next), eager = false), next)
+      }
+      // The loop runs no actions (that's the point — no per-wave jobs),
+      // so materialize the result ONCE while the edge cache is still
+      // alive; unpersisting first would make the caller's first action
+      // recompute e for every wave.
+      sc.pin(visited)
     }
-    // The loop runs no actions (that's the point — no per-wave jobs),
-    // so materialize the result ONCE while the edge cache is still
-    // alive; unpersisting first would make the caller's first action
-    // recompute e for every wave.
-    val out = visited.localCheckpoint()
-    e.unpersist()
-    out
   }
 }

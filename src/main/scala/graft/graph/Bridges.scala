@@ -121,8 +121,8 @@ object Bridges {
     * CTE), expressed as ONE edge-tagged frontier loop: every open
     * edge's flood shares each wave's join + distinct + anti-join, an
     * edge stops flooding the moment its far endpoint is reached
-    * (non-bridge, the common case), and per-wave state takes the
-    * KCore DISK checkpoint discipline. Work is Σ_e |component(e)| —
+    * (non-bridge, the common case), and per-wave state lives on DISK
+    * under the [[Superstep]] driver. Work is Σ_e |component(e)| —
     * the definitional engine for the out-of-contract route, not the
     * per-key fast path (the shipped graphs probe into the Tarjan
     * pass; two different algorithms pinned equal by
@@ -135,12 +135,11 @@ object Bridges {
     // rewrite then dereferences attributes no child outputs
     // (key-not-found at optimization). The loop is equi-joins over
     // synthetic non-null keys — inferred filters add nothing here.
-    // The result materializes INSIDE the scope (eager checkpoint), so
+    // The result materializes INSIDE the flood (eager checkpoint), so
     // no constraint from these plans escapes to caller analysis.
     // The override lives on a CLONED session (own SessionState, shared
     // SparkContext), so concurrent queries on `s` keep constraint
     // propagation and no restore race exists.
-    val lvl = org.apache.spark.storage.StorageLevel.DISK_ONLY
     val flood = s.newSession()
     // newSession() initializes SQLConf from the context conf, not the
     // caller's runtime settings — carry those over (static/immutable
@@ -149,47 +148,47 @@ object Bridges {
       scala.util.Try(flood.conf.set(k, v))
     }
     flood.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    // hand the input across sessions as a materialized RDD — plans
-    // must not mix SessionStates
-    val cls0 = classes.localCheckpoint(true, lvl)
-    val res = edgeBridgesFlood(flood,
-      flood.createDataFrame(cls0.rdd, cls0.schema))
-    // res is eagerly checkpointed inside the flood; re-root it on the
-    // caller's session so downstream analysis uses s's conf
-    val out = s.createDataFrame(res.rdd, res.schema).localCheckpoint(true, lvl)
-    KTruss.freeCheckpoint(res)
-    KTruss.freeCheckpoint(cls0)
-    out
+    Superstep.run { sc =>
+      // hand the input across sessions as a materialized RDD — plans
+      // must not mix SessionStates
+      val cls0 = sc.pin(classes, Superstep.Disk)
+      val res = edgeBridgesFlood(sc, flood, flood.createDataFrame(cls0.rdd, cls0.schema))
+      // res is eagerly checkpointed inside the flood; re-root it on the
+      // caller's session so downstream analysis uses s's conf
+      sc.pin(s.createDataFrame(res.rdd, res.schema), Superstep.Disk)
+    }
   }
 
-  private def edgeBridgesFlood(s: SparkSession, classes: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    val cls = classes.localCheckpoint(false, lvl)
-    val edges = cls.select(col("brand"), col("size").as("lo"))
+  private def edgeBridgesFlood(sc: Superstep, s: SparkSession,
+                               classes: DataFrame): DataFrame = {
+    val lvl = Superstep.Disk
+    val cls = sc.pin(classes, lvl, eager = false)
+    val edges = sc.pin(cls.select(col("brand"), col("size").as("lo"))
       .join(cls.select(col("brand"), col("size").as("hi")), Seq("brand"))
-      .filter(col("hi") - col("lo") === 1 || col("hi") - col("lo") === 2)
-      .localCheckpoint(false, lvl)
-    val adj = edges.select(col("brand"), col("lo").as("u"), col("hi").as("v"))
-      .union(edges.select(col("brand"), col("hi").as("u"), col("lo").as("v")))
-      .localCheckpoint(false, lvl)
-    var frontier = edges.select(col("brand"), col("lo"), col("hi"),
-        col("lo").as("node"))
-      .localCheckpoint(true, lvl)
-    var visited = frontier
+      .filter(col("hi") - col("lo") === 1 || col("hi") - col("lo") === 2), lvl, eager = false)
+    val adj = sc.pin(edges.select(col("brand"), col("lo").as("u"), col("hi").as("v"))
+      .union(edges.select(col("brand"), col("hi").as("u"), col("lo").as("v"))), lvl,
+      eager = false)
+    val (frontier0, n0) = sc.count(edges.select(col("brand"), col("lo"), col("hi"),
+        col("lo").as("node")), lvl)
     // explicit empty frame (not a checkpointed limit(0) of edges —
     // whose inherited constraints trip Union's constraint rewrite)
-    var reached = s.createDataFrame(
+    val reached0 = s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("brand", org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("lo", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("hi", org.apache.spark.sql.types.LongType))))
-    var n = frontier.count()
-    while (n > 0L) {
+    // (frontier, visited, reached, frontier rows); each wave reaches a
+    // node not visited before for its edge, so the flood ends
+    val (_, _, reached, _) = sc.loop((frontier0, frontier0, reached0, n0), Int.MaxValue,
+        (_: (DataFrame, DataFrame, DataFrame, Long)) => "bridge flood")(
+        st => Seq(st._1, st._2, st._3))((st, _) => st._4 == 0L) {
+        case ((frontier, visited, reached, _), _) =>
       // qualified aliases: the loop-carried frontier inherits adj's
       // attribute ids through the checkpoints (localCheckpoint
       // preserves exprIds), so an unqualified self-join is ambiguous
-      val next = frontier.as("f")
+      val next = sc.pin(frontier.as("f")
         .join(adj.as("g"), col("f.brand") === col("g.brand") && col("f.node") === col("g.u"))
         // skip the excluded edge in either direction
         .filter(!(col("f.node") === col("f.lo") && col("g.v") === col("f.hi")) &&
@@ -197,38 +196,20 @@ object Bridges {
         .select(col("f.brand").as("brand"), col("f.lo").as("lo"),
           col("f.hi").as("hi"), col("g.v").as("node"))
         .distinct()
-        .join(visited, Seq("brand", "lo", "hi", "node"), "left_anti")
-        .localCheckpoint(true, lvl)
-      val newReached = reached.union(
-          next.filter(col("node") === col("hi")).select(col("brand"), col("lo"), col("hi")))
-        .localCheckpoint(true, lvl)
+        .join(visited, Seq("brand", "lo", "hi", "node"), "left_anti"), lvl)
+      val newReached = sc.pin(reached.union(
+          next.filter(col("node") === col("hi")).select(col("brand"), col("lo"), col("hi"))),
+        lvl)
       // resolved edges stop flooding (their remaining frontier is dead
       // work); earlier-resolved edges cannot re-enter — their frontier
       // rows were dropped the wave they resolved
-      val nextFrontier = next.join(newReached, Seq("brand", "lo", "hi"), "left_anti")
-        .localCheckpoint(true, lvl)
-      val nextVisited = visited.union(next).localCheckpoint(true, lvl)
-      n = nextFrontier.count()
-      KTruss.freeCheckpoint(frontier)
-      KTruss.freeCheckpoint(visited)
-      KTruss.freeCheckpoint(reached)
-      KTruss.freeCheckpoint(next)
-      frontier = nextFrontier
-      visited = nextVisited
-      reached = newReached
+      val (nextFrontier, n) =
+        sc.count(next.join(newReached, Seq("brand", "lo", "hi"), "left_anti"), lvl)
+      (nextFrontier, sc.pin(visited.union(next), lvl), newReached, n)
     }
-    KTruss.freeCheckpoint(frontier)
-    KTruss.freeCheckpoint(visited)
-    val out = edges
+    sc.pin(edges
       .join(reached.withColumn("hit", lit(true)), Seq("brand", "lo", "hi"), "left")
       .select(col("brand"), col("lo").as("size_lo"), col("hi").as("size_hi"),
-        col("hit").isNull.as("is_bridge"))
-      .localCheckpoint(true, lvl)
-    // out is materialized — every loop-long lazy checkpoint is dead
-    KTruss.freeCheckpoint(reached)
-    KTruss.freeCheckpoint(adj)
-    KTruss.freeCheckpoint(edges)
-    KTruss.freeCheckpoint(cls)
-    out
+        col("hit").isNull.as("is_bridge")), lvl)
   }
 }

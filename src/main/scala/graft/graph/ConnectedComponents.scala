@@ -121,8 +121,6 @@ object ConnectedComponents {
       // lets through) skip the except too.
       val nextFp = fingerprint(next)
       converged = nextFp == curFp && next.except(cur).isEmpty
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        System.err.println(s"[cc] round $round fp=$nextFp converged=$converged")
       cur = next
       curFp = nextFp
     }

@@ -113,82 +113,63 @@ object DagDepth {
     * per-round max-length guard throws the contract violation LOUDLY
     * before the table could grow past it. depth(c) is then the max
     * incoming path length (0 for sources). Per-round state is
-    * checkpointed with the KCore DISK discipline. Returns
+    * checkpointed on DISK under the [[Superstep]] driver. Returns
     * (brand, size, depth) for every class. */
   private[graph] def classDepthDistributed(s: SparkSession,
                                            classes: DataFrame): DataFrame = {
     import s.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    val cls = classes.select($"brand", $"size").distinct()
-      .localCheckpoint(false, lvl)
-    // P_0: the directed class edges under the size-up rule,
-    // pred --(+1|+2)--> succ, each a longest-≤1-edge path of length 1
-    var paths = cls.select($"brand", $"size".as("u"))
-      .join(cls.select($"brand", $"size".as("v")), Seq("brand"))
-      .filter($"v" - $"u" === 1 || $"v" - $"u" === 2)
-      .select($"brand", $"u", $"v", lit(1L).as("len"))
-      .localCheckpoint(true, lvl)
-    // fixpoint in ⌈log₂ MAX_CHAIN⌉ productive rounds + 1 to observe;
-    // convergence rides the (monotone, bounded: ≤ |cls|·118 rows of
-    // len ≤ 59) length SUM, one scalar per round
-    val maxIter = 64 - java.lang.Long.numberOfLeadingZeros(MAX_CHAIN) + 2
-    var total = paths.agg(coalesce(sum($"len"), lit(0L))).as[Long].head()
-    var converged = total == 0L // no edges: every class is depth 0
-    var iter = 0
-    def freeAndThrow(depth: Long): Nothing = {
-      KTruss.freeCheckpoint(paths)
-      KTruss.freeCheckpoint(cls)
-      throw new IllegalArgumentException(
-        s"requirement failed: class-DAG chain depth $depth exceeds the declared bound of $MAX_CHAIN " +
-          "(size domain wider than expected) — raise the bound in BOTH engines")
+    val lvl = Superstep.Disk
+    Superstep.run { sc =>
+      val cls = sc.pin(classes.select($"brand", $"size").distinct(), lvl, eager = false)
+      // one generation: the pair table with its length sum and longest
+      // length, both aggregated by the checkpoint's own job, and
+      // whether the previous round proved the fixpoint
+      def pairs(df: DataFrame): (DataFrame, Long, Long) = {
+        val (cp, r) = sc.observe(df, lvl,
+          coalesce(sum($"len"), lit(0L)), coalesce(max($"len"), lit(0L)))
+        (cp, r.getLong(0), r.getLong(1))
+      }
+      // P_0: the directed class edges under the size-up rule,
+      // pred --(+1|+2)--> succ, each a longest-≤1-edge path of length 1
+      val (paths0, total0, _) = pairs(cls.select($"brand", $"size".as("u"))
+        .join(cls.select($"brand", $"size".as("v")), Seq("brand"))
+        .filter($"v" - $"u" === 1 || $"v" - $"u" === 2)
+        .select($"brand", $"u", $"v", lit(1L).as("len")))
+      // fixpoint in ⌈log₂ MAX_CHAIN⌉ productive rounds + 1 to observe;
+      // convergence rides the (monotone, bounded: ≤ |cls|·118 rows of
+      // len ≤ 59) length SUM. No edges: every class is depth 0.
+      val maxIter = 64 - java.lang.Long.numberOfLeadingZeros(MAX_CHAIN) + 2
+      val (paths, _, _) = sc.loop((paths0, total0, total0 == 0L), maxIter,
+          (_: (DataFrame, Long, Boolean)) => "class-DAG path doubling " +
+            s"(chain deeper than the declared bound of $MAX_CHAIN; raise it in BOTH engines)")(
+          st => Seq(st._1))((st, _) => st._3) { case ((paths, total, _), done) =>
+        val composed = paths.as("a")
+          .join(paths.as("b"),
+            col("a.brand") === col("b.brand") && col("a.v") === col("b.u"))
+          .select(col("a.brand").as("brand"), col("a.u").as("u"),
+            col("b.v").as("v"), (col("a.len") + col("b.len")).as("len"))
+        val (next, t2, longest) = pairs(paths.union(composed)
+          .groupBy($"brand", $"u", $"v")
+          .agg(max($"len").as("len")))
+        // the guard that keeps the doubling bounded: past the contract,
+        // lengths (and the pair table) would grow geometrically — bail
+        // the moment the contract is violated, same message as the DP
+        require(longest <= MAX_CHAIN,
+          s"class-DAG chain depth $longest exceeds the declared bound of $MAX_CHAIN " +
+            "(size domain wider than expected) — raise the bound in BOTH engines")
+        // fixpoint proofs, cheapest first: a longest path strictly
+        // below this round's 2^(done+1)-edge coverage means NO longer
+        // path exists (any longer one would have a covered prefix
+        // exceeding it) — that skips the usual observe-no-change round;
+        // the monotone length sum is the general backstop
+        (next, t2, longest < (1L << (done + 1)) || t2 == total)
+      }
+      // depth(c) = longest incoming path; sources (no incoming pair) = 0
+      sc.pin(cls
+        .join(paths.groupBy($"brand", $"v").agg(max($"len").as("d"))
+            .select($"brand", $"v".as("size"), $"d"),
+          Seq("brand", "size"), "left")
+        .select($"brand", $"size", coalesce($"d", lit(0L)).as("depth")), lvl)
     }
-    while (!converged && iter < maxIter) {
-      val composed = paths.as("a")
-        .join(paths.as("b"),
-          col("a.brand") === col("b.brand") && col("a.v") === col("b.u"))
-        .select(col("a.brand").as("brand"), col("a.u").as("u"),
-          col("b.v").as("v"), (col("a.len") + col("b.len")).as("len"))
-      val next = paths.union(composed)
-        .groupBy($"brand", $"u", $"v")
-        .agg(max($"len").as("len"))
-        .localCheckpoint(true, lvl)
-      val (t2, longest) = next
-        .agg(coalesce(sum($"len"), lit(0L)), coalesce(max($"len"), lit(0L)))
-        .as[(Long, Long)].head()
-      KTruss.freeCheckpoint(paths)
-      paths = next
-      // the guard that keeps the doubling bounded: past the contract,
-      // lengths (and the pair table) would grow geometrically — bail
-      // the moment the contract is violated, same message as the DP
-      if (longest > MAX_CHAIN) freeAndThrow(longest)
-      // fixpoint proofs, cheapest first: a longest path strictly
-      // below this round's 2^(iter+1)-edge coverage means NO longer
-      // path exists (any longer one would have a covered prefix
-      // exceeding it) — that skips the usual observe-no-change round;
-      // the monotone length sum is the general backstop
-      converged = longest < (1L << (iter + 1)) || t2 == total
-      total = t2
-      iter += 1
-    }
-    if (!converged) {
-      // unreachable while the guard holds (lengths ≤ MAX_CHAIN force
-      // the fixpoint inside maxIter) — kept as the loud backstop
-      KTruss.freeCheckpoint(paths)
-      KTruss.freeCheckpoint(cls)
-      throw new IllegalStateException(
-        s"class-DAG path doubling did not converge within $maxIter rounds — " +
-          s"chain deeper than the declared bound of $MAX_CHAIN; raise it in BOTH engines")
-    }
-    // depth(c) = longest incoming path; sources (no incoming pair) = 0
-    val depth = cls
-      .join(paths.groupBy($"brand", $"v").agg(max($"len").as("d"))
-          .select($"brand", $"v".as("size"), $"d"),
-        Seq("brand", "size"), "left")
-      .select($"brand", $"size", coalesce($"d", lit(0L)).as("depth"))
-      .localCheckpoint(true, lvl)
-    // the loop-long checkpoints are dead once depth is materialized
-    KTruss.freeCheckpoint(paths)
-    KTruss.freeCheckpoint(cls)
-    depth
   }
 }

@@ -133,14 +133,11 @@ class GraphDB(s: SparkSession, root: String) {
   /** Graph stats (get_stats, main.py:307-332): distinct source nodes,
     * edge count, average degree rounded to 2 dp — over a one-row local
     * frame of the handle's counts, or past the bound an aggregation of
-    * the snapshot; the same `avg_degree` expression either way. A
-    * version with no source node keeps the aggregation: its 0 / 0
-    * `avg_degree` raises DIVIDE_BY_ZERO (ANSI) only if a caller reads
-    * that column, while the optimizer folds a local frame's projection
-    * eagerly, whatever the caller selects. */
+    * the snapshot; the same `avg_degree` expression either way, null
+    * on a version with no source node. */
   def stats(): DataFrame = {
     val counts = local() match {
-      case Some(adj) if adj.srcNodes > 0 =>
+      case Some(adj) =>
         s.createDataFrame(java.util.List.of(Row(adj.srcNodes, adj.rows)),
           StructType(Seq("n_nodes", "n_edges").map(StructField(_, LongType, nullable = false))))
       case _ =>
@@ -149,7 +146,7 @@ class GraphDB(s: SparkSession, root: String) {
           count(lit(1)).as("n_edges"))
     }
     counts.withColumn("avg_degree",
-      round(col("n_edges").cast("double") / col("n_nodes").cast("double"), 2))
+      round(try_divide(col("n_edges").cast("double"), col("n_nodes").cast("double")), 2))
   }
 
   /** Per-node out-degrees (the reference's secondary-index lookups,

@@ -464,7 +464,7 @@ object GraphPack extends QueryPack {
       GraphBuilder.tradeEdges(s, d)
         .agg(countDistinct($"src").as("n_nodes"), count(lit(1)).as("n_edges"))
         .withColumn("avg_degree",
-          round($"n_edges".cast("double") / $"n_nodes".cast("double"), 2))
+          round(try_divide($"n_edges".cast("double"), $"n_nodes".cast("double")), 2))
     },
 
     // A6: degrees (the reference's secondary-index lookups by

@@ -95,9 +95,9 @@ object Hits {
     }.toMap
   }
 
-  /** Round-loop storage discipline (the KCore/KTruss one, round-10):
-    * per-round score checkpoints are EAGER on DISK and the previous
-    * round's blocks are freed as soon as the successor materializes.
+  /** Round-loop storage: per-round score checkpoints are EAGER on
+    * DISK and the [[Superstep]] driver frees the previous round's
+    * blocks as soon as the successor materializes.
     * Non-eager in-memory checkpoints deferred every round's
     * materialization to the final action, at which point iters
     * generations of vertex-sized blocks coexisted in the unified pool
@@ -113,58 +113,41 @@ object Hits {
     *         dst; sinks have hub 0.0, sources authority 0.0. */
   def run(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"HITS needs at least one round, got $iters")
-    val e = edges.select(col("src"), col("dst"))
-      .persist(ROUND_LEVEL)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = false)
-    // h lives only on potential hubs (sources), a only on potential
-    // authorities (sinks) during the loop — the zero rows would never
-    // contribute a message, so they join back once at the end.
-    var h = e.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(1.0).as("h"))
-      .localCheckpoint(true, ROUND_LEVEL)
-    var a: DataFrame = null
-    for (_ <- 1 to iters) {
-      // aRaw checkpoints lazily (its blocks are written while the
-      // eager `a` below materializes); `a` reads it once more inside
-      // the same job via the broadcast total, then it is dead
-      val aRaw = e.join(h, e("src") === h("node"))
-        .select(e("dst"), col("h").cast(M).as("c"))
-        .groupBy(col("dst").as("anode")).agg(sum(col("c")).cast(S).as("araw"))
-        .localCheckpoint(false, ROUND_LEVEL)
-      val aTot = aRaw.agg(sum(col("araw")).cast(S).as("atot"))
-      val aNext = aRaw.crossJoin(broadcast(aTot))
-        .select(col("anode").as("node"),
-          (col("araw").cast("double") / col("atot").cast("double")).as("a"))
-        .localCheckpoint(true, ROUND_LEVEL)
-      KTruss.freeCheckpoint(aRaw)
-      if (a != null) KTruss.freeCheckpoint(a) // previous round's a: dead
-      a = aNext
-      val hRaw = e.join(a, e("dst") === a("node"))
-        .select(e("src"), col("a").cast(M).as("c"))
-        .groupBy(col("src").as("hnode")).agg(sum(col("c")).cast(S).as("hraw"))
-        .localCheckpoint(false, ROUND_LEVEL)
-      val hTot = hRaw.agg(sum(col("hraw")).cast(S).as("htot"))
-      val hNext = hRaw.crossJoin(broadcast(hTot))
-        .select(col("hnode").as("node"),
-          (col("hraw").cast("double") / col("htot").cast("double")).as("h"))
-        .localCheckpoint(true, ROUND_LEVEL)
-      KTruss.freeCheckpoint(hRaw)
-      KTruss.freeCheckpoint(h) // previous round's h: dead
-      h = hNext
+    Superstep.run { sc =>
+      val e = sc.persist(edges.select(col("src"), col("dst")), ROUND_LEVEL)
+      val nodes = sc.pin(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct(), eager = false)
+      // h lives only on potential hubs (sources), a only on potential
+      // authorities (sinks) during the loop — the zero rows would never
+      // contribute a message, so they join back once at the end.
+      val h0 = sc.pin(e.select(col("src").as("node")).distinct()
+        .select(col("node"), lit(1.0).as("h")), ROUND_LEVEL)
+      // one L1-normalized half-round: raw = Σ_dec over `msgs`' (key, c)
+      // rows, score = dbl(raw) / dbl(Σ raw). The raw table checkpoints
+      // lazily (its blocks are written while the eager score below
+      // materializes, which reads it once more through the broadcast
+      // total); the driver frees it with the round.
+      def normalized(msgs: DataFrame, score: String): DataFrame = {
+        val raw = sc.pin(msgs.groupBy(col("key")).agg(sum(col("c")).cast(S).as("raw")),
+          ROUND_LEVEL, eager = false)
+        val tot = raw.agg(sum(col("raw")).cast(S).as("tot"))
+        sc.pin(raw.crossJoin(broadcast(tot))
+          .select(col("key").as("node"),
+            (col("raw").cast("double") / col("tot").cast("double")).as(score)), ROUND_LEVEL)
+      }
+      val (a, h) = sc.rounds((Option.empty[DataFrame], h0), iters)(st => st._1.toSeq :+ st._2) {
+        case ((_, h), _) =>
+          val a = normalized(e.join(h, e("src") === h("node"))
+            .select(e("dst").as("key"), col("h").cast(M).as("c")), "a")
+          (Some(a), normalized(e.join(a, e("dst") === a("node"))
+            .select(e("src").as("key"), col("a").cast(M).as("c")), "h"))
+      }
+      sc.pin(nodes
+        .join(h, Seq("node"), "left")
+        .join(a.get, Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("h"), lit(0.0)).as("hub"),
+          coalesce(col("a"), lit(0.0)).as("authority")))
     }
-    val out = nodes
-      .join(h, Seq("node"), "left")
-      .join(a, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("h"), lit(0.0)).as("hub"),
-        coalesce(col("a"), lit(0.0)).as("authority"))
-      .localCheckpoint()
-    e.unpersist()
-    KTruss.freeCheckpoint(h)
-    KTruss.freeCheckpoint(a)
-    KTruss.freeCheckpoint(nodes)
-    out
   }
 }

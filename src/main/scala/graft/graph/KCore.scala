@@ -56,13 +56,13 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  /** Edge checkpoints live on DISK (the KTruss discipline): the edge
-    * set is the only edge-sized state and at a bulk-round boundary two
-    * copies coexist — at the 52M-edge sf1x rung in-memory copies
+  /** Edge checkpoints live on DISK: the edge set is the only
+    * edge-sized state and at a bulk-round boundary two copies
+    * coexist — at the 52M-edge sf1x rung in-memory copies
     * crowded the unified pool's protected storage region and starved
     * the degree aggregation (UNABLE_TO_ACQUIRE_MEMORY). The degree
-    * table and doomed set are VERTEX-sized (orders of magnitude
-    * smaller), so they ride the default memory-first level. */
+    * table is VERTEX-sized (orders of magnitude smaller), so it
+    * rides the default memory-first level. */
   private val EDGE_LEVEL = org.apache.spark.storage.StorageLevel.DISK_ONLY
 
   /** A round whose doomed set exceeds this fraction of the surviving
@@ -77,133 +77,118 @@ object KCore {
     * fires long before this one at any realistic vertex count. */
   private[graph] val BROADCAST_CAP = 4L * 1000 * 1000
 
+  /** One peel generation: the edge set (a lazy plan until `onDisk`),
+    * the checkpointed degree table, its row count and how many of its
+    * rows are doomed (deg < k) — both counted by the checkpoint's own
+    * job. */
+  private final case class Peel(edges: DataFrame, onDisk: Boolean, deg: DataFrame,
+                                alive: Long, doomed: Long)
+
   def run(s: SparkSession, edges0: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
     import s.implicits._
     // k = 0 would make the bulk rounds' explicit deg=0 rows (see
     // below) permanent members of a "0-core" the original semantics
     // never defined — refuse the degenerate parameter loudly
     require(k >= 1, s"k-core needs k >= 1, got $k")
-    val free = KTruss.freeCheckpoint _
-    // LAZY edge materialization (round 14): the up-front edge-sized
-    // DISK checkpoint is pure overhead when the cascade is shallow —
-    // at the sf1x rung the widened part graph converges in ONE round,
-    // so the old eager checkpoint wrote ~52M rows to disk that were
-    // scanned back exactly once. The edge set stays a lazy plan until
-    // a round proves repeated scans are coming: a bulk rewrite
-    // checkpoints its PRUNED set (as before), and a delta round in
-    // the cascade tail (iter >= 1) checkpoints before scanning. Until
-    // then each scan re-evaluates the (cheap, join-built) edge plan —
-    // at most two extra evaluations, traded against an edge-sized
-    // write + read-back.
-    var edges = edges0
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-    // lazy evaluation re-reads the edge PLAN up to three times (degree
-    // build, round-0 delta scan, tail pin) — only sound when every
-    // evaluation yields the same rows. An unstable input plan is
-    // pinned eagerly instead, restoring the one-materialization
-    // guarantee the eager checkpoint used to give every caller
-    // (round-14 review; probe single-sourced in [[PlanStability]],
-    // round-15 — see there for what it can and cannot see; the
-    // residual contract on edges0 is leaf determinism on re-scan, and
-    // every in-repo caller feeds parquet scans or checkpointed
-    // frames).
-    var edgesOnDisk = false
-    if (PlanStability.isUnstable(edges0)) {
-      edges = edges.localCheckpoint(true, EDGE_LEVEL)
-      edgesOnDisk = true
-    }
-    def freeEdges(): Unit = if (edgesOnDisk) free(edges)
-    var deg = edges.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    var aliveV = deg.count()
-    var converged = aliveV == 0L
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val doomed = deg.filter($"deg" < k).select($"node").localCheckpoint(true)
-      val nDoomed = doomed.count()
-      if (nDoomed == 0L && iter > 0) {
-        free(doomed)
-        converged = true
-      } else if ((iter == 0 && aliveV > BROADCAST_CAP) ||
-        nDoomed * REWRITE_FRACTION > aliveV || nDoomed > BROADCAST_CAP) {
-        // bulk wave: induce the edge set on the survivors and restart
-        // the degree table from it. Survivors whose induced OUT-degree
-        // hits 0 must keep an EXPLICIT deg=0 row (left join, not the
-        // bare groupBy): on directed input such a vertex can still
-        // carry surviving IN-edges, and if it silently left the table
-        // no doomed set could ever name it — its in-edges would
-        // inflate other survivors' degrees forever and the loop could
-        // converge on a wrong core (second review pass; symmetric
-        // input cannot create one-sided sinks, so the shipped keys
-        // never hit this). With the row kept, the vertex is doomed
-        // next round and the delta machinery subtracts its in-edges
-        // like any other casualty.
-        val alive = deg.filter($"deg" >= k).select($"node")
-        val pruned = edges
-          .join(alive.select($"node".as("src")), Seq("src"), "left_semi")
-          .join(alive.select($"node".as("dst")), Seq("dst"), "left_semi")
-          .localCheckpoint(true, EDGE_LEVEL)
-        val deg2 = alive
-          .join(pruned.groupBy($"src".as("node")).agg(count(lit(1)).as("deg")),
-            Seq("node"), "left")
-          .select($"node", coalesce($"deg", lit(0L)).as("deg"))
-          .localCheckpoint(true)
-        aliveV = deg2.count()
-        freeEdges(); free(deg); free(doomed)
-        edges = pruned
-        edgesOnDisk = true
-        deg = deg2
-      } else {
-        // delta round: per-survivor losses = edges into the doomed
-        // set (inner join keeps bag multiplicity; the doomed set is
-        // distinct by construction — it comes out of a groupBy).
-        // A tail delta round (iter >= 1) is the signal that the
-        // cascade will keep re-scanning the same edge set — pin it to
-        // disk now if it is still a lazy plan.
-        if (iter >= 1 && !edgesOnDisk) {
-          edges = edges.localCheckpoint(true, EDGE_LEVEL)
-          edgesOnDisk = true
-        }
-        val lostEdges =
-          if (iter > 0)
-            edges.join(broadcast(doomed.select($"node".as("dst"))), Seq("dst"))
-          else
-            // round 1 only: edges are lost to the doomed set OR to
-            // PURE SINKS (dst with no degree row — see object doc).
-            // Both lookups are broadcast hash joins pipelined into
-            // ONE whole-stage-codegen pass over the edge set
-            // (broadcastability of deg is guarded by the bulk-forcing
-            // condition above).
-            edges
-              .join(broadcast(doomed.select($"node".as("dst"), lit(true).as("__doomed"))),
-                Seq("dst"), "left")
-              .join(broadcast(deg.select($"node".as("dst"), lit(true).as("__hasdeg"))),
-                Seq("dst"), "left")
-              .filter(coalesce($"__doomed", lit(false)) || $"__hasdeg".isNull)
-        val deltas = lostEdges
-          .groupBy($"src".as("node")).agg(count(lit(1)).as("lost"))
-        val deg2 = deg
-          .join(broadcast(doomed), Seq("node"), "left_anti")
-          .join(deltas, Seq("node"), "left")
-          .select($"node", ($"deg" - coalesce($"lost", lit(0L))).as("deg"))
-          .localCheckpoint(true) // eager: materialized here
-        aliveV -= nDoomed // delta rounds only ever remove the doomed
-        free(deg); free(doomed)
-        deg = deg2
+    Superstep.run { sc =>
+      // the degree table's checkpoint job also counts its rows and its
+      // doomed rows — the next round's bulk/delta decision and the halt
+      def degTable(df: DataFrame): (DataFrame, Long, Long) = {
+        val (cp, r) = sc.observe(df, Superstep.Memory,
+          count(lit(1)), count(when($"deg" < k, lit(1))))
+        (cp, r.getLong(0), r.getLong(1))
       }
-      iter += 1
+      // LAZY edge materialization (round 14): the up-front edge-sized
+      // DISK checkpoint is pure overhead when the cascade is shallow —
+      // at the sf1x rung the widened part graph converges in ONE round,
+      // so the old eager checkpoint wrote ~52M rows to disk that were
+      // scanned back exactly once. The edge set stays a lazy plan until
+      // a round proves repeated scans are coming: a bulk rewrite
+      // checkpoints its PRUNED set (as before), and a delta round in
+      // the cascade tail (round >= 1) checkpoints before scanning.
+      // Until then each scan re-evaluates the (cheap, join-built) edge
+      // plan — at most two extra evaluations, traded against an
+      // edge-sized write + read-back.
+      val plan = edges0
+        .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      // lazy evaluation re-reads the edge PLAN up to three times
+      // (degree build, round-0 delta scan, tail pin) — only sound when
+      // every evaluation yields the same rows. An unstable input plan
+      // is pinned eagerly instead (probe single-sourced in
+      // [[PlanStability]] — see there for what it can and cannot see;
+      // the residual contract on edges0 is leaf determinism on
+      // re-scan, and every in-repo caller feeds parquet scans or
+      // checkpointed frames).
+      val unstable = PlanStability.isUnstable(edges0)
+      val edges = if (unstable) sc.pin(plan, EDGE_LEVEL) else plan
+      val (deg0, alive0, doomed0) =
+        degTable(edges.groupBy($"src".as("node")).agg(count(lit(1)).as("deg")))
+      val last = sc.loop(Peel(edges, unstable, deg0, alive0, doomed0), maxIter,
+          (p: Peel) => s"k-core peeling (${p.alive} vertices still cascading)")(
+          p => Seq(p.edges, p.deg))(
+          // round 0 always runs: it subtracts the sink losses
+          (p, done) => p.alive == 0L || (done > 0 && p.doomed == 0L)) { (p, done) =>
+        val doomed = p.deg.filter($"deg" < k).select($"node")
+        if ((done == 0 && p.alive > BROADCAST_CAP) ||
+          p.doomed * REWRITE_FRACTION > p.alive || p.doomed > BROADCAST_CAP) {
+          // bulk wave: induce the edge set on the survivors and restart
+          // the degree table from it. Survivors whose induced
+          // OUT-degree hits 0 must keep an EXPLICIT deg=0 row (left
+          // join, not the bare groupBy): on directed input such a
+          // vertex can still carry surviving IN-edges, and if it
+          // silently left the table no doomed set could ever name it —
+          // its in-edges would inflate other survivors' degrees forever
+          // and the loop could converge on a wrong core (symmetric
+          // input cannot create one-sided sinks, so the shipped keys
+          // never hit this). With the row kept, the vertex is doomed
+          // next round and the delta machinery subtracts its in-edges
+          // like any other casualty.
+          val alive = p.deg.filter($"deg" >= k).select($"node")
+          val pruned = sc.pin(p.edges
+            .join(alive.select($"node".as("src")), Seq("src"), "left_semi")
+            .join(alive.select($"node".as("dst")), Seq("dst"), "left_semi"), EDGE_LEVEL)
+          val (deg2, n, d) = degTable(alive
+            .join(pruned.groupBy($"src".as("node")).agg(count(lit(1)).as("deg")),
+              Seq("node"), "left")
+            .select($"node", coalesce($"deg", lit(0L)).as("deg")))
+          Peel(pruned, onDisk = true, deg2, n, d)
+        } else {
+          // delta round: per-survivor losses = edges into the doomed
+          // set (inner join keeps bag multiplicity; the doomed set is
+          // distinct by construction — it comes out of a groupBy).
+          // A tail delta round (round >= 1) is the signal that the
+          // cascade will keep re-scanning the same edge set — pin it
+          // to disk now if it is still a lazy plan.
+          val pinNow = done >= 1 && !p.onDisk
+          val edges = if (pinNow) sc.pin(p.edges, EDGE_LEVEL) else p.edges
+          val lostEdges =
+            if (done > 0)
+              edges.join(broadcast(doomed.select($"node".as("dst"))), Seq("dst"))
+            else
+              // round 1 only: edges are lost to the doomed set OR to
+              // PURE SINKS (dst with no degree row — see object doc).
+              // Both lookups are broadcast hash joins pipelined into
+              // ONE whole-stage-codegen pass over the edge set
+              // (broadcastability of deg is guarded by the
+              // bulk-forcing condition above).
+              edges
+                .join(broadcast(doomed.select($"node".as("dst"), lit(true).as("__doomed"))),
+                  Seq("dst"), "left")
+                .join(broadcast(p.deg.select($"node".as("dst"), lit(true).as("__hasdeg"))),
+                  Seq("dst"), "left")
+                .filter(coalesce($"__doomed", lit(false)) || $"__hasdeg".isNull)
+          val deltas = lostEdges
+            .groupBy($"src".as("node")).agg(count(lit(1)).as("lost"))
+          val (deg2, n, d) = degTable(p.deg
+            .join(broadcast(doomed), Seq("node"), "left_anti")
+            .join(deltas, Seq("node"), "left")
+            .select($"node", ($"deg" - coalesce($"lost", lit(0L))).as("deg")))
+          Peel(edges, p.onDisk || pinNow, deg2, n, d)
+        }
+      }
+      // the result reads the degree table alone — the run frees any
+      // edge blocks as it returns
+      last.deg.select($"node", $"deg".as("core_degree"))
     }
-    // a mid-peel survivor set is NOT the k-core — refuse to return it
-    // (mirrors ConnectedComponents' non-convergence guard; the SQL
-    // oracle's unroll margin emits a poison sentinel for the same case)
-    if (!converged) {
-      freeEdges(); free(deg) // a thrown run must not leak blocks
-      throw new IllegalStateException(
-        s"k-core peeling did not converge within $maxIter rounds ($aliveV vertices still cascading)")
-    }
-    // the result is the (checkpointed) degree table alone — any edge
-    // blocks are dead the moment the loop exits
-    freeEdges()
-    deg.select($"node", $"deg".as("core_degree"))
   }
 }

@@ -31,10 +31,9 @@ import org.apache.spark.sql.functions._
   *      surviving edges, and everything is shuffle-partitioned
   *      equi-join work — no driver state, no disjunctive join.
   *   3. The alive edge set and cumulative dropped set are
-  *      localCheckpointed every round (lineage stays one round deep),
-  *      with the previous round's blocks freed eagerly — the KCore
-  *      contract; the convergence probe rides the same count that
-  *      materializes the checkpoint.
+  *      checkpointed every round by the [[Superstep]] driver (lineage
+  *      stays one round deep); the count of edges the next round
+  *      drops rides the alive checkpoint's own job.
   *
   * Correctness of the decrement: a triangle dies in exactly the round
   * its FIRST edge(s) drop (triangles with a previously-dropped edge
@@ -47,18 +46,6 @@ import org.apache.spark.sql.functions._
   * unroll emits a poison sentinel for the same case).
   */
 object KTruss {
-
-  /** Frees the block-manager storage behind a `localCheckpoint()`ed
-    * DataFrame. Safe no-op for anything else: only a DataFrame whose
-    * analyzed plan IS the checkpoint's `LogicalRDD` (i.e. the direct
-    * result of `localCheckpoint`) is touched, so derived plans that
-    * merely read a checkpoint are never unpersisted through this. */
-  private[graph] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** All triangles of the canonical edge set `e(a, b), a < b` as
     * sorted vertex triples (x < y < z) — each triangle's three edges
@@ -111,32 +98,33 @@ object KTruss {
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .filter($"a" =!= $"b")
       .distinct()
-    // The triangle table is the one WEDGE-LAW-sized artifact of the
-    // peel (≈135M rows at the 4.7M-edge ladder rung, vs edge-sized
-    // alive/dropped): checkpoint it DISK_ONLY so its storage never
-    // squeezes the unified pool's execution side — at default 16g the
-    // MEMORY_AND_DISK blocks pinned ~half the pool and the wedge
-    // join's 32 concurrent tasks died UNABLE_TO_ACQUIRE_MEMORY.
-    // Each peel round reads it once, sequentially — disk-friendly.
-    val tri = triangles(s, edges)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // initial supports; edges in no triangle have support 0 < k−2 and
-    // cannot affect any other edge's support, so they are peeled at
-    // initialization by never entering the alive set
-    var alive = triEdges(tri)
-      .groupBy($"ea".as("a"), $"eb".as("b")).agg(count(lit(1)).as("support"))
-      .localCheckpoint()
-    var dropped = alive.limit(0).select($"a", $"b").localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val newDrop = alive.filter($"support" < k - 2).select($"a", $"b")
-        .localCheckpoint()
-      if (newDrop.count() == 0L) {
-        converged = true
-        // the converged probe's (empty) checkpoint is dead immediately
-        freeCheckpoint(newDrop)
-      } else {
+    Superstep.run { sc =>
+      // The triangle table is the one WEDGE-LAW-sized artifact of the
+      // peel (≈135M rows at the 4.7M-edge ladder rung, vs edge-sized
+      // alive/dropped): checkpoint it DISK_ONLY so its storage never
+      // squeezes the unified pool's execution side — at default 16g
+      // the MEMORY_AND_DISK blocks pinned ~half the pool and the wedge
+      // join's 32 concurrent tasks died UNABLE_TO_ACQUIRE_MEMORY.
+      // Each peel round reads it once, sequentially — disk-friendly.
+      val tri = sc.pin(triangles(s, edges), Superstep.Disk)
+      // the alive table's checkpoint job also counts the edges the
+      // next round drops — the halt statistic
+      def supports(df: DataFrame): (DataFrame, Long) = {
+        val (cp, r) = sc.observe(df, Superstep.Memory, count(when($"support" < k - 2, lit(1))))
+        (cp, r.getLong(0))
+      }
+      // initial supports; edges in no triangle have support 0 < k−2
+      // and cannot affect any other edge's support, so they are peeled
+      // at initialization by never entering the alive set
+      val (alive0, drop0) = supports(triEdges(tri)
+        .groupBy($"ea".as("a"), $"eb".as("b")).agg(count(lit(1)).as("support")))
+      val dropped0 = sc.pin(alive0.limit(0).select($"a", $"b"))
+      val (alive, _, _) = sc.loop((alive0, dropped0, drop0), maxIter,
+          (_: (DataFrame, DataFrame, Long)) => "k-truss peeling (edges still dropping)")(
+          st => Seq(st._1, st._2))((st, _) => st._3 == 0L) { case ((alive, dropped, _), _) =>
+        // lazy: first materialized by the alive checkpoint below
+        val newDrop = sc.pin(alive.filter($"support" < k - 2).select($"a", $"b"),
+          eager = false)
         val te = triEdges(tri)
         // triangles touching a just-dropped edge…
         val cand = te.join(newDrop, onEdge(te, newDrop), "left_semi")
@@ -151,37 +139,15 @@ object KTruss {
         val dec = candEdges.join(newDead, Seq("x", "y", "z"), "left_semi")
           .join(newDrop, onEdge(candEdges, newDrop), "left_anti")
           .groupBy($"ea".as("a"), $"eb".as("b")).agg(count(lit(1)).as("lost"))
-        val nextAlive = alive
+        val (nextAlive, nDrop) = supports(alive
           .join(newDrop, Seq("a", "b"), "left_anti")
           .join(dec, Seq("a", "b"), "left")
           .select($"a", $"b",
-            ($"support" - coalesce($"lost", lit(0L))).as("support"))
-          .localCheckpoint()
-        val nextDropped = dropped.union(newDrop).localCheckpoint()
-        // both new checkpoints are materialized — the previous round's
-        // blocks are dead, so free them NOW: the ContextCleaner
-        // reclaims them only on driver GC, and that lag under batch
-        // memory pressure measured as a 5.3s-vs-21s run-to-run swing
-        freeCheckpoint(alive)
-        freeCheckpoint(dropped)
-        freeCheckpoint(newDrop)
-        alive = nextAlive
-        dropped = nextDropped
+            ($"support" - coalesce($"lost", lit(0L))).as("support")))
+        (nextAlive, sc.pin(dropped.union(newDrop)), nDrop)
       }
-      iter += 1
+      alive.select($"a", $"b", $"support")
     }
-    if (!converged) {
-      // free every live checkpoint before aborting — a thrown run must
-      // not leak block-manager storage into the caller's session
-      freeCheckpoint(tri)
-      freeCheckpoint(alive)
-      freeCheckpoint(dropped)
-      throw new IllegalStateException(
-        s"k-truss peeling did not converge within $maxIter rounds (edges still dropping)")
-    }
-    freeCheckpoint(tri)
-    freeCheckpoint(dropped)
-    alive.select($"a", $"b", $"support")
   }
 
   /** QUOTIENT fast path: the in-process weighted peel + stamp over a

@@ -284,66 +284,58 @@ object Louvain {
       .toSeq.toDF("q", "qa") // qa adjacent to q: e(q, ·) sums m(qa, ·)
     // vertex state (id, q, k, label): the class stamp is a broadcast
     // join (the KTruss/Hits stamp pattern); initial label = own id
-    var st = parts
-      .select(col("node").cast("long").as("id"), col("brand"), col("size").cast("long").as("size"))
-      .join(broadcast(clsDf), Seq("brand", "size"))
-      .select($"id", $"q", $"k", $"id".as("label"))
-      .repartition(col("id"))
-      .localCheckpoint(false)
-    for (i <- 1 to sweeps) {
-      val t0dbg = System.nanoTime()
-      val p = i % 2
-      // community state — one vertex-scale aggregate, eager so both
-      // consumers below read blocks (and last sweep's broadcasts die)
-      val cm = st.groupBy($"label")
-        .agg(sum($"k").as("dsum"), count(lit(1)).as("csize"))
-        .localCheckpoint(true)
-      val t1dbg = System.nanoTime()
-      // m(q, C) -> e(q, C) through the class adjacency
-      val m = st.groupBy($"q", $"label").agg(count(lit(1)).as("mc"))
-      val evc = m.select($"q".as("qa"), $"label".as("c"), $"mc")
-        .join(broadcast(adjDf), "qa")
-        .groupBy($"q", $"c").agg(sum($"mc").as("cnt"))
-      val cand = evc.join(
-        broadcast(cm.select($"label".as("c"), $"dsum".as("dc"), $"csize".as("sc"))),
-        "c")
-      // movers annotated with own-community state (broadcast joins
-      // keep the id partitioning, so the argmax below never exchanges)
-      val x = st.filter($"id" % 2 === lit(p.toLong))
-        .join(broadcast(cm.select($"label", $"dsum".as("da"), $"csize".as("sa"))),
-          "label")
-        .join(broadcast(cand), "q")
-      // IDENTICAL move rule as [[run]], in the same two hash-
-      // aggregable passes (a struct-min argmax would SortAggregate
-      // the full expansion — the q_profile lesson): pass 1 takes the
-      // minimum negated gain + e_vA per mover and applies the
-      // gain > 0 gate; pass 2 re-expands and takes min(c) among the
-      // rows hitting that minimum — the (rawgain DESC, c ASC) order.
-      val rawgain = $"cnt" * lit(t) + $"k" * ($"da" - $"dc" - $"k")
-      val ng = -rawgain
-      val allowed =
-        $"c" =!= $"label" && !($"sa" === 1L && $"sc" === 1L && $"c" > $"label")
-      val pass1 = x
-        .groupBy($"id")
-        .agg(min(when(allowed, ng)).as("mn"),
-          max(when($"c" === $"label", $"cnt")).as("eva"))
-        .filter($"mn".isNotNull &&
-          (-$"mn") - coalesce($"eva", lit(0L)) * lit(t) > 0)
-        .select($"id", $"mn")
-      val moves = x
-        .join(broadcast(pass1), "id")
-        .filter(allowed && ng === $"mn")
-        .groupBy($"id").agg(min($"c").as("new_label"))
-      if (i == 1 && sys.env.contains("GRAFT_LOUVAIN_TRACE"))
-        System.err.println(moves.queryExecution.executedPlan.treeString.take(8000))
-      st = st
-        .join(moves, Seq("id"), "left")
-        .select($"id", $"q", $"k", coalesce($"new_label", $"label").as("label"))
-        .localCheckpoint(true)
-      if (sys.env.contains("GRAFT_LOUVAIN_TRACE"))
-        System.err.println(f"[louvain-q] sweep $i cm=${(t1dbg - t0dbg) / 1e9}%.2f " +
-          f"rest=${(System.nanoTime() - t1dbg) / 1e9}%.2f s")
+    Superstep.run { sc =>
+      val st0 = sc.pin(parts
+        .select(col("node").cast("long").as("id"), col("brand"), col("size").cast("long").as("size"))
+        .join(broadcast(clsDf), Seq("brand", "size"))
+        .select($"id", $"q", $"k", $"id".as("label"))
+        .repartition(col("id")), eager = false)
+      val st = sc.rounds(st0, sweeps)(Seq(_)) { (st, done) =>
+        val p = (done + 1) % 2
+        // community state — one vertex-scale aggregate, eager so both
+        // consumers below read blocks (and last sweep's broadcasts die)
+        val cm = sc.pin(st.groupBy($"label")
+          .agg(sum($"k").as("dsum"), count(lit(1)).as("csize")))
+        // m(q, C) -> e(q, C) through the class adjacency
+        val m = st.groupBy($"q", $"label").agg(count(lit(1)).as("mc"))
+        val evc = m.select($"q".as("qa"), $"label".as("c"), $"mc")
+          .join(broadcast(adjDf), "qa")
+          .groupBy($"q", $"c").agg(sum($"mc").as("cnt"))
+        val cand = evc.join(
+          broadcast(cm.select($"label".as("c"), $"dsum".as("dc"), $"csize".as("sc"))),
+          "c")
+        // movers annotated with own-community state (broadcast joins
+        // keep the id partitioning, so the argmax below never exchanges)
+        val x = st.filter($"id" % 2 === lit(p.toLong))
+          .join(broadcast(cm.select($"label", $"dsum".as("da"), $"csize".as("sa"))),
+            "label")
+          .join(broadcast(cand), "q")
+        // IDENTICAL move rule as [[run]], in the same two hash-
+        // aggregable passes (a struct-min argmax would SortAggregate
+        // the full expansion — the q_profile lesson): pass 1 takes the
+        // minimum negated gain + e_vA per mover and applies the
+        // gain > 0 gate; pass 2 re-expands and takes min(c) among the
+        // rows hitting that minimum — the (rawgain DESC, c ASC) order.
+        val rawgain = $"cnt" * lit(t) + $"k" * ($"da" - $"dc" - $"k")
+        val ng = -rawgain
+        val allowed =
+          $"c" =!= $"label" && !($"sa" === 1L && $"sc" === 1L && $"c" > $"label")
+        val pass1 = x
+          .groupBy($"id")
+          .agg(min(when(allowed, ng)).as("mn"),
+            max(when($"c" === $"label", $"cnt")).as("eva"))
+          .filter($"mn".isNotNull &&
+            (-$"mn") - coalesce($"eva", lit(0L)) * lit(t) > 0)
+          .select($"id", $"mn")
+        val moves = x
+          .join(broadcast(pass1), "id")
+          .filter(allowed && ng === $"mn")
+          .groupBy($"id").agg(min($"c").as("new_label"))
+        sc.pin(st
+          .join(moves, Seq("id"), "left")
+          .select($"id", $"q", $"k", coalesce($"new_label", $"label").as("label")))
+      }
+      st.select($"id", $"label")
     }
-    st.select($"id", $"label")
   }
 }

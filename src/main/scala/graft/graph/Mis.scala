@@ -22,19 +22,20 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: one partial-aggregable min-hash groupBy
   * over the live edge set, one anti-join removal, two semi-join edge
-  * prunes — co-partitioned equi-joins only, localCheckpointed so
-  * lineage stays one round deep; the convergence probe rides the
-  * checkpoint's count. Non-convergence throws (KCore's contract).
+  * prunes — co-partitioned equi-joins only, checkpointed by the
+  * [[Superstep]] driver so lineage stays one round deep; the
+  * undecided count rides the checkpoint's own job, and
+  * non-convergence throws.
   */
 object Mis {
 
-  /** Round-loop checkpoints live on DISK with eager per-round frees
-    * (the KCore/KTruss discipline): the loop's working state is
-    * edge-sized, two generations coexist at every round boundary, and
-    * each is read at most twice per round — in-memory copies starved
-    * the unified pool at the 52M-edge sf1x rung on a 16g driver
-    * (SCALING.md footnote ³); on disk the loop is memory-bounded at
-    * any edge count. */
+  /** Round-loop checkpoints live on DISK, each generation freed by
+    * the [[Superstep]] driver once the next exists: the loop's working
+    * state is edge-sized, two generations coexist at every round
+    * boundary, and each is read at most twice per round — in-memory
+    * copies starved the unified pool at the 52M-edge sf1x rung on a
+    * 16g driver (SCALING.md footnote ³); on disk the loop is
+    * memory-bounded at any edge count. */
   private val ROUND_LEVEL = org.apache.spark.storage.StorageLevel.DISK_ONLY
 
   /** `vertices(id)`, `edges(src, dst)` bidirectional; returns every
@@ -43,73 +44,47 @@ object Mis {
   def run(s: SparkSession, vertices: DataFrame, edges: DataFrame,
           maxIter: Int = 25): DataFrame = {
     import s.implicits._
-    val verts = vertices.select(col("id").cast("long").as("node")).distinct()
-      .localCheckpoint(false)
-    var u = verts.localCheckpoint(true, ROUND_LEVEL)
-    var e = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter($"src" =!= $"dst")
-      .distinct()
-      .localCheckpoint(true, ROUND_LEVEL)
-    var nU = u.count()
-    // members holds the RAW winners checkpoints (so the throw path can
-    // actually free them — freeCheckpoint no-ops on derived plans like
-    // a withColumn projection) alongside each round number
-    var members = Seq.empty[(DataFrame, Long)]
-    // any abnormal exit must free every live checkpoint (the KCore
-    // contract); winners checkpoints underlie the RESULT on success,
-    // so they are freed only on the throw path
-    def freeAndThrow(msg: String): Nothing = {
-      KTruss.freeCheckpoint(u)
-      KTruss.freeCheckpoint(e)
-      members.foreach { case (w, _) => KTruss.freeCheckpoint(w) }
-      throw new IllegalStateException(msg)
+    Superstep.run { sc =>
+      val verts = sc.pin(vertices.select(col("id").cast("long").as("node")).distinct(),
+        eager = false)
+      val (u0, nU0) = sc.count(verts, ROUND_LEVEL)
+      val e0 = sc.pin(edges
+        .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+        .filter($"src" =!= $"dst")
+        .distinct(), ROUND_LEVEL)
+      // the state carries every round's winners checkpoint with its
+      // round number: they underlie the result
+      val (_, _, _, members) = sc.loop((u0, e0, nU0, Seq.empty[(DataFrame, Long)]), maxIter,
+          (st: (DataFrame, DataFrame, Long, Seq[(DataFrame, Long)])) =>
+            s"Luby MIS (${st._3} nodes undecided)")(
+          st => Seq(st._1, st._2) ++ st._4.map(_._1))((st, _) => st._3 == 0L) {
+          case ((u, e, _, members), done) =>
+        val r = done + 1
+        // min undecided-neighbor priority; e is already pruned to
+        // both-ends-undecided, so no membership join is needed here
+        val minNbr = e
+          .select($"src", md5(concat(lit(s"${r}_"), $"dst".cast("string"))).as("h"))
+          .groupBy($"src").agg(min($"h").as("mh"))
+        val winners = sc.pin(u.join(minNbr.select($"src".as("node"), $"mh"), Seq("node"), "left")
+          .filter(md5(concat(lit(s"${r}_"), $"node".cast("string"))) <
+            coalesce($"mh", lit("g"))) // 'g' sorts above every hex digest
+          .select($"node"), ROUND_LEVEL)
+        val removed = winners
+          .union(e.join(winners.select($"node".as("src")), Seq("src"), "left_semi")
+            .select($"dst".as("node")))
+          .distinct()
+        val (nextU, nU) = sc.count(u.join(removed, Seq("node"), "left_anti"), ROUND_LEVEL)
+        val nextE = sc.pin(e.join(nextU.select($"node".as("src")), Seq("src"), "left_semi")
+          .join(nextU.select($"node".as("dst")), Seq("dst"), "left_semi")
+          .select($"src", $"dst"), ROUND_LEVEL)
+        (nextU, nextE, nU, members :+ ((winners, r.toLong)))
+      }
+      val mis = members.map { case (w, r) => w.withColumn("mis_round", lit(r)) }
+        .reduceOption(_ union _)
+        .getOrElse(verts.limit(0).withColumn("mis_round", lit(0L)))
+      verts.join(mis, Seq("node"), "left")
+        .select($"node", $"mis_round".isNotNull.as("in_mis"), $"mis_round")
     }
-    var iter = 0
-    while (nU > 0L && iter < maxIter) {
-      iter += 1
-      val r = iter
-      // min undecided-neighbor priority; e is already pruned to
-      // both-ends-undecided, so no membership join is needed here
-      val minNbr = e
-        .select($"src", md5(concat(lit(s"${r}_"), $"dst".cast("string"))).as("h"))
-        .groupBy($"src").agg(min($"h").as("mh"))
-      val winners = u.join(minNbr.select($"src".as("node"), $"mh"), Seq("node"), "left")
-        .filter(md5(concat(lit(s"${r}_"), $"node".cast("string"))) <
-          coalesce($"mh", lit("g"))) // 'g' sorts above every hex digest
-        .select($"node")
-        .localCheckpoint(true, ROUND_LEVEL)
-      members = members :+ ((winners, r.toLong))
-      val removed = winners
-        .union(e.join(winners.select($"node".as("src")), Seq("src"), "left_semi")
-          .select($"dst".as("node")))
-        .distinct()
-      val nextU = u.join(removed, Seq("node"), "left_anti")
-        .localCheckpoint(true, ROUND_LEVEL)
-      nU = nextU.count()
-      val nextE = e.join(nextU.select($"node".as("src")), Seq("src"), "left_semi")
-        .join(nextU.select($"node".as("dst")), Seq("dst"), "left_semi")
-        .select($"src", $"dst")
-        .localCheckpoint(true, ROUND_LEVEL)
-      // both successors are materialized — the previous generation's
-      // blocks are dead, free them NOW (leaking one edge-sized
-      // checkpoint per round is what pinned the pool at sf1x)
-      KTruss.freeCheckpoint(u)
-      KTruss.freeCheckpoint(e)
-      u = nextU
-      e = nextE
-    }
-    if (nU > 0L) freeAndThrow(
-      s"Luby MIS did not converge within $maxIter rounds ($nU nodes undecided)")
-    // converged: the final u is empty and e with it — their blocks
-    // don't underlie the result (built from verts + winners), free now
-    KTruss.freeCheckpoint(u)
-    KTruss.freeCheckpoint(e)
-    val mis = members.map { case (w, r) => w.withColumn("mis_round", lit(r)) }
-      .reduceOption(_ union _)
-      .getOrElse(verts.limit(0).withColumn("mis_round", lit(0L)))
-    verts.join(mis, Seq("node"), "left")
-      .select($"node", $"mis_round".isNotNull.as("in_mis"), $"mis_round")
   }
 
   /** QUOTIENT fast path: Luby over any pure (brand, size ± 1-or-2)
@@ -154,43 +129,31 @@ object Mis {
       classes: Map[(String, Long), Long], parts: DataFrame,
       maxIter: Int): DataFrame = {
     import s.implicits._
-    val verts = parts.localCheckpoint(false)
-    var u = verts.localCheckpoint()
-    // RAW winners checkpoints + round number (a derived withColumn
-    // plan would make the throw path's free a silent no-op)
-    var members = Seq.empty[(DataFrame, Long)]
-    var undecided = true
-    var iter = 0
-    // Any abnormal exit must free every live checkpoint — the KCore/
-    // KTruss contract this file's edge-set loop cites: winners
-    // checkpoints underlie the RESULT on success, so they are freed
-    // only on the throw paths.
-    def freeAndThrow(msg: String): Nothing = {
-      KTruss.freeCheckpoint(u)
-      members.foreach { case (w, _) => KTruss.freeCheckpoint(w) }
-      throw new IllegalStateException(msg)
-    }
-    while (undecided) {
-      // class state of the undecided set: min round-(iter+1) hash per
-      // class. The limit sits INSIDE the collect — never more than
-      // the probed class count + 1 rows on the driver. Checking
-      // BEFORE bumping iter keeps the round accounting identical to
-      // [[run]]: run does work rounds 1..maxIter and succeeds iff the
-      // undecided set is empty after any of them — a game needing
-      // exactly maxIter rounds must converge here too, not spuriously
-      // throw.
-      val r = iter + 1
-      val h = md5(concat(lit(s"${r}_"), $"node".cast("string")))
-      val cls = u.groupBy($"brand", $"size")
-        .agg(min(h).as("mh"))
+    import org.apache.spark.sql.Row
+    def h(r: Int) = md5(concat(lit(s"${r}_"), $"node".cast("string")))
+    // class state of an undecided set: min round-r hash per class. The
+    // limit sits INSIDE the collect — never more than the probed class
+    // count + 1 rows on the driver.
+    def classMins(u: DataFrame, r: Int): Array[Row] = {
+      val cls = u.groupBy($"brand", $"size").agg(min(h(r)).as("mh"))
         .limit(classes.size + 1).collect()
-      if (cls.length > classes.size) freeAndThrow(
+      if (cls.length > classes.size) throw new IllegalStateException(
         s"undecided vertices span more than the ${classes.size} probed classes")
-      if (cls.isEmpty) undecided = false
-      else {
-        iter += 1
-        if (iter > maxIter) freeAndThrow(
-          s"Luby MIS (quotient) did not converge within $maxIter rounds")
+      cls
+    }
+    Superstep.run { sc =>
+      val verts = sc.pin(parts, eager = false)
+      val u0 = sc.pin(verts)
+      // state: undecided set, its round-(done+1) class minima, and the
+      // RAW winners checkpoints + round number. The loop halts when no
+      // class is undecided; like [[run]], work rounds 1..maxIter may
+      // run, so a game needing exactly maxIter rounds converges.
+      val (_, _, members) = sc.loop((u0, classMins(u0, 1), Seq.empty[(DataFrame, Long)]),
+          maxIter, (_: (DataFrame, Array[Row], Seq[(DataFrame, Long)])) =>
+            "Luby MIS (quotient)")(
+          st => st._1 +: st._3.map(_._1))((st, _) => st._2.isEmpty) {
+          case ((u, cls, members), done) =>
+        val r = done + 1
         val mh: Map[(String, Long), String] =
           cls.map(row => (row.getString(0), row.getLong(1)) -> row.getString(2)).toMap
         def adjacent(c: (String, Long)): Seq[(String, Long)] =
@@ -203,7 +166,7 @@ object Mis {
         val winnersC = mh.keySet.filter(c => mh(c) < thr(c))
         val removedC = mh.keySet.filter(c => adjacent(c).exists(winnersC))
         val stateRows = mh.keys.toSeq.map { c =>
-          org.apache.spark.sql.Row(c._1, c._2, thr(c), removedC(c))
+          Row(c._1, c._2, thr(c), removedC(c))
         }
         import org.apache.spark.sql.types._
         import scala.jdk.CollectionConverters._
@@ -212,20 +175,16 @@ object Mis {
             StructField("size", LongType), StructField("thr", StringType),
             StructField("removed", BooleanType))))
         val staged = u.join(broadcast(state), Seq("brand", "size"))
-        val winners = staged.filter(h < $"thr")
-          .select($"node").localCheckpoint()
-        members = members :+ ((winners, r.toLong))
-        val nextU = staged.filter(!$"removed" && h >= $"thr")
-          .select($"node", $"brand", $"size").localCheckpoint()
-        KTruss.freeCheckpoint(u)
-        u = nextU
+        val winners = sc.pin(staged.filter(h(r) < $"thr").select($"node"))
+        val nextU = sc.pin(staged.filter(!$"removed" && h(r) >= $"thr")
+          .select($"node", $"brand", $"size"))
+        (nextU, classMins(nextU, r + 1), members :+ ((winners, r.toLong)))
       }
+      val mis = members.map { case (w, r) => w.withColumn("mis_round", lit(r)) }
+        .reduceOption(_ union _)
+        .getOrElse(verts.limit(0).select($"node").withColumn("mis_round", lit(0L)))
+      verts.select($"node").join(mis, Seq("node"), "left")
+        .select($"node", $"mis_round".isNotNull.as("in_mis"), $"mis_round")
     }
-    KTruss.freeCheckpoint(u) // converged ⇒ u is the (empty) final round
-    val mis = members.map { case (w, r) => w.withColumn("mis_round", lit(r)) }
-      .reduceOption(_ union _)
-      .getOrElse(verts.limit(0).select($"node").withColumn("mis_round", lit(0L)))
-    verts.select($"node").join(mis, Seq("node"), "left")
-      .select($"node", $"mis_round".isNotNull.as("in_mis"), $"mis_round")
   }
 }

@@ -55,34 +55,33 @@ object PageRank {
       val probed = Quotient.probeRows(msgGraph, Quotient.probeBound(e.sparkSession))
       if (probed.isDefined) return ranksInProcess(e, probed.get, iters, bidirectional)
     }
-    val ed = msgGraph.repartition(col("src")).persist()
-    var ranks = deg.select(col("node"), lit(1.0).as("rank"))
-      .localCheckpoint(eager = false)
-    for (i <- 1 to iters) {
-      val msgs = ed.join(ranks, ed("src") === ranks("node"))
-        .select(ed("dst"), (ranks("rank") / ed("outdeg")).cast(M).as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("msg"))
-      val next =
-        if (bidirectional)
-          msgs.select(col("dst").as("node"),
-            (lit(0.15) + lit(0.85) * col("msg").cast("double")).as("rank"))
-        else ranks.select(col("node"))
-          .join(msgs, col("node") === msgs("dst"), "left")
-          .select(col("node"),
-            (lit(0.15) + lit(0.85) * coalesce(col("msg").cast("double"), lit(0.0))).as("rank"))
-      // Non-eager checkpoint: severs the plan every iteration (so the
-      // optimizer never sees an unrolled 10-join tree) but defers
-      // block materialization into the next iteration's job instead
-      // of paying one dedicated job per iteration.
-      ranks = next.localCheckpoint(eager = false)
+    Superstep.run { sc =>
+      val ed = sc.persist(msgGraph.repartition(col("src")), Superstep.Memory)
+      val ranks0 = sc.pin(deg.select(col("node"), lit(1.0).as("rank")), eager = false)
+      val ranks = sc.rounds(ranks0, iters)(Seq(_)) { (ranks, _) =>
+        val msgs = ed.join(ranks, ed("src") === ranks("node"))
+          .select(ed("dst"), (ranks("rank") / ed("outdeg")).cast(M).as("contrib"))
+          .groupBy(col("dst")).agg(sum(col("contrib")).as("msg"))
+        val next =
+          if (bidirectional)
+            msgs.select(col("dst").as("node"),
+              (lit(0.15) + lit(0.85) * col("msg").cast("double")).as("rank"))
+          else ranks.select(col("node"))
+            .join(msgs, col("node") === msgs("dst"), "left")
+            .select(col("node"),
+              (lit(0.15) + lit(0.85) * coalesce(col("msg").cast("double"), lit(0.0))).as("rank"))
+        // Non-eager checkpoint: severs the plan every iteration (so the
+        // optimizer never sees an unrolled 10-join tree) but defers
+        // block materialization into the next iteration's job instead
+        // of paying one dedicated job per iteration.
+        sc.pin(next, eager = false)
+      }
+      // No action ran inside the loop, so materialize the final ranks
+      // ONCE while the message-graph cache is alive — unpersisting
+      // first would recompute ed for every iteration at the caller's
+      // first action.
+      sc.pin(ranks)
     }
-    // No action ran inside the loop, so materialize the final ranks
-    // ONCE while the message-graph cache is alive — unpersisting
-    // first would recompute ed for every iteration at the caller's
-    // first action.
-    val out = ranks.localCheckpoint()
-    ed.unpersist()
-    out
   }
 
   /** Dimension-bounded route over the probed (src, dst, outdeg)

@@ -54,9 +54,9 @@ object PersonalizedPageRank {
     else runDistributed(s, edges, seeds, iters)
   }
 
-  /** Round-loop storage discipline (KCore/KTruss, round-10): the
-    * per-round rank checkpoint is EAGER on DISK and the previous
-    * round's blocks are freed as soon as the successor materializes —
+  /** Round-loop storage: the per-round rank checkpoint is EAGER on
+    * DISK and the [[Superstep]] driver frees the previous round's
+    * blocks as soon as the successor materializes —
     * non-eager in-memory checkpoints let iters generations of
     * vertex-sized blocks (plus the edge checkpoint) pile into the
     * unified pool at the final action, the sf1x 48g-driver failure
@@ -73,55 +73,47 @@ object PersonalizedPageRank {
     // materialization) — it rides the VERTEX-sized rank vector and is
     // re-derived each round by the same aggregation that sums the
     // messages (max over the teleport rows, which carry it).
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).localCheckpoint(false, ROUND_LEVEL)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val sd = seeds.select(col("node").cast("long").as("node")).distinct()
-      .localCheckpoint(false)
-    val nSeeds = sd.count()
-    require(nSeeds > 0, "personalized PageRank needs at least one seed")
-    val base = 0.15 / nSeeds.toDouble
-    val vstate = deg
-      .join(sd.withColumn("__seed", lit(1)), Seq("node"), "left")
-      .select(col("node"), col("outdeg"),
-        when(col("__seed").isNotNull, lit(base)).otherwise(lit(0.0)).as("teleport"))
-      .repartition(col("node"))
-      .localCheckpoint(false, ROUND_LEVEL)
-    // static teleport contribution rows (p(v)/α, quantized like any
-    // other contribution), carrying each node's outdeg through the
-    // round aggregation
-    val tpRows = vstate.select(col("node").as("dst"),
-        (col("teleport") / lit(0.85)).cast(M).as("contrib"), col("outdeg"))
-      .localCheckpoint(false, ROUND_LEVEL)
-    var ranks = vstate.select(col("node"), col("outdeg"), col("teleport").as("rank"))
-      .localCheckpoint(true, ROUND_LEVEL)
-    for (_ <- 1 to iters) {
-      // shuffle_hash: build the vertex-sized side, STREAM the edges —
-      // no per-round sort of the edge table (sort-merge re-sorted it
-      // every round); both sides exit hash-partitioned on the join
-      // key (checkpoint preserves partitioning), so there is no
-      // exchange either. The single shuffle per round is the message
-      // aggregation, and the union makes it compute teleport + rank
-      // + outdeg in one pass.
-      val next = e.join(ranks.hint("shuffle_hash"), e("src") === ranks("node"))
-        .select(e("dst"), (ranks("rank") / ranks("outdeg")).cast(M).as("contrib"),
-          lit(null).cast("long").as("outdeg"))
-        .union(tpRows)
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("ms"), max(col("outdeg")).as("outdeg"))
-        .select(col("dst").as("node"), col("outdeg"),
-          (lit(0.85) * col("ms").cast("double")).as("rank"))
-        .localCheckpoint(true, ROUND_LEVEL)
-      KTruss.freeCheckpoint(ranks) // previous round: dead once next exists
-      ranks = next
+    Superstep.run { sc =>
+      val e = sc.pin(edges.select(col("src"), col("dst")).repartition(col("src")),
+        ROUND_LEVEL, eager = false)
+      val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
+      val sd = sc.pin(seeds.select(col("node").cast("long").as("node")).distinct(),
+        eager = false)
+      val nSeeds = sd.count()
+      require(nSeeds > 0, "personalized PageRank needs at least one seed")
+      val base = 0.15 / nSeeds.toDouble
+      val vstate = sc.pin(deg
+        .join(sd.withColumn("__seed", lit(1)), Seq("node"), "left")
+        .select(col("node"), col("outdeg"),
+          when(col("__seed").isNotNull, lit(base)).otherwise(lit(0.0)).as("teleport"))
+        .repartition(col("node")), ROUND_LEVEL, eager = false)
+      // static teleport contribution rows (p(v)/α, quantized like any
+      // other contribution), carrying each node's outdeg through the
+      // round aggregation
+      val tpRows = sc.pin(vstate.select(col("node").as("dst"),
+          (col("teleport") / lit(0.85)).cast(M).as("contrib"), col("outdeg")),
+        ROUND_LEVEL, eager = false)
+      val ranks0 = sc.pin(vstate.select(col("node"), col("outdeg"), col("teleport").as("rank")),
+        ROUND_LEVEL)
+      val ranks = sc.rounds(ranks0, iters)(Seq(_)) { (ranks, _) =>
+        // shuffle_hash: build the vertex-sized side, STREAM the edges —
+        // no per-round sort of the edge table (sort-merge re-sorted it
+        // every round); both sides exit hash-partitioned on the join
+        // key (checkpoint preserves partitioning), so there is no
+        // exchange either. The single shuffle per round is the message
+        // aggregation, and the union makes it compute teleport + rank
+        // + outdeg in one pass.
+        sc.pin(e.join(ranks.hint("shuffle_hash"), e("src") === ranks("node"))
+          .select(e("dst"), (ranks("rank") / ranks("outdeg")).cast(M).as("contrib"),
+            lit(null).cast("long").as("outdeg"))
+          .union(tpRows)
+          .groupBy(col("dst"))
+          .agg(sum(col("contrib")).as("ms"), max(col("outdeg")).as("outdeg"))
+          .select(col("dst").as("node"), col("outdeg"),
+            (lit(0.85) * col("ms").cast("double")).as("rank")), ROUND_LEVEL)
+      }
+      sc.pin(ranks.select(col("node"), col("rank")))
     }
-    val out = ranks.select(col("node"), col("rank")).localCheckpoint()
-    KTruss.freeCheckpoint(ranks)
-    KTruss.freeCheckpoint(e)
-    KTruss.freeCheckpoint(tpRows)
-    KTruss.freeCheckpoint(vstate)
-    KTruss.freeCheckpoint(sd)
-    out
   }
 
   /** Dimension-bounded fast path: ONE distributed job derives the

@@ -59,16 +59,20 @@ object RandomWalks {
     * (seed, step, node) for step 0..steps, one walk per seed. */
   def run(s: SparkSession, edges: DataFrame, seeds: DataFrame, steps: Int): DataFrame = {
     require(steps >= 0, s"steps must be >= 0, got $steps")
-    var cur = seeds.select(col("seed").cast("long").as("seed"),
-      col("seed").cast("long").as("node"), lit(0L).as("step"))
-      .localCheckpoint(true)
-    if (steps == 0) return cur // sequence(1, 0) would DESCEND ([1, 0]) — never build it
-    walkWithPicks(runPicks(edges, steps), cur, steps)
+    Superstep.run { sc =>
+      val cur = sc.pin(seeds.select(col("seed").cast("long").as("seed"),
+        col("seed").cast("long").as("node"), lit(0L).as("step")))
+      // sequence(1, 0) would DESCEND ([1, 0]) — never build it
+      if (steps == 0) cur else walkWithPicks(sc, sc.pin(runPicks(edges, steps)), cur, steps)
+    }
   }
 
   /** The general-edge pick table: one window ranking pass over the
     * edge set (see the object comment — this is the round-14 shape,
-    * unchanged, now shared with the quotient route's hop loop). */
+    * unchanged, now shared with the quotient route's hop loop). Its
+    * ≤ steps·|V| rows are vertex-scale, so the caller pins them in
+    * eager in-memory blocks (the round-12 DISK_ONLY note applies to
+    * the EDGE-scale checkpoint this table replaces). */
   private def runPicks(edges: DataFrame, steps: Int): DataFrame = {
     // pick table: for each node and hop t, THE one neighbor the LCG
     // selects — one pass over the positionally-ranked adjacency. pos
@@ -97,7 +101,7 @@ object RandomWalks {
     // distinct()'s grouping — so one null-safe struct comparison is
     // both the guard and the dedup.
     val byNode = Window.partitionBy(col("src")).orderBy(col("dst"))
-    val picks = edges
+    edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .withColumn("__dup",
         lag(struct(col("dst")), 1).over(byNode) <=> struct(col("dst")))
@@ -113,34 +117,24 @@ object RandomWalks {
       // column names would be ambiguous self-join references
       .select(col("src").as("__pk_src"), explode(col("ts")).as("__pk_t"),
         col("dst").as("__pk_dst"))
-      // ≤ steps·|V| rows — vertex-scale, safe eager in-memory blocks
-      // (the round-12 DISK_ONLY note applied to the EDGE-scale
-      // checkpoint this table replaces)
-      .localCheckpoint(true)
-    picks
   }
 
   /** The shared hop loop: `picks(__pk_src, __pk_t, __pk_dst)` — THE
     * neighbor node `__pk_src` hops to at step `__pk_t` — drives every
     * wave; `cur` is the checkpointed step-0 wave. */
-  private def walkWithPicks(picks: DataFrame, wave0: DataFrame, steps: Int): DataFrame = {
-    var cur = wave0
-    val waves = Seq.newBuilder[DataFrame]
-    waves += cur
-    for (t <- 1 to steps) {
+  private def walkWithPicks(sc: Superstep, picks: DataFrame, wave0: DataFrame,
+                            steps: Int): DataFrame =
+    sc.rounds(Seq(wave0), steps)(identity) { (waves, _) =>
+      val t = waves.length.toLong
       // broadcast-frontier equi-join against the step-t slice of the
       // vertex-scale pick table — the edge set is never re-read
-      cur = cur.join(picks,
-          col("node") === col("__pk_src") && col("__pk_t") === lit(t.toLong))
-        .select(col("seed"), col("__pk_dst").as("node"), lit(t.toLong).as("step"))
+      waves :+ sc.pin(waves.last.join(picks,
+          col("node") === col("__pk_src") && col("__pk_t") === lit(t))
         // seed-sized; makes hop t+1 AND the final union read blocks —
         // an unbroken lineage would re-execute hop k in every wave
         // ≥ k of the union
-        .localCheckpoint(true)
-      waves += cur
-    }
-    waves.result().reduce(_ union _)
-  }
+        .select(col("seed"), col("__pk_dst").as("node"), lit(t).as("step")))
+    }.reduce(_ union _)
 
   /** Blow-up walk (round 16): when the edge set IS the
     * (brand, size ± δ) rule — [[GraphBuilder.partEdgesWide]] by
@@ -163,43 +157,44 @@ object RandomWalks {
   def blowupRun(s: SparkSession, parts: DataFrame, seeds: DataFrame,
                 steps: Int, deltas: Seq[Long]): DataFrame = {
     require(steps >= 0, s"steps must be >= 0, got $steps")
-    val cur = seeds.select(col("seed").cast("long").as("seed"),
-      col("seed").cast("long").as("node"), lit(0L).as("step"))
-      .localCheckpoint(true)
-    if (steps == 0) return cur
-    val v = parts.select(col("node").cast("long").as("node"), col("brand"),
-      col("size").cast("long").as("size"))
-    // membership rows: m ∈ (b, s) is in the neighbor union of classes
-    // (b, s ∓ δ) — one row per (member, offset), vertex-scale
-    val offsets = deltas.flatMap(d => Seq(d, -d)).distinct
-    val unionRows = offsets.map { d =>
-      v.select(col("brand"), (col("size") + lit(d)).as("tsize"),
-        col("node").as("member"))
-    }.reduce(_ union _)
-    val byTgt = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("brand"), col("tsize")).orderBy(col("member"))
-    val pos = unionRows.withColumn("pos", row_number().over(byTgt) - 1)
-    // deg is a CLASS function (|neighbor union| of the target class)
-    // — a class-scale aggregate stamped onto the node side first, so
-    // the LCG index is a pure node-side column and the pick lookup
-    // below stays a real equi-join on (brand, size, idx), never a
-    // class-keyed join with a both-sides residual
-    val degs = unionRows.groupBy(col("brand"), col("tsize"))
-      .agg(count(lit(1)).as("deg"))
-      .select(col("brand").as("db"), col("tsize").as("ds"), col("deg"))
-    val nodeT = v
-      .join(degs, col("brand") === col("db") && col("size") === col("ds"))
-      .select(col("node"), col("brand"), col("size"),
-        explode(expr(s"sequence(CAST(1 AS BIGINT), CAST($steps AS BIGINT))")).as("t"),
-        col("deg"))
-      .withColumn("idx",
-        expr("pmod(pmod(node, 2147483647) * 1103515245 + t * 12345, 2147483647) % deg"))
-    val picks = nodeT.join(pos,
-        nodeT("brand") === pos("brand") && nodeT("size") === pos("tsize") &&
-          nodeT("idx") === pos("pos"))
-      .select(nodeT("node").as("__pk_src"), col("t").as("__pk_t"),
-        col("member").as("__pk_dst"))
-      .localCheckpoint(true)
-    walkWithPicks(picks, cur, steps)
+    Superstep.run { sc =>
+      val cur = sc.pin(seeds.select(col("seed").cast("long").as("seed"),
+        col("seed").cast("long").as("node"), lit(0L).as("step")))
+      if (steps == 0) cur else {
+        val v = parts.select(col("node").cast("long").as("node"), col("brand"),
+          col("size").cast("long").as("size"))
+        // membership rows: m ∈ (b, s) is in the neighbor union of classes
+        // (b, s ∓ δ) — one row per (member, offset), vertex-scale
+        val offsets = deltas.flatMap(d => Seq(d, -d)).distinct
+        val unionRows = offsets.map { d =>
+          v.select(col("brand"), (col("size") + lit(d)).as("tsize"),
+            col("node").as("member"))
+        }.reduce(_ union _)
+        val byTgt = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("brand"), col("tsize")).orderBy(col("member"))
+        val pos = unionRows.withColumn("pos", row_number().over(byTgt) - 1)
+        // deg is a CLASS function (|neighbor union| of the target class)
+        // — a class-scale aggregate stamped onto the node side first, so
+        // the LCG index is a pure node-side column and the pick lookup
+        // below stays a real equi-join on (brand, size, idx), never a
+        // class-keyed join with a both-sides residual
+        val degs = unionRows.groupBy(col("brand"), col("tsize"))
+          .agg(count(lit(1)).as("deg"))
+          .select(col("brand").as("db"), col("tsize").as("ds"), col("deg"))
+        val nodeT = v
+          .join(degs, col("brand") === col("db") && col("size") === col("ds"))
+          .select(col("node"), col("brand"), col("size"),
+            explode(expr(s"sequence(CAST(1 AS BIGINT), CAST($steps AS BIGINT))")).as("t"),
+            col("deg"))
+          .withColumn("idx",
+            expr("pmod(pmod(node, 2147483647) * 1103515245 + t * 12345, 2147483647) % deg"))
+        val picks = nodeT.join(pos,
+            nodeT("brand") === pos("brand") && nodeT("size") === pos("tsize") &&
+              nodeT("idx") === pos("pos"))
+          .select(nodeT("node").as("__pk_src"), col("t").as("__pk_t"),
+            col("member").as("__pk_dst"))
+        walkWithPicks(sc, sc.pin(picks), cur, steps)
+      }
+    }
   }
 }

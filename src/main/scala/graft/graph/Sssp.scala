@@ -75,102 +75,93 @@ object Sssp {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val P = DecimalType(18, 2)
-    val v = parts
-      .select(col("node").cast("long").as("node"), col("brand"),
-        col("size").cast("long").as("size"), col("price").cast(P).as("price"))
-      .localCheckpoint(false)
-    var state = v
-      .join(seeds.select(col("node").cast("long").as("node")), Seq("node"), "left_semi")
-      .select($"node", $"brand", $"size", $"price",
-        lit(0).cast(D).as("dist"), lit(true).as("improved"))
-      .localCheckpoint(false)
-    val offsets = deltas.flatMap(d => Seq(d, -d)).distinct
-    var hop = 0
-    while (hop < maxHops) {
-      val front = state.filter($"improved")
-      // frontier rows re-keyed to every size they relax INTO; kind 0
-      // sorts sources before targets at equal price so both running
-      // mins see the boundary-price sources
-      val sources = offsets.map { d =>
-        front.select($"brand", ($"size" + d).as("tsize"), $"price",
-          lit(null).cast("long").as("node"),
-          ($"dist" - $"price").as("a"), ($"dist" + $"price").as("b"),
-          lit(0).as("kind"))
-      }.reduce(_ union _)
-      val targets = v.select($"brand", $"size".as("tsize"), $"price", $"node",
-        lit(null).cast(DecimalType(29, 2)).as("a"),
-        lit(null).cast(DecimalType(29, 2)).as("b"), lit(1).as("kind"))
-      val wAsc = Window.partitionBy($"brand", $"tsize")
-        .orderBy($"price".asc, $"kind".asc)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val wDesc = Window.partitionBy($"brand", $"tsize")
-        .orderBy($"price".desc, $"kind".asc)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val cand = sources.union(targets)
-        .withColumn("mUp", min($"a").over(wAsc))
-        .withColumn("mDn", min($"b").over(wDesc))
-        .filter($"kind" === 1)
-        .select($"node", $"brand".as("cb"), $"tsize".as("cs"), $"price".as("cp"),
-          least($"mUp" + $"price", $"mDn" - $"price").cast(D).as("cdist"))
-        .filter($"cdist".isNotNull)
-      // vertex-scale merge: both sides keyed uniquely by node, so the
-      // fold is a join, not an aggregate — no string min/max buffers
-      // to demote anything to SortAggregate
-      state = state.select($"node", $"brand", $"size", $"price", $"dist")
-        .join(cand, Seq("node"), "full_outer")
-        .select($"node",
-          coalesce($"brand", $"cb").as("brand"),
-          coalesce($"size", $"cs").as("size"),
-          coalesce($"price", $"cp").as("price"),
-          least($"dist", $"cdist").cast(D).as("ndist"),
-          ($"dist".isNull || ($"cdist".isNotNull && $"cdist" < $"dist")).as("improved"))
-        .withColumnRenamed("ndist", "dist")
-        .localCheckpoint(false)
-      hop += 1
+    Superstep.run { sc =>
+      val v = sc.pin(parts
+        .select(col("node").cast("long").as("node"), col("brand"),
+          col("size").cast("long").as("size"), col("price").cast(P).as("price")), eager = false)
+      val state0 = sc.pin(v
+        .join(seeds.select(col("node").cast("long").as("node")), Seq("node"), "left_semi")
+        .select($"node", $"brand", $"size", $"price",
+          lit(0).cast(D).as("dist"), lit(true).as("improved")), eager = false)
+      val offsets = deltas.flatMap(d => Seq(d, -d)).distinct
+      val state = sc.rounds(state0, maxHops)(Seq(_)) { (state, _) =>
+        val front = state.filter($"improved")
+        // frontier rows re-keyed to every size they relax INTO; kind 0
+        // sorts sources before targets at equal price so both running
+        // mins see the boundary-price sources
+        val sources = offsets.map { d =>
+          front.select($"brand", ($"size" + d).as("tsize"), $"price",
+            lit(null).cast("long").as("node"),
+            ($"dist" - $"price").as("a"), ($"dist" + $"price").as("b"),
+            lit(0).as("kind"))
+        }.reduce(_ union _)
+        val targets = v.select($"brand", $"size".as("tsize"), $"price", $"node",
+          lit(null).cast(DecimalType(29, 2)).as("a"),
+          lit(null).cast(DecimalType(29, 2)).as("b"), lit(1).as("kind"))
+        val wAsc = Window.partitionBy($"brand", $"tsize")
+          .orderBy($"price".asc, $"kind".asc)
+          .rowsBetween(Window.unboundedPreceding, 0)
+        val wDesc = Window.partitionBy($"brand", $"tsize")
+          .orderBy($"price".desc, $"kind".asc)
+          .rowsBetween(Window.unboundedPreceding, 0)
+        val cand = sources.union(targets)
+          .withColumn("mUp", min($"a").over(wAsc))
+          .withColumn("mDn", min($"b").over(wDesc))
+          .filter($"kind" === 1)
+          .select($"node", $"brand".as("cb"), $"tsize".as("cs"), $"price".as("cp"),
+            least($"mUp" + $"price", $"mDn" - $"price").cast(D).as("cdist"))
+          .filter($"cdist".isNotNull)
+        // vertex-scale merge: both sides keyed uniquely by node, so the
+        // fold is a join, not an aggregate — no string min/max buffers
+        // to demote anything to SortAggregate
+        sc.pin(state.select($"node", $"brand", $"size", $"price", $"dist")
+          .join(cand, Seq("node"), "full_outer")
+          .select($"node",
+            coalesce($"brand", $"cb").as("brand"),
+            coalesce($"size", $"cs").as("size"),
+            coalesce($"price", $"cp").as("price"),
+            least($"dist", $"cdist").cast(D).as("ndist"),
+            ($"dist".isNull || ($"cdist".isNotNull && $"cdist" < $"dist")).as("improved"))
+          .withColumnRenamed("ndist", "dist"), eager = false)
+      }
+      sc.pin(state.select($"node", $"dist".cast("double").as("dist")))
     }
-    state.select($"node", $"dist".cast("double").as("dist")).localCheckpoint()
   }
 
   /** @param edges (src, dst, w) with w a non-negative DECIMAL weight
     * @param seeds (node) — distance 0 sources */
   def run(s: SparkSession, edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     import s.implicits._
-    val e = edges
-      .select(col("src"), col("dst"), col("w").cast(D).as("w"))
-      .repartition(col("src"))
-      .persist()
-    var dist = seeds
-      .select(col("node"), lit(0).cast(D).as("dist"))
-      .localCheckpoint(false)
-    var frontier = dist
-    var hop = 0
-    while (hop < maxHops) {
-      // Lazy checkpoints: the loop runs no actions, so all rounds
-      // execute inside the caller's first job with lineage still
-      // severed per round (the frontier side is left for AQE to
-      // broadcast at runtime). The non-eager checkpoint also makes
-      // the two consumers of `merged` (dist chain + frontier chain)
-      // share one evaluation via its cached blocks.
-      val relaxed = frontier.join(e, frontier("node") === e("src"))
-        .select(e("dst").as("node"),
-          (frontier("dist") + e("w")).cast(D).as("dist"), lit(0).as("tag"))
-      // two plain decimal mins (both hash-aggregable — a min over a
-      // (dist, tag) STRUCT has an immutable buffer and would demote
-      // the whole merge to SortAggregate): `dist` is the new minimum
-      // over incumbent+candidates, `incumbent` the old one; improved
-      // = strictly better than the incumbent, or first reach.
-      val merged = dist.withColumn("tag", lit(1)).union(relaxed)
-        .groupBy($"node").agg(min($"dist").as("dist"),
-          min(when($"tag" === 1, $"dist")).as("incumbent"))
-        .select($"node", $"dist",
-          ($"incumbent".isNull || $"dist" < $"incumbent").as("improved"))
-        .localCheckpoint(false)
-      dist = merged.select($"node", $"dist")
-      frontier = merged.filter($"improved").select($"node", $"dist")
-      hop += 1
+    Superstep.run { sc =>
+      val e = sc.persist(edges
+        .select(col("src"), col("dst"), col("w").cast(D).as("w"))
+        .repartition(col("src")), Superstep.Memory)
+      val dist0 = sc.pin(seeds.select(col("node"), lit(0).cast(D).as("dist")), eager = false)
+      // (dist, frontier): both read one lazy checkpoint per hop
+      val (dist, _) = sc.rounds((dist0, dist0), maxHops)(st => Seq(st._1, st._2)) {
+        case ((dist, frontier), _) =>
+          // Lazy checkpoints: the loop runs no actions, so all rounds
+          // execute inside the final pin's job with lineage still
+          // severed per round (the frontier side is left for AQE to
+          // broadcast at runtime). The non-eager checkpoint also makes
+          // the two consumers of `merged` (dist chain + frontier chain)
+          // share one evaluation via its cached blocks.
+          val relaxed = frontier.join(e, frontier("node") === e("src"))
+            .select(e("dst").as("node"),
+              (frontier("dist") + e("w")).cast(D).as("dist"), lit(0).as("tag"))
+          // two plain decimal mins (both hash-aggregable — a min over a
+          // (dist, tag) STRUCT has an immutable buffer and would demote
+          // the whole merge to SortAggregate): `dist` is the new minimum
+          // over incumbent+candidates, `incumbent` the old one; improved
+          // = strictly better than the incumbent, or first reach.
+          val merged = sc.pin(dist.withColumn("tag", lit(1)).union(relaxed)
+            .groupBy($"node").agg(min($"dist").as("dist"),
+              min(when($"tag" === 1, $"dist")).as("incumbent"))
+            .select($"node", $"dist",
+              ($"incumbent".isNull || $"dist" < $"incumbent").as("improved")), eager = false)
+          (merged.select($"node", $"dist"), merged.filter($"improved").select($"node", $"dist"))
+      }
+      sc.pin(dist.select($"node", $"dist".cast("double").as("dist")))
     }
-    val out = dist.select($"node", $"dist".cast("double").as("dist")).localCheckpoint()
-    e.unpersist()
-    out
   }
 }

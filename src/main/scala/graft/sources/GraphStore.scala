@@ -300,9 +300,8 @@ object GraphStore {
         s"requirement failed: no committed snapshot v=$v at $root"))
 
   /** An identity for the files committed version `v` reads: the
-    * (name, length, modification time) listing of its own `v=<v>`
-    * directory, or of the compaction directory that preserves it once
-    * vacuumed. A cache of a version's contents keys on (v, stamp),
+    * [[graft.SessionCache.listingStamp]] of its own `v=<v>` directory,
+    * or of the compaction directory that preserves it once vacuumed. A cache of a version's contents keys on (v, stamp),
     * never on the root path: a root deleted and re-initialised up to
     * the same version number lists other files (every write names its
     * part files afresh), and so does a version whose directory was
@@ -311,9 +310,7 @@ object GraphStore {
     val dir =
       if (committed(s, root, v)) new Path(snapshotPath(root, v))
       else compactionOf(s, root, v)
-    fs(s, root).listStatus(dir).sortBy(_.getPath.getName)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .mkString(s"$dir|", ",", "")
+    s"$dir|${graft.SessionCache.listingStamp(s, dir.toString)}"
   }
 
   /** Read the latest snapshot. */

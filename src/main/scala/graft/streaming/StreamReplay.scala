@@ -193,19 +193,16 @@ object StreamReplay {
     * Built once, atomically published (rename + `_STAGED` marker),
     * reused by every replay — including across sessions: the content
     * is a deterministic function of the immutable source table, and
-    * the cache key hashes the source file's size+mtime so a
+    * the cache key hashes the source table's listing stamp so a
     * regenerated table re-stages. */
   private def md5hex(v: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(v.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   private def chunkDir(s: SparkSession, sfDir: String, chunks: Int): java.nio.file.Path =
-    chunkCache.getOrCompute(s, s"$sfDir#chunks=$chunks") {
-      val src = java.nio.file.Paths.get(sfDir, "events.parquet")
-      val srcSig =
-        if (java.nio.file.Files.exists(src))
-          s"${java.nio.file.Files.size(src)}-${java.nio.file.Files.getLastModifiedTime(src).toMillis}"
-        else "none"
+    chunkCache.getOrCompute(s, sfDir, s"chunks=$chunks") {
+      val srcSig = graft.SessionCache.listingStamp(s,
+        java.nio.file.Paths.get(sfDir, "events.parquet").toString)
       // full md5 of each identity half: a 32-bit hashCode collision
       // across scale dirs would silently serve another corpus' chunks.
       // The (sfDir, chunks) half prefixes the dir name so a STALE

@@ -833,7 +833,7 @@ object TextPack extends QueryPack {
 
   private def bpeLearn(s: SparkSession, d: String,
                        steps: Int): Seq[(Long, String, String, Long)] =
-    bpeRuleCache.getOrCompute(s, s"$d|$steps") {
+    bpeRuleCache.getOrCompute(s, d, steps.toString) {
       bpeLearnUncached(s, d, steps)
     }
 

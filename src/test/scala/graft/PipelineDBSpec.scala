@@ -26,6 +26,19 @@ class PipelineDBSpec extends SparkSpec {
       SparkEntry.queries("t_langid")(spark, sfDir).collect().map(_.toSeq).toSet)
   }
 
+  test("a re-import in the same session is seen: dedup equals a fresh session's answer") {
+    val root = freshRoot()
+    val db = new PipelineDB(spark, root)
+    val docs = Tables.documents(spark, sfDir).orderBy(col("doc_id"))
+    db.importDocuments(docs.limit(50))
+    val small = db.dedup("minhash").count()
+    db.importDocuments(docs.limit(500))
+    val again = db.dedup("minhash").count()
+    val fresh = new PipelineDB(spark.newSession(), root).dedup("minhash").count()
+    assert(again === fresh)
+    assert(again !== small, "the two corpora must dedup differently for this test to bite")
+  }
+
   test("run() exposes every shipped key; unknown keys and strategies fail loudly") {
     val db = new PipelineDB(spark, freshRoot())
     assert(db.keys.size === SparkEntry.queries.size)

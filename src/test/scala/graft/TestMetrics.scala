@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.executor.TaskMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Shared task-metrics accounting for the measured-evidence specs
@@ -42,16 +42,34 @@ object TestMetrics {
     spark.sparkContext.addSparkListener(listener)
     try {
       action
-      var last = -1L
-      var stableSince = System.nanoTime()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (System.nanoTime() < deadline &&
-             (System.nanoTime() - stableSince) < 300L * 1000 * 1000) {
-        val now = events.get()
-        if (now != last) { last = now; stableSince = System.nanoTime() }
-        Thread.sleep(50)
-      }
+      quiesce(events)
       total.get()
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Number of jobs started during `action` (same quiesce). */
+  def jobCount(spark: SparkSession)(action: => Unit): Long = {
+    val jobs = new AtomicLong(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      action
+      quiesce(jobs)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def quiesce(events: AtomicLong): Unit = {
+    var last = -1L
+    var stableSince = System.nanoTime()
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (System.nanoTime() < deadline &&
+           (System.nanoTime() - stableSince) < 300L * 1000 * 1000) {
+      val now = events.get()
+      if (now != last) { last = now; stableSince = System.nanoTime() }
+      Thread.sleep(50)
+    }
   }
 }
