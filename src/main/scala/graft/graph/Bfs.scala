@@ -40,15 +40,21 @@ object Bfs {
 
   /** A bounded edge set's adjacency in CSR form — the ONE adjacency
     * build behind every in-process route: [[bfsAuto]]'s multi-root
-    * sweep, the [[wavePair]]/[[wavePairs]] point lookups and
-    * [[GraphDB]]'s per-version edge handle. `ids` are the sorted
-    * distinct endpoint ids; node `ids(i)`'s out-neighbours are the
-    * indices `tgt(off(i) until off(i + 1))`. `rows` counts the probed
+    * sweep, the [[wavePair]]/[[wavePairs]] point lookups,
+    * [[GraphDB]]'s per-version edge handle, [[KCore.run]]'s wave peel
+    * and [[KTruss.run]]'s intersection peel (which [[GraphDB.ktruss]]
+    * feeds from the handle). `ids` are the sorted distinct endpoint
+    * ids; node `ids(i)`'s out-neighbours are the indices
+    * `tgt(off(i) until off(i + 1))`, one entry per linked row (a bag:
+    * duplicate rows and self-loops stay). `rows` counts the probed
     * rows (null endpoints included) and `srcNodes` the distinct
     * non-null sources — `GraphDB.stats`' two aggregates. */
   private[graph] final class Adjacency private (
-      ids: Array[Long], off: Array[Int], tgt: Array[Int],
-      val rows: Long, val srcNodes: Long) {
+      private[graph] val ids: Array[Long], private[graph] val off: Array[Int],
+      private[graph] val tgt: Array[Int], val rows: Long, val srcNodes: Long) {
+
+    /** Whether every probed row linked two endpoints (no null one). */
+    def allLinked: Boolean = tgt.length == rows
 
     /** Layer-by-layer BFS: the distinct `seeds` are wave 1 (on the
       * graph or not), each later wave the unseen out-neighbours of the
@@ -144,17 +150,33 @@ object Bfs {
     * where a cast to BIGINT would change which rows the distributed
     * routes' joins match. The probe keeps null endpoints so `rows` and
     * `srcNodes` see what a DataFrame aggregate over the table sees. */
-  private[graph] def probeAdjacency(edges: DataFrame, bound: Int = -1): Option[Adjacency] = {
-    val integral = Seq("src", "dst").forall(c => edges.schema(c).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })
-    if (!integral) None
+  private[graph] def probeAdjacency(edges: DataFrame, bound: Int = -1): Option[Adjacency] =
+    if (!integral(edges)) None
     else Quotient.probeRows(
         edges.select(col("src").cast("long"), col("dst").cast("long")),
         Quotient.resolve(bound, edges.sparkSession, Quotient.probeBound))
       .map(Adjacency(_))
-  }
+
+  /** [[probeAdjacency]] for a caller whose distributed route runs
+    * anyway past the bound: a row count decides, and only a count
+    * that fits [[Quotient.probeBound]] is collected, so no edge rows
+    * reach the driver to be thrown away. */
+  private[graph] def countedAdjacency(edges: DataFrame): Option[Adjacency] =
+    if (!integral(edges)) None
+    else {
+      val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      val bound = Quotient.probeBound(edges.sparkSession)
+      if (e.limit(bound + 1).count() > bound) None else Some(Adjacency(e.collect()))
+    }
+
+  /** Whether both endpoint columns are integral — the only types a
+    * cast to BIGINT leaves row-for-row as the distributed joins see
+    * them. */
+  private[graph] def integral(edges: DataFrame): Boolean =
+    Seq("src", "dst").forall(c => edges.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
 
   /** Multi-root BFS. `seeds` has columns (root, node); returns
     * (root, node, wave) for every reachable node, where the seed

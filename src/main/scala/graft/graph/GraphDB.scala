@@ -21,15 +21,16 @@ import graft.sources.GraphStore
   *
   * The reference holds the whole graph in a driver-side dict
   * (`self._cache`) and walks it with Python sets. Here [[query]],
-  * [[queryBatch]], [[stats]] and [[numberEntries]] share ONE edge
+  * [[queryBatch]], [[stats]], [[numberEntries]] and [[ktruss]] share ONE edge
   * handle per committed version, built by a single bounded probe of the
   * stored (src, dst) projection at [[Quotient.probeBound]]
   * (`spark.graft.dispatch.probeBound`):
   *
   *   - within the bound, the handle holds the version's adjacency in
   *     CSR form ([[Bfs.Adjacency]]) plus its row and distinct-source
-  *     counts, and those four calls run in-process on it — the
-  *     reference's own BFS, with no Spark job until the next commit;
+  *     counts, and those five calls run in-process on it — the
+  *     reference's own BFS, with no Spark job until the next commit
+  *     (ktruss builds its one result frame);
   *   - past the bound (or when `src`/`dst` are not integral), the
   *     handle records that verdict, so the probe is paid once per
   *     version, and every call runs as a distributed DataFrame plan
@@ -166,9 +167,11 @@ class GraphDB(s: SparkSession, root: String) {
     RandomWalks.run(s, edges.select(col("src"), col("dst")), seeds, steps)
 
   /** k-truss cohesive core of the current snapshot
-    * ([[KTruss.run]]): canonical surviving edges with support. */
+    * ([[KTruss.run]]): canonical surviving edges with support —
+    * peeled in-process on the version's handle, or past the bound by
+    * the distributed rounds, with no second probe either way. */
   def ktruss(k: Int): DataFrame =
-    KTruss.run(s, edges.select(col("src"), col("dst")), k)
+    KTruss.run(s, edges.select(col("src"), col("dst")), k, KTruss.MaxRounds, local())
 
   // ---- probe-routed analytics (round-10: Dispatch behind the one
   // front door, verdict #8) -------------------------------------

@@ -1,12 +1,23 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** k-core decomposition by iterative peeling: repeatedly drop every
   * vertex whose degree (within the surviving subgraph) is below k
   * until the vertex set is stable; return each core vertex with its
   * in-core degree.
+  *
+  * Two routes, chosen by [[Quotient.probeBound]]
+  * (`spark.graft.dispatch.probeBound`). The first degree-table job
+  * also sums the degrees, which is the edge row count, so the choice
+  * costs no probe job. Within the bound the edge set is collected once
+  * into a [[Bfs.Adjacency]] and peeled in-process in the same
+  * synchronous waves; past it, or with a null endpoint or a
+  * non-integral `src`/`dst`, the distributed rounds below run. Both
+  * routes give the same core, the same round count and the same
+  * round-cap error.
   *
   * Scale shape (round-12 rework — delta peeling; round-14 rework —
   * lazy edge pinning): the loop maintains a VERTEX-sized degree
@@ -91,13 +102,6 @@ object KCore {
     // never defined — refuse the degenerate parameter loudly
     require(k >= 1, s"k-core needs k >= 1, got $k")
     Superstep.run { sc =>
-      // the degree table's checkpoint job also counts its rows and its
-      // doomed rows — the next round's bulk/delta decision and the halt
-      def degTable(df: DataFrame): (DataFrame, Long, Long) = {
-        val (cp, r) = sc.observe(df, Superstep.Memory,
-          count(lit(1)), count(when($"deg" < k, lit(1))))
-        (cp, r.getLong(0), r.getLong(1))
-      }
       // LAZY edge materialization (round 14): the up-front edge-sized
       // DISK checkpoint is pure overhead when the cascade is shallow —
       // at the sf1x rung the widened part graph converges in ONE round,
@@ -121,74 +125,148 @@ object KCore {
       // checkpointed frames).
       val unstable = PlanStability.isUnstable(edges0)
       val edges = if (unstable) sc.pin(plan, EDGE_LEVEL) else plan
-      val (deg0, alive0, doomed0) =
-        degTable(edges.groupBy($"src".as("node")).agg(count(lit(1)).as("deg")))
-      val last = sc.loop(Peel(edges, unstable, deg0, alive0, doomed0), maxIter,
-          (p: Peel) => s"k-core peeling (${p.alive} vertices still cascading)")(
-          p => Seq(p.edges, p.deg))(
-          // round 0 always runs: it subtracts the sink losses
-          (p, done) => p.alive == 0L || (done > 0 && p.doomed == 0L)) { (p, done) =>
-        val doomed = p.deg.filter($"deg" < k).select($"node")
-        if ((done == 0 && p.alive > BROADCAST_CAP) ||
-          p.doomed * REWRITE_FRACTION > p.alive || p.doomed > BROADCAST_CAP) {
-          // bulk wave: induce the edge set on the survivors and restart
-          // the degree table from it. Survivors whose induced
-          // OUT-degree hits 0 must keep an EXPLICIT deg=0 row (left
-          // join, not the bare groupBy): on directed input such a
-          // vertex can still carry surviving IN-edges, and if it
-          // silently left the table no doomed set could ever name it —
-          // its in-edges would inflate other survivors' degrees forever
-          // and the loop could converge on a wrong core (symmetric
-          // input cannot create one-sided sinks, so the shipped keys
-          // never hit this). With the row kept, the vertex is doomed
-          // next round and the delta machinery subtracts its in-edges
-          // like any other casualty.
-          val alive = p.deg.filter($"deg" >= k).select($"node")
-          val pruned = sc.pin(p.edges
-            .join(alive.select($"node".as("src")), Seq("src"), "left_semi")
-            .join(alive.select($"node".as("dst")), Seq("dst"), "left_semi"), EDGE_LEVEL)
-          val (deg2, n, d) = degTable(alive
-            .join(pruned.groupBy($"src".as("node")).agg(count(lit(1)).as("deg")),
-              Seq("node"), "left")
-            .select($"node", coalesce($"deg", lit(0L)).as("deg")))
-          Peel(pruned, onDisk = true, deg2, n, d)
-        } else {
-          // delta round: per-survivor losses = edges into the doomed
-          // set (inner join keeps bag multiplicity; the doomed set is
-          // distinct by construction — it comes out of a groupBy).
-          // A tail delta round (round >= 1) is the signal that the
-          // cascade will keep re-scanning the same edge set — pin it
-          // to disk now if it is still a lazy plan.
-          val pinNow = done >= 1 && !p.onDisk
-          val edges = if (pinNow) sc.pin(p.edges, EDGE_LEVEL) else p.edges
-          val lostEdges =
-            if (done > 0)
-              edges.join(broadcast(doomed.select($"node".as("dst"))), Seq("dst"))
-            else
-              // round 1 only: edges are lost to the doomed set OR to
-              // PURE SINKS (dst with no degree row — see object doc).
-              // Both lookups are broadcast hash joins pipelined into
-              // ONE whole-stage-codegen pass over the edge set
-              // (broadcastability of deg is guarded by the
-              // bulk-forcing condition above).
-              edges
-                .join(broadcast(doomed.select($"node".as("dst"), lit(true).as("__doomed"))),
-                  Seq("dst"), "left")
-                .join(broadcast(p.deg.select($"node".as("dst"), lit(true).as("__hasdeg"))),
-                  Seq("dst"), "left")
-                .filter(coalesce($"__doomed", lit(false)) || $"__hasdeg".isNull)
-          val deltas = lostEdges
-            .groupBy($"src".as("node")).agg(count(lit(1)).as("lost"))
-          val (deg2, n, d) = degTable(p.deg
-            .join(broadcast(doomed), Seq("node"), "left_anti")
-            .join(deltas, Seq("node"), "left")
-            .select($"node", ($"deg" - coalesce($"lost", lit(0L))).as("deg")))
-          Peel(edges, p.onDisk || pinNow, deg2, n, d)
-        }
+      // the first degree job also sums the degrees: Σ deg is the edge
+      // row count, so the route is decided without a probe job
+      val (deg0, r0) = degTable(sc, k,
+        edges.groupBy($"src".as("node")).agg(count(lit(1)).as("deg")),
+        coalesce(sum($"deg"), lit(0L)))
+      val (alive0, doomed0) = (r0.getLong(0), r0.getLong(1))
+      val local =
+        if (!Bfs.integral(edges0) || r0.getLong(2) > Quotient.probeBound(s)) None
+        // a null endpoint's degree-table row peels differently by bulk
+        // and delta rounds: such input keeps the distributed route
+        else Some(Bfs.Adjacency(edges.collect())).filter(_.allLinked)
+      local match {
+        case Some(adj) => localPeel(s, sc, adj, k, maxIter, alive0, doomed0)
+        case None => distributed(s, sc, Peel(edges, unstable, deg0, alive0, doomed0), k, maxIter)
       }
-      // the result reads the degree table alone — the run frees any
-      // edge blocks as it returns
-      last.deg.select($"node", $"deg".as("core_degree"))
     }
+  }
+
+  /** An eager pin of a degree table whose one job also counts its rows
+    * and its doomed rows — the next round's bulk/delta decision and the
+    * halt — then any `extra` statistics. */
+  private def degTable(sc: Superstep, k: Int, df: DataFrame,
+      extra: Column*): (DataFrame, Row) =
+    sc.observe(df, Superstep.Memory,
+      Seq(count(lit(1)), count(when(col("deg") < k, lit(1)))) ++ extra: _*)
+
+  /** [[run]]'s halt: round 0 always runs (it subtracts the sink
+    * losses), then the peel stops once a round dooms no vertex or
+    * none is left. */
+  private def halted(alive: Long, doomed: Long, done: Int): Boolean =
+    alive == 0L || (done > 0 && doomed == 0L)
+
+  private def what(alive: Long): String = s"k-core peeling ($alive vertices still cascading)"
+
+  /** The distributed route: the bulk/delta rounds over DataFrames. */
+  private def distributed(s: SparkSession, sc: Superstep, init: Peel, k: Int,
+      maxIter: Int): DataFrame = {
+    import s.implicits._
+    def degRound(df: DataFrame): (DataFrame, Long, Long) = {
+      val (cp, r) = degTable(sc, k, df)
+      (cp, r.getLong(0), r.getLong(1))
+    }
+    val last = sc.loop(init, maxIter,
+        (p: Peel) => what(p.alive))(p => Seq(p.edges, p.deg))(
+        (p, done) => halted(p.alive, p.doomed, done)) { (p, done) =>
+      val doomed = p.deg.filter($"deg" < k).select($"node")
+      if ((done == 0 && p.alive > BROADCAST_CAP) ||
+        p.doomed * REWRITE_FRACTION > p.alive || p.doomed > BROADCAST_CAP) {
+        // bulk wave: induce the edge set on the survivors and restart
+        // the degree table from it. Survivors whose induced
+        // OUT-degree hits 0 must keep an EXPLICIT deg=0 row (left
+        // join, not the bare groupBy): on directed input such a
+        // vertex can still carry surviving IN-edges, and if it
+        // silently left the table no doomed set could ever name it —
+        // its in-edges would inflate other survivors' degrees forever
+        // and the loop could converge on a wrong core (symmetric
+        // input cannot create one-sided sinks, so the shipped keys
+        // never hit this). With the row kept, the vertex is doomed
+        // next round and the delta machinery subtracts its in-edges
+        // like any other casualty.
+        val alive = p.deg.filter($"deg" >= k).select($"node")
+        val pruned = sc.pin(p.edges
+          .join(alive.select($"node".as("src")), Seq("src"), "left_semi")
+          .join(alive.select($"node".as("dst")), Seq("dst"), "left_semi"), EDGE_LEVEL)
+        val (deg2, n, d) = degRound(alive
+          .join(pruned.groupBy($"src".as("node")).agg(count(lit(1)).as("deg")),
+            Seq("node"), "left")
+          .select($"node", coalesce($"deg", lit(0L)).as("deg")))
+        Peel(pruned, onDisk = true, deg2, n, d)
+      } else {
+        // delta round: per-survivor losses = edges into the doomed
+        // set (inner join keeps bag multiplicity; the doomed set is
+        // distinct by construction — it comes out of a groupBy).
+        // A tail delta round (round >= 1) is the signal that the
+        // cascade will keep re-scanning the same edge set — pin it
+        // to disk now if it is still a lazy plan.
+        val pinNow = done >= 1 && !p.onDisk
+        val edges = if (pinNow) sc.pin(p.edges, EDGE_LEVEL) else p.edges
+        val lostEdges =
+          if (done > 0)
+            edges.join(broadcast(doomed.select($"node".as("dst"))), Seq("dst"))
+          else
+            // round 1 only: edges are lost to the doomed set OR to
+            // PURE SINKS (dst with no degree row — see object doc).
+            // Both lookups are broadcast hash joins pipelined into
+            // ONE whole-stage-codegen pass over the edge set
+            // (broadcastability of deg is guarded by the
+            // bulk-forcing condition above).
+            edges
+              .join(broadcast(doomed.select($"node".as("dst"), lit(true).as("__doomed"))),
+                Seq("dst"), "left")
+              .join(broadcast(p.deg.select($"node".as("dst"), lit(true).as("__hasdeg"))),
+                Seq("dst"), "left")
+              .filter(coalesce($"__doomed", lit(false)) || $"__hasdeg".isNull)
+        val deltas = lostEdges
+          .groupBy($"src".as("node")).agg(count(lit(1)).as("lost"))
+        val (deg2, n, d) = degRound(p.deg
+          .join(broadcast(doomed), Seq("node"), "left_anti")
+          .join(deltas, Seq("node"), "left")
+          .select($"node", ($"deg" - coalesce($"lost", lit(0L))).as("deg")))
+        Peel(edges, p.onDisk || pinNow, deg2, n, d)
+      }
+    }
+    // the result reads the degree table alone — the run frees any
+    // edge blocks as it returns
+    last.deg.select($"node", $"deg".as("core_degree"))
+  }
+
+  /** The local route: [[run]]'s rounds over the collected [[Bfs.Adjacency]]
+    * — the same synchronous waves (every vertex of degree < k leaves
+    * at once, then each survivor's degree counts its out-edges into
+    * the survivors) under the same halt, round cap and message, so
+    * the core and the round count equal the distributed route's.
+    * Round 0 drops every id that is not a survivor (the doomed and
+    * the pure sinks, as the distributed round 0 subtracts both); a
+    * later round walks only the doomed vertices' in-edges. */
+  private def localPeel(s: SparkSession, sc: Superstep, adj: Bfs.Adjacency, k: Int,
+      maxIter: Int, alive0: Long, doomed0: Long): DataFrame = {
+    val n = adj.ids.length
+    // in-edge CSR: the sources of each target's in-edges
+    val inOff = new Array[Int](n + 1)
+    adj.tgt.foreach(j => inOff(j + 1) += 1)
+    for (i <- 1 to n) inOff(i) += inOff(i - 1)
+    val inSrc = new Array[Int](adj.tgt.length)
+    val fill = inOff.clone()
+    for (i <- 0 until n; e <- adj.off(i) until adj.off(i + 1)) {
+      inSrc(fill(adj.tgt(e))) = i
+      fill(adj.tgt(e)) += 1
+    }
+    // the degree table: a vertex is in it while deg(i) >= 0
+    val deg = Array.tabulate(n)(i => if (adj.off(i + 1) > adj.off(i)) adj.off(i + 1) - adj.off(i) else -1)
+    sc.loop((alive0, doomed0), maxIter, (st: (Long, Long)) => what(st._1))(
+        _ => Nil)((st, done) => halted(st._1, st._2, done)) { (_, done) =>
+      val leaving = (0 until n).filter(i => deg(i) >= 0 && deg(i) < k || done == 0 && deg(i) < 0)
+      leaving.foreach(deg(_) = -1)
+      for (j <- leaving; e <- inOff(j) until inOff(j + 1) if deg(inSrc(e)) >= 0)
+        deg(inSrc(e)) -= 1
+      (deg.count(_ >= 0).toLong, deg.count(d => d >= 0 && d < k).toLong)
+    }
+    import scala.jdk.CollectionConverters._
+    val rows = (0 until n).filter(deg(_) >= 0).map(i => Row(adj.ids(i), deg(i).toLong))
+    s.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("node", LongType), StructField("core_degree", LongType, nullable = false))))
   }
 }

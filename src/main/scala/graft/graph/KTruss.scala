@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** k-truss decomposition by INCREMENTAL edge peeling: enumerate every
   * triangle ONCE, then repeatedly drop edges whose support (number of
@@ -12,6 +13,16 @@ import org.apache.spark.sql.functions._
   * mining; KCore peels vertices by degree, this peels edges by
   * triangle membership) — a strictly stronger cohesion filter, since
   * every k-truss edge lies in a (k−1)-core but not vice versa.
+  *
+  * Two routes, chosen by [[Quotient.probeBound]]
+  * (`spark.graft.dispatch.probeBound`): within the bound the edge set
+  * is collected once into a [[Bfs.Adjacency]] and peeled in-process by
+  * sorted-array intersection (see `localPeel`); past it, or with a null
+  * endpoint or a non-integral `src`/`dst`, the distributed rounds
+  * below run. [[run]] decides by a bounded row count, so nothing is
+  * collected past the bound; [[GraphDB.ktruss]] reads its per-version
+  * edge handle instead. Both routes give the same rows, the same
+  * round count and the same round-cap error.
   *
   * Scale shape:
   *   1. Triangle enumeration (once) uses the degree-ordering
@@ -90,9 +101,28 @@ object KTruss {
   /** `edges0(src, dst)` in any orientation (parallel/bidirectional
     * duplicates collapse); returns canonical `(a, b, support)` rows
     * of the k-truss, a < b. */
-  def run(s: SparkSession, edges0: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
-    import s.implicits._
+  def run(s: SparkSession, edges0: DataFrame, k: Int, maxIter: Int = MaxRounds): DataFrame =
+    run(s, edges0, k, maxIter, Bfs.countedAdjacency(edges0))
+
+  /** [[run]]'s default round cap. */
+  private[graph] val MaxRounds = 30
+
+  private val What = "k-truss peeling (edges still dropping)"
+
+  /** [[run]] on a route already chosen: `local` is the edge set's
+    * adjacency within the probe bound (the caller's probe, or
+    * [[GraphDB]]'s per-version handle), None past it. */
+  private[graph] def run(s: SparkSession, edges0: DataFrame, k: Int, maxIter: Int,
+                         local: Option[Bfs.Adjacency]): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
+    local.filter(_.allLinked)
+      .fold(distributed(s, edges0, k, maxIter))(localPeel(s, _, k, maxIter))
+  }
+
+  /** The distributed route: triangles enumerated once by joins, then
+    * the decrement rounds over checkpointed DataFrames. */
+  private def distributed(s: SparkSession, edges0: DataFrame, k: Int, maxIter: Int): DataFrame = {
+    import s.implicits._
     val edges = edges0
       .select(least(col("src"), col("dst")).cast("long").as("a"),
         greatest(col("src"), col("dst")).cast("long").as("b"))
@@ -120,7 +150,7 @@ object KTruss {
         .groupBy($"ea".as("a"), $"eb".as("b")).agg(count(lit(1)).as("support")))
       val dropped0 = sc.pin(alive0.limit(0).select($"a", $"b"))
       val (alive, _, _) = sc.loop((alive0, dropped0, drop0), maxIter,
-          (_: (DataFrame, DataFrame, Long)) => "k-truss peeling (edges still dropping)")(
+          (_: (DataFrame, DataFrame, Long)) => What)(
           st => Seq(st._1, st._2))((st, _) => st._3 == 0L) { case ((alive, dropped, _), _) =>
         // lazy: first materialized by the alive checkpoint below
         val newDrop = sc.pin(alive.filter($"support" < k - 2).select($"a", $"b"),
@@ -147,6 +177,87 @@ object KTruss {
         (nextAlive, sc.pin(dropped.union(newDrop)), nDrop)
       }
       alive.select($"a", $"b", $"support")
+    }
+  }
+
+  /** The local route: [[run]]'s peel over a collected
+    * [[Bfs.Adjacency]]. Each edge is put in canonical form (a < b,
+    * self-loops and repeats dropped), each vertex's neighbour run is
+    * sorted, and an edge's support is the size of its endpoints'
+    * sorted-array intersection (the worst-case-optimal join's
+    * intersection step, SIGMOD 2024). A round then drops every alive
+    * edge of support < k − 2 at once and decrements the other edges
+    * of each triangle that dies with it — counted once, from the
+    * triangle's lowest dropped edge — so supports, survivors, the
+    * round count and the round-cap throw equal the distributed
+    * route's. */
+  private def localPeel(s: SparkSession, adj: Bfs.Adjacency, k: Int, maxIter: Int): DataFrame = {
+    val n = adj.ids.length
+    // canonical edges (lo, hi) by node index, which is id order
+    val canon = {
+      val b = Array.newBuilder[Long]
+      for (i <- 0 until n; e <- adj.off(i) until adj.off(i + 1); j = adj.tgt(e) if i != j)
+        b += (math.min(i, j).toLong << 32) | math.max(i, j)
+      val a = b.result()
+      java.util.Arrays.sort(a)
+      a.distinct
+    }
+    val m = canon.length
+    def lo(e: Int) = (canon(e) >>> 32).toInt
+    def hi(e: Int) = canon(e).toInt
+    // undirected neighbour runs, each (neighbour << 32 | edge) sorted
+    val nOff = new Array[Int](n + 1)
+    for (e <- 0 until m) { nOff(lo(e) + 1) += 1; nOff(hi(e) + 1) += 1 }
+    for (i <- 1 to n) nOff(i) += nOff(i - 1)
+    val nbr = new Array[Long](2 * m)
+    val fill = nOff.clone()
+    for (e <- 0 until m) {
+      nbr(fill(lo(e))) = (hi(e).toLong << 32) | e; fill(lo(e)) += 1
+      nbr(fill(hi(e))) = (lo(e).toLong << 32) | e; fill(hi(e)) += 1
+    }
+    for (i <- 0 until n) java.util.Arrays.sort(nbr, nOff(i), nOff(i + 1))
+    // visits (edge a–w, edge b–w) for every common neighbour w of
+    // edge e's endpoints whose two edges pass `live`
+    def common(e: Int, live: Int => Boolean)(f: (Int, Int) => Unit): Unit = {
+      var x = nOff(lo(e)); var y = nOff(hi(e))
+      while (x < nOff(lo(e) + 1) && y < nOff(hi(e) + 1)) {
+        val (u, v) = (nbr(x) >>> 32, nbr(y) >>> 32)
+        if (u < v) x += 1
+        else if (v < u) y += 1
+        else {
+          val (f1, f2) = (nbr(x).toInt, nbr(y).toInt)
+          if (live(f1) && live(f2)) f(f1, f2)
+          x += 1; y += 1
+        }
+      }
+    }
+    val sup = new Array[Long](m)
+    for (e <- 0 until m) common(e, _ => true)((_, _) => sup(e) += 1)
+    // an edge in no triangle never enters the alive set
+    val alive = new java.util.BitSet(m)
+    for (e <- 0 until m if sup(e) > 0) alive.set(e)
+    def dropping(): Long = (0 until m).count(e => alive.get(e) && sup(e) < k - 2).toLong
+    Superstep.run { sc =>
+      sc.loop(dropping(), maxIter, (_: Long) => What)(_ => Nil)((d, _) => d == 0L) { (_, _) =>
+        val drop = new java.util.BitSet(m)
+        for (e <- 0 until m if alive.get(e) && sup(e) < k - 2) drop.set(e)
+        drop.stream().forEach { e =>
+          common(e, alive.get(_)) { (f1, f2) =>
+            // the triangle dies now; its lowest dropped edge counts it
+            if (!(drop.get(f1) && f1 < e) && !(drop.get(f2) && f2 < e)) {
+              if (!drop.get(f1)) sup(f1) -= 1
+              if (!drop.get(f2)) sup(f2) -= 1
+            }
+          }
+        }
+        alive.andNot(drop)
+        dropping()
+      }
+      import scala.jdk.CollectionConverters._
+      val rows = (0 until m).filter(alive.get)
+        .map(e => Row(adj.ids(lo(e)), adj.ids(hi(e)), sup(e)))
+      s.createDataFrame(rows.asJava, StructType(Seq(StructField("a", LongType),
+        StructField("b", LongType), StructField("support", LongType, nullable = false))))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -295,9 +295,18 @@ object RelationalPack extends QueryPack {
       // (distinct grid values differ by ≥ 0.01, so the packed order
       // is the double order); the /100.0 decode is the correctly-
       // rounded quotient, i.e. the bit-identical double.
-      val pk = (col("l_linenumber").cast("long") * lit(1L << 37)) +
-        (round(col("l_quantity") * 100).cast("long") * lit(1L << 24)) +
-        round(col("l_extendedprice") * 100).cast("long")
+      // A field outside its width would overlap its neighbour and pick
+      // the wrong survivor silently, so each field is range-checked
+      // inside the packed expression: a row outside the domain raises
+      // a named error from the same job, with no extra scan.
+      def field(c: Column, bits: Int, name: String): Column =
+        when(c.isNull || (c >= 0L && c < (1L << bits)), c)
+          .otherwise(raise_error(lit(
+            s"q_upsert_dedup: $name is outside the packed key's domain [0, 2^$bits)")))
+      val pk = (field(col("l_linenumber").cast("long"), 26, "l_linenumber") * lit(1L << 37)) +
+        (field(round(col("l_quantity") * 100).cast("long"), 13, "l_quantity*100") *
+          lit(1L << 24)) +
+        field(round(col("l_extendedprice") * 100).cast("long"), 24, "l_extendedprice*100")
       Tables.lineitem(s, d)
         .groupBy($"l_orderkey", $"l_partkey")
         .agg(min(pk).as("pk"))

@@ -791,17 +791,18 @@ object TextPack extends QueryPack {
     // winnowed with a 4-window minimum (standard winnowing scheme).
     "t_fingerprint" -> { (s, d) =>
       import s.implicits._
-      // winnowing is md5-per-gram CPU-bound: fan the scan out first.
-      // No .distinct(): winnowUdf dedups per document (LinkedHashSet)
-      // and doc_ids are unique, so (doc_id, fp) pairs leave the UDF
-      // already distinct — the old global distinct was a full-volume
-      // exchange re-proving a property the generator guarantees
-      // (round 16, §2.4 "a distinct on data that is already unique")
-      Tables.fanOut(s, Tables.documents(s, d))
+      // winnowing is md5-per-gram CPU-bound: fan the scan out first,
+      // hashed on doc_id at the same partition count. doc_ids need not
+      // be unique, so the distinct stays; HashPartitioning(doc_id)
+      // already satisfies its (doc_id, fp) clustering, so it adds no
+      // second exchange (the fan-out is the plan's one Exchange).
+      Tables.documents(s, d)
+        .repartition(s.sparkContext.defaultParallelism, $"doc_id")
         .withColumn("nrm", TextOps.norm($"text"))
         .filter(length($"nrm") >= FP_K + FP_W - 1)
         .withColumn("fp", explode(TextOps.winnowUdf(FP_K, FP_W)($"nrm")))
         .select($"doc_id", $"fp")
+        .distinct()
     },
   )
 

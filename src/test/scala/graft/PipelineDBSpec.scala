@@ -121,4 +121,61 @@ class PipelineDBSpec extends SparkSpec {
     assert(out.select(size(col("features"))).head().getInt(0) ===
       graft.multimodal.Decode.DIM)
   }
+
+  /** `rows` in the shipped table's column types, `cols` only. */
+  private def like(table: String, cols: Seq[String], df: org.apache.spark.sql.DataFrame) = {
+    val shipped = Tables.load(spark, sfDir, table).schema
+    df.toDF(cols: _*).select(cols.map(c => col(c).cast(shipped(c).dataType).as(c)): _*)
+  }
+
+  private val lineitemCols =
+    Seq("l_orderkey", "l_partkey", "l_linenumber", "l_quantity", "l_extendedprice")
+
+  test("q_upsert_dedup: a row outside the packed key's domain raises a named error") {
+    import spark.implicits._
+    val db = new PipelineDB(spark, freshRoot())
+    db.importTable("lineitem", like("lineitem", lineitemCols,
+      Seq((1L, 7L, 1, 90.0, 900.0), (1L, 7L, 2, 5.0, 50.0)).toDF()))
+    val e = expectTaskFailures(intercept[Exception](db.run("q_upsert_dedup").collect()))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(chain.exists(m => m != null && m.contains("l_quantity*100 is outside the packed key's domain")),
+      e.toString)
+  }
+
+  test("q_upsert_dedup: in-range rows equal the first row by (linenumber, quantity, price)") {
+    import spark.implicits._
+    val rows = Seq((1L, 7L, 2, 5.0, 50.0), (1L, 7L, 1, 30.0, 300.0), (1L, 7L, 1, 20.0, 999.5),
+      (2L, 3L, 4, 1.0, 10.25), (2L, 3L, 4, 1.0, 10.0), (3L, 1L, 7, 50.0, 104999.91),
+      (3L, 1L, 7, 50.0, 104999.9))
+    val db = new PipelineDB(spark, freshRoot())
+    db.importTable("lineitem", like("lineitem", lineitemCols, rows.toDF()))
+    val got = db.run("q_upsert_dedup").collect()
+      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
+        r.getAs[Number](2).intValue, r.getAs[Number](3).doubleValue)).toSet
+    val oracle = rows.groupBy(r => (r._1, r._2)).values
+      .map(_.minBy(r => (r._3, r._4, r._5))).map(r => (r._1, r._2, r._3, r._4)).toSet
+    assert(got === oracle)
+  }
+
+  test("t_fingerprint: duplicate doc_ids give distinct (doc_id, fp) rows through one exchange") {
+    import spark.implicits._
+    val t = "Winnowing keeps the minimum hash of every window of character grams, " +
+      "so two copies of one document share every fingerprint."
+    val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
+    def corpus(docs: Seq[(Long, String)]) = like("documents", cols,
+      docs.map { case (id, x) => (id, x, "en", "web", x.length) }.toDF())
+    val dup = new PipelineDB(spark, freshRoot())
+    dup.importDocuments(corpus(Seq((1L, t), (1L, t), (2L, t + " dup"))))
+    val unique = new PipelineDB(spark, freshRoot())
+    unique.importDocuments(corpus(Seq((1L, t), (2L, t + " dup"))))
+    val out = dup.textSignals("fingerprint")
+    // the plan as planned, before adaptive execution re-plans it
+    val plan = out.queryExecution.executedPlan.toString
+    val got = out.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got.distinct.size === got.size, "duplicate (doc_id, fp) rows")
+    assert(got.toSet ===
+      unique.textSignals("fingerprint").collect().map(r => (r.getLong(0), r.getString(1))).toSet)
+    assert(plan.linesIterator.count(l => l.contains("Exchange") && !l.contains("ReusedExchange")) === 1,
+      plan)
+  }
 }

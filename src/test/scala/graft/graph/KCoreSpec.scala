@@ -87,8 +87,13 @@ class KCoreSpec extends SparkSpec {
     val nodes = (1L to 6L)
     val pairs = for (a <- nodes; b <- nodes if a < b) yield (a, b)
     val base = edgesOf(pairs.toSeq: _*)
-    for (unstable <- Seq(base.limit(30), base.sample(withReplacement = false, 0.9, seed = 7))) {
-      val core = KCore.run(spark, unstable, k = 1).cache()
+    // at the default bound the pinned edges are peeled in-process; at
+    // bound 1 by the distributed rounds
+    for (bound <- Seq(None, Some("1"));
+         unstable <- Seq(base.limit(30), base.sample(withReplacement = false, 0.9, seed = 7))) {
+      bound.foreach(spark.conf.set(Quotient.PROBE_BOUND_KEY, _))
+      val core = try KCore.run(spark, unstable, k = 1).cache()
+        finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
       // whatever rows the ONE pinned evaluation drew, the output must
       // be an internally consistent core: non-empty here (k=1 on a
       // dense clique subset) with every reported degree ≥ k — an

@@ -439,6 +439,13 @@ class QuotientPropertySpec extends SparkSpec {
           val fast = asMap(Louvain.quotientBlowup(spark, sizes, partsDF, sweeps))
           assert(fast === dist,
             s"trial $trial sweeps=$sweeps: quotient diverges (sizes=$sizes)")
+          // the quotient's distributed sweeps (probe bound 1) — the
+          // route past the bound — make the equality three-way
+          spark.conf.set(Quotient.PROBE_BOUND_KEY, "1")
+          val swept = try asMap(Louvain.quotientBlowup(spark, sizes, partsDF, sweeps))
+            finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
+          assert(swept === dist,
+            s"trial $trial sweeps=$sweeps: distributed quotient diverges (sizes=$sizes)")
         }
       }
     }

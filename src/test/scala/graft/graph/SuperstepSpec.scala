@@ -83,11 +83,18 @@ class SuperstepSpec extends SparkSpec {
       "KCore" -> (() => KCore.run(spark, path, k = 2, maxIter = 1)),
       "KTruss" -> (() => KTruss.run(spark, strip, k = 4, maxIter = 1)),
       "Mis" -> (() => Mis.run(spark, verts, path, maxIter = 1)))
-    runs.foreach { case (name, run) =>
+    // KCore and KTruss run in-process within the probe bound and
+    // distributed at bound 1: both routes throw the same message
+    def throws(): Map[String, String] = runs.map { case (name, run) =>
       val before = persistent()
       val e = intercept[IllegalStateException](run().collect())
       assert(e.getMessage.contains("did not converge"), name)
       assert(persistent() -- before === Set.empty, s"$name leaked checkpoints")
-    }
+      name -> e.getMessage
+    }.toMap
+    val local = throws()
+    spark.conf.set(Quotient.PROBE_BOUND_KEY, "1")
+    val distributed = try throws() finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
+    assert(local === distributed)
   }
 }
