@@ -22,8 +22,7 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructTyp
   *     (nations, categories); the fact tables only ever DERIVE its
   *     edges. Past the bound, [[sigmaDistributed]]'s root-tagged
   *     frontier loop computes the same rows distributed instead of
-  *     throwing. [[sigmaBounded]] keeps the old hard-assert contract
-  *     for callers that CLAIM boundedness.
+  *     throwing ([[sigma]]).
   *
   *  2. The pair-dependency aggregation δ_st(v) = σ_sv·σ_vt / σ_st
   *     summed over all (s, t) pairs — executed IN SPARK SQL as two
@@ -39,15 +38,16 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructTyp
 object Betweenness {
 
   /** (root, node, wave, sigma): BFS wave (root = wave 1) and number
-    * of distinct shortest paths from root, for every reachable pair.
-    * Collect-guarded driver computation — see class doc. */
-  def sigmaBounded(edges: DataFrame): DataFrame = {
-    // single-sourced route bound (round-13, verdict #6)
-    val limit = Quotient.probeBound(edges.sparkSession)
-    val e = Quotient.probeRows(normEdges(edges), limit).getOrElse(
-      throw new IllegalArgumentException(
-        s"requirement failed: sigmaBounded edge set exceeds $limit rows — not dimension-bounded"))
-    sigmaSweep(edges.sparkSession, e)
+    * of distinct shortest paths from root, for every reachable pair —
+    * [[run]]'s σ stage. Within `bound` rows (the caller's, else
+    * [[Quotient.probeBound]]) the probe's collected edge rows feed the
+    * in-process sweep (the probe IS the collect — no second job); past
+    * it, [[sigmaDistributed]] runs instead of throwing. */
+  private[graph] def sigma(edges: DataFrame, bound: Int = -1): DataFrame = {
+    val spark = edges.sparkSession
+    Quotient.probeRows(normEdges(edges), Quotient.resolve(bound, spark, Quotient.probeBound))
+      .map(sigmaSweep(spark, _))
+      .getOrElse(sigmaDistributed(edges))
   }
 
   private def normEdges(edges: DataFrame): DataFrame =
@@ -102,8 +102,8 @@ object Betweenness {
     * loop with path counting riding the aggregation. State is
     * all-pairs-sized, so the per-wave checkpoints live on DISK; the
     * [[Superstep]] driver frees each wave's predecessor.
-    * Emits the same (root, node, wave, sigma) rows as [[sigmaBounded]]
-    * (FallbackRoutingSpec pins the multiset). */
+    * Emits the same (root, node, wave, sigma) rows as the in-process
+    * sweep (FallbackRoutingSpec pins the multiset). */
   private[graph] def sigmaDistributed(edges: DataFrame): DataFrame = Superstep.run { sc =>
     val lvl = Superstep.Disk
     // distinct: the in-process sweep's adjacency is a SET (a parallel
@@ -129,20 +129,13 @@ object Betweenness {
 
   /** Per-node exact betweenness over a bidirectional edge set:
     * (node, btw) with zero-centrality nodes included. The σ stage is
-    * ROUTED (round-10): within `bound`, the probe's collected edge
-    * rows feed the in-process sweep (the probe IS the collect — no
-    * second job); past it, [[sigmaDistributed]] runs instead of
-    * throwing — an unstructured fact-sized graph gets the measured
-    * distributed engine, not an exception. The pair-dependency SQL
-    * stage downstream is shared by both routes. */
+    * ROUTED ([[sigma]]): an unstructured fact-sized graph gets the
+    * measured distributed engine, not an exception. The
+    * pair-dependency SQL stage downstream is shared by both routes. */
   def run(spark: SparkSession, edges: DataFrame,
           bound: Int = -1): DataFrame = {
     import spark.implicits._
-    val sig = Quotient.probeRows(normEdges(edges),
-        Quotient.resolve(bound, spark, Quotient.probeBound))
-      .map(sigmaSweep(spark, _))
-      .getOrElse(sigmaDistributed(edges))
-      .localCheckpoint(false)
+    val sig = sigma(edges, bound).localCheckpoint(false)
     val sv = sig.select($"root".as("s"), $"node".as("v"),
       $"wave".as("wsv"), $"sigma".as("ssv"))
     val vt = sig.select($"root".as("t"), $"node".as("v"),

@@ -21,22 +21,14 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   * Scale design of the distributed route (SURVEY §5): edges are
   * hash-partitioned on `src` once and persisted, so every wave's join
   * reuses the same exchange; the frontier side is small and reshuffles
-  * cheaply (or AQE broadcasts it). Every wave is localCheckpoint-ed to
-  * truncate lineage — without that the plan doubles per wave and a
-  * deep traversal dies in the optimizer long before any shuffle does.
+  * cheaply (or AQE broadcasts it). The loops run on [[Superstep]]:
+  * each wave is one eager pin whose job also computes the wave's loop
+  * control, which truncates lineage — without that the plan doubles
+  * per wave and a deep traversal dies in the optimizer long before any
+  * shuffle does. The visited set is the union of the wave pins, so no
+  * wave is pinned twice.
   */
 object Bfs {
-
-  /** Truncate plan lineage WITHOUT a dedicated materialization job:
-    * a NON-eager localCheckpoint severs the logical plan (fresh
-    * LogicalRDD — also what keeps each wave's self-join against the
-    * shared edge table unambiguous) and defers block persistence to
-    * the next real job — bfs's per-wave loop-control isEmpty, or (in
-    * depth-bounded expand, which has no in-loop action) the caller's
-    * first action after the loop. An eager checkpoint per wave was
-    * ~3 scheduler round-trips per wave of pure overhead. */
-  private def settle(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = false)
 
   /** A bounded edge set's adjacency in CSR form — the ONE adjacency
     * build behind every in-process route: [[bfsAuto]]'s multi-root
@@ -185,30 +177,28 @@ object Bfs {
     * (main.py:286-292). Unreachable nodes are simply absent (callers
     * emit the reference's -1 via a left join).
     */
-  def bfs(edges: DataFrame, seeds: DataFrame, maxWaves: Int = 100): DataFrame = {
-    val e = edges.select("src", "dst").repartition(col("src")).persist()
-    // distinct: one output row per (root, node) seed however many
-    // times a caller repeats it — the same set semantics every later
-    // wave already has (and the bounded path mirrors).
-    var visited = seeds.select(col("root"), col("node")).distinct()
-      .withColumn("wave", lit(1L))
-      .localCheckpoint(eager = false)
-    var frontier = visited
-    var wave = 1L
-    while (wave < maxWaves && !frontier.isEmpty) {
-      wave += 1
-      val next = settle(
-        frontier.join(e, frontier("node") === e("src"))
+  def bfs(edges: DataFrame, seeds: DataFrame, maxWaves: Int = 100): DataFrame =
+    Superstep.run { sc =>
+      val e = sc.persist(edges.select("src", "dst").repartition(col("src")), Superstep.Memory)
+      // distinct: one output row per (root, node) seed however many
+      // times a caller repeats it — the same set semantics every later
+      // wave already has (and the bounded path mirrors).
+      val (wave1, n1) = sc.count(seeds.select(col("root"), col("node")).distinct()
+        .withColumn("wave", lit(1L)))
+      // (every wave's pin, the last wave's size)
+      val (waves, _) = sc.loop((Vector(wave1), n1), maxWaves,
+          (_: (Vector[DataFrame], Long)) => "bfs")(_._1)(
+          (st, done) => st._2 == 0L || done + 1 >= maxWaves) { case ((waves, _), done) =>
+        val frontier = waves.last
+        val (next, n) = sc.count(frontier.join(e, frontier("node") === e("src"))
           .select(frontier("root"), e("dst").as("node"))
           .distinct()
-          .join(visited.select("root", "node"), Seq("root", "node"), "left_anti")
-          .withColumn("wave", lit(wave)))
-      visited = settle(visited.union(next))
-      frontier = next
+          .join(waves.reduce(_ union _).select("root", "node"), Seq("root", "node"), "left_anti")
+          .withColumn("wave", lit(done + 2L)))
+        (waves :+ next, n)
+      }
+      sc.pin(waves.reduce(_ union _))
     }
-    e.unpersist()
-    visited
-  }
 
   /** ROUTED multi-root BFS (round-10: the Dispatch discipline applied
     * to the all-pairs spine) — same contract as [[bfs]], but the
@@ -284,36 +274,38 @@ object Bfs {
     * but it STOPS the moment the target enters the frontier — on a
     * 100 TB graph with a 3-hop answer, that is 3 co-partitioned joins
     * total, not a full reachability closure. Each wave's loop control
-    * (frontier size + target hit) is a single aggregation job; nothing
-    * is collected to the driver. [[GraphDB.query]] calls it directly
+    * (frontier size + target hit) rides the wave pin's one job;
+    * nothing is collected to the driver. [[GraphDB.query]] calls it directly
     * once its per-version probe has found the store past the bound. */
   private[graph] def frontierPair(edges: DataFrame, src: Long, dst: Long,
-                                  maxWaves: Int): Long = {
-    if (src == dst) return 1L
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.select(col("src"), col("dst")).repartition(col("src")).persist()
-    try {
-      var frontier = settle(Seq(src).toDF("node"))
-      var visited = frontier
-      var wave = 1L
-      while (wave <= maxWaves) {
-        // one job decides both loop conditions
-        val (n, hit) = frontier
-          .agg(count(lit(1)), max(when(col("node") === dst, 1L)))
-          .as[(Long, Option[Long])].head()
-        if (hit.contains(1L)) return wave
-        if (n == 0) return -1L
-        wave += 1
-        frontier = settle(
-          frontier.join(e, frontier("node") === e("src"))
-            .select(e("dst").as("node")).distinct()
-            .join(visited, Seq("node"), "left_anti"))
-        visited = settle(visited.union(frontier))
+                                  maxWaves: Int): Long =
+    if (src == dst) 1L
+    else Superstep.run { sc =>
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val e = sc.persist(edges.select(col("src"), col("dst")).repartition(col("src")),
+        Superstep.Memory)
+      // one job pins a wave and decides both loop conditions: its size
+      // and whether it holds the target
+      def wave(frontier: DataFrame): (DataFrame, Long, Boolean) = {
+        val (cp, r) = sc.observe(frontier, Superstep.Memory,
+          count(lit(1)), max(when(col("node") === dst, 1L)))
+        (cp, r.getLong(0), !r.isNullAt(1))
       }
-      -1L
-    } finally e.unpersist()
-  }
+      val (w1, n1, hit1) = wave(Seq(src).toDF("node"))
+      // (every wave's pin, the last wave's size, whether it hit)
+      val (waves, _, hit) = sc.loop((Vector(w1), n1, hit1), maxWaves,
+          (_: (Vector[DataFrame], Long, Boolean)) => "frontier pair")(_._1)(
+          (st, done) => st._3 || st._2 == 0L || done + 1 >= maxWaves) {
+        case ((waves, _, _), _) =>
+          val frontier = waves.last
+          val (next, n, h) = wave(frontier.join(e, frontier("node") === e("src"))
+            .select(e("dst").as("node")).distinct()
+            .join(waves.reduce(_ union _), Seq("node"), "left_anti"))
+          (waves :+ next, n, h)
+      }
+      if (hit) waves.length.toLong else -1L
+    }
 
   /** Batched early-exit pair queries — [[wavePair]]'s semantics for a
     * SET of (src, dst) probes. Per probe the semantics are identical:
@@ -344,44 +336,45 @@ object Bfs {
     import spark.implicits._
     val answered = scala.collection.mutable.Map.empty[(Long, Long), Long]
     pairs.distinct.foreach { case (a, b) => if (a == b) answered((a, b)) = 1L }
-    var open: Seq[(Long, Long)] = pairs.distinct.filterNot(answered.contains)
-    if (open.isEmpty) return pairs.map(p => (p._1, p._2, answered(p)))
-    val e = edges.select(col("src"), col("dst")).repartition(col("src")).persist()
-    try {
-      var frontier = settle(open.map(_._1).distinct.toDF("root")
-        .select($"root", $"root".as("node")))
-      var visited = frontier
-      var wave = 1L
-      while (wave <= maxWaves && open.nonEmpty) {
-        // ONE job per wave decides loop control for every open probe:
-        // per-root frontier size + which targets this wave reached.
-        // open is dimension-bounded (a probe list), so the broadcast
-        // and the collected per-root rows are both tiny.
-        val targets = broadcast(open.toDF("troot", "tdst"))
-        val perRoot = frontier
-          .join(targets, $"root" === $"troot" && $"node" === $"tdst", "left")
-          .groupBy($"root")
-          .agg(collect_set($"tdst").as("hit_dsts"))
-          .as[(Long, Seq[Long])].collect().toMap
-        open.foreach { case (a, b) =>
-          if (perRoot.get(a).exists(_.contains(b))) answered((a, b)) = wave
-          else if (!perRoot.contains(a)) answered((a, b)) = -1L // frontier died
+    val open0 = pairs.distinct.filterNot(answered.contains)
+    if (open0.nonEmpty) Superstep.run { sc =>
+      val e = sc.persist(edges.select(col("src"), col("dst")).repartition(col("src")),
+        Superstep.Memory)
+      // ONE job pins wave `w` and decides loop control for every open
+      // probe: which roots still have a frontier, and which targets it
+      // reached. open is dimension-bounded (a probe list), so the
+      // broadcast and the observed sets are both tiny. Returns the pin
+      // and the probes still open.
+      def wave(frontier: DataFrame, open: Seq[(Long, Long)], w: Long): (DataFrame, Seq[(Long, Long)]) = {
+        val (cp, r) = sc.observe(frontier
+            .join(broadcast(open.toDF("troot", "tdst")),
+              $"root" === $"troot" && $"node" === $"tdst", "left")
+            .select($"root", $"node", $"tdst"), Superstep.Memory,
+          collect_set($"root"), collect_set(when($"tdst".isNotNull, array($"root", $"tdst"))))
+        val live = r.getSeq[Long](0).toSet
+        val hits = r.getSeq[Seq[Long]](1).map(h => (h(0), h(1))).toSet
+        open.foreach { case p @ (a, _) =>
+          if (hits(p)) answered(p) = w
+          else if (!live(a)) answered(p) = -1L // frontier died
         }
-        open = open.filterNot(answered.contains)
-        wave += 1
-        if (open.nonEmpty) {
-          val liveRoots = open.map(_._1).distinct
-          frontier = settle(
-            frontier.filter($"root".isin(liveRoots: _*))
-              .join(e, frontier("node") === e("src"))
-              .select($"root", e("dst").as("node")).distinct()
-              .join(visited, Seq("root", "node"), "left_anti"))
-          visited = settle(visited.union(frontier))
-        }
+        (cp.select($"root", $"node"), open.filterNot(answered.contains))
+      }
+      val (w1, open1) = wave(open0.map(_._1).distinct.toDF("root")
+        .select($"root", $"root".as("node")), open0, 1L)
+      // (every wave's pin, the probes still open)
+      val (_, open) = sc.loop((Vector(w1), open1), maxWaves,
+          (_: (Vector[DataFrame], Seq[(Long, Long)])) => "frontier pairs")(_._1)(
+          (st, done) => st._2.isEmpty || done + 1 >= maxWaves) { case ((waves, open), done) =>
+        val frontier = waves.last
+        val (next, stillOpen) = wave(frontier.filter($"root".isin(open.map(_._1).distinct: _*))
+          .join(e, frontier("node") === e("src"))
+          .select($"root", e("dst").as("node")).distinct()
+          .join(waves.reduce(_ union _), Seq("root", "node"), "left_anti"), open, done + 2L)
+        (waves :+ next, stillOpen)
       }
       open.foreach(p => answered(p) = -1L) // maxWaves exhausted
-      pairs.map(p => (p._1, p._2, answered(p)))
-    } finally e.unpersist()
+    }
+    pairs.map(p => (p._1, p._2, answered(p)))
   }
 
   /** QUOTIENT wavefront expansion for the (brand, size ± deltas)

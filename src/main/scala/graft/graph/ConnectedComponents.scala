@@ -23,11 +23,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (SURVEY §5): every round is two groupBy-min shuffles +
   * two self-joins on the same key — no driver-side state, no
-  * collect. Rounds localCheckpoint (non-eager) to truncate lineage,
-  * same pattern as [[Bfs]]. Convergence is an exact set-equality
-  * check (one-sided `except`), gated by a cheap one-job fingerprint
-  * so the except runs only on rounds that can actually be the
-  * fixpoint — see [[fingerprint]].
+  * collect. Rounds run on [[Superstep]]: each round's pair set is one
+  * eager pin whose job also computes its [[fingerprint]], and the run
+  * frees each dead round. Convergence is an exact set-equality check
+  * (one-sided `except`), gated by the fingerprint so the except runs
+  * only on rounds that can actually be the fixpoint. Once the pair
+  * set is within [[Quotient.probeBound]] rows, it is collected and
+  * closed with a [[UnionFind]] instead (the local finish).
   */
 object ConnectedComponents {
 
@@ -76,65 +78,51 @@ object ConnectedComponents {
       .distinct()
   }
 
-  /** One-job set fingerprint: (row count, XOR of per-row hashes).
-    * Order-independent, overflow-free, and valid for SETS (the edge
-    * DF is distinct by construction). Equal sets ⇒ equal fingerprint,
-    * so it gates the exact `except` check: a fingerprint collision
-    * merely wastes one except job, never affects the result. This is
-    * also the materializing action for the non-eager checkpoint. */
-  private def fingerprint(e: DataFrame): (Long, Long) = {
-    val r = e.agg(
-      count(lit(1)),
-      coalesce(expr("bit_xor(xxhash64(hi, lo))"), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
+  /** Set fingerprint: (row count, XOR of per-row hashes), observed by
+    * the eager pin of the pair set. Order-independent, overflow-free,
+    * and valid for SETS (the edge DF is distinct by construction).
+    * Equal sets ⇒ equal fingerprint, so it gates the exact `except`
+    * check: a fingerprint collision merely wastes one except job,
+    * never affects the result. */
+  private def fingerprint(sc: Superstep, e: DataFrame): (DataFrame, (Long, Long)) = {
+    val (cp, r) = sc.observe(e, Superstep.Memory,
+      count(lit(1)), coalesce(expr("bit_xor(xxhash64(hi, lo))"), lit(0L)))
+    (cp, (r.getLong(0), r.getLong(1)))
   }
 
   /** (id, component) for every vertex in `vertices` (col "id");
     * `edges` has (src, dst), either or both orientations.
     *
-    * @param localFinishThreshold once the contracted pair set's count
-    *        (already known from the fingerprint gate — no extra job)
-    *        drops to this many rows, the remaining relation is
-    *        collected and closed with union-find on the driver instead
-    *        of running further distributed rounds. Star contraction
-    *        shrinks the pair set geometrically, so at any fact scale
-    *        the loop reaches the threshold after O(log n) rounds —
-    *        and the tail rounds it replaces are exactly the ones where
-    *        per-round scheduling overhead dwarfs the (tiny) data. The
-    *        same adaptive principle as AQE swapping in a broadcast
-    *        join when a runtime size drops under a bound. 0 disables.
-    */
+    * Once the contracted pair set's count (already known from the
+    * fingerprint — no extra job) is within [[Quotient.probeBound]]
+    * rows, the remaining relation is collected and closed with
+    * union-find on the driver instead of running further distributed
+    * rounds. Star contraction shrinks the pair set geometrically, so
+    * at any fact scale the loop reaches the bound after O(log n)
+    * rounds — and the tail rounds it replaces are exactly the ones
+    * where per-round scheduling overhead dwarfs the (tiny) data. */
   def run(s: SparkSession, vertices: DataFrame, edges: DataFrame,
-          maxRounds: Int = 50, localFinishThreshold: Int = 1 << 16): DataFrame = {
-    var cur = canonical(edges).localCheckpoint(eager = false)
-    var curFp = fingerprint(cur)
-    var converged = curFp._1 == 0L
-    var round = 0
-    while (!converged && round < maxRounds && curFp._1 > localFinishThreshold) {
-      round += 1
-      val next = smallStar(largeStar(cur)).localCheckpoint(eager = false)
-      // At the fixpoint both stars are identities, so next == cur
-      // (sets of canonical pairs). The exact one-sided difference
-      // runs only when the one-job fingerprints already agree —
-      // progressing rounds pay a single count+xor aggregate, and
-      // equal-count-but-still-moving rounds (which a count-only gate
-      // lets through) skip the except too.
-      val nextFp = fingerprint(next)
-      converged = nextFp == curFp && next.except(cur).isEmpty
-      cur = next
-      curFp = nextFp
+          maxRounds: Int = 50): DataFrame =
+    Superstep.run(run(_, s, vertices, edges, maxRounds))
+
+  /** [[run]] on the caller's [[Superstep]], so a caller's own loop
+    * (the Borůvka [[Mst]]) owns and frees these pins too. */
+  private[graph] def run(sc: Superstep, s: SparkSession, vertices: DataFrame,
+                         edges: DataFrame, maxRounds: Int): DataFrame = {
+    val bound = Quotient.probeBound(s)
+    val (cur0, fp0) = fingerprint(sc, canonical(edges))
+    // (pairs, fingerprint, converged): a round's pairs equal the
+    // previous round's at the fixpoint, where both stars are identities
+    val (cur, (n, _), converged) = sc.loop((cur0, fp0, fp0._1 == 0L), maxRounds,
+        (st: (DataFrame, (Long, Long), Boolean)) => s"connected components (${st._2._1} pairs)")(
+        st => Seq(st._1))((st, _) => st._3 || st._2._1 <= bound) { case ((cur, curFp, _), _) =>
+      val (next, nextFp) = fingerprint(sc, smallStar(largeStar(cur)))
+      // the exact one-sided difference runs only when the fingerprints
+      // already agree: progressing rounds pay no second job
+      (next, nextFp, nextFp == curFp && next.except(cur).isEmpty)
     }
-    // Ran out of rounds with the relation still both moving and too
-    // large to close locally: the mid-contraction pairs are NOT labels
-    // and returning them would silently mislabel components.
-    if (!converged && curFp._1 > localFinishThreshold)
-      throw new IllegalStateException(
-        s"connected components did not converge in $maxRounds rounds " +
-          s"(${curFp._1} pairs remain > localFinishThreshold=$localFinishThreshold); " +
-          "raise maxRounds or the threshold")
     val labels =
-      if (!converged && curFp._1 > 0 && curFp._1 <= localFinishThreshold)
-        localFinishLabels(s, cur)
+      if (!converged && n > 0) localFinishLabels(s, cur)
       else cur.select(col("hi").as("id"), col("lo").as("component"))
     vertices.select(col("id").cast("long").as("id"))
       .join(labels, Seq("id"), "left")
@@ -203,15 +191,29 @@ object ConnectedComponents {
       .select(col("id"), coalesce(col("comp"), col("id")).as("component"))
   }
 
-  /** Exact closure of a threshold-sized pair relation: union-find with
-    * path compression, roots kept at the minimum id (so labels match
-    * the distributed fixpoint's min-id contract bit for bit). */
+  /** Exact closure of a bound-sized pair relation: union-find with
+    * roots kept at the minimum id, so labels match the distributed
+    * fixpoint's min-id contract bit for bit. */
   private def localFinishLabels(s: SparkSession, e: DataFrame): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import scala.jdk.CollectionConverters._
     val pairs = e.select(col("hi"), col("lo")).collect()
-    val parent = new java.util.HashMap[Long, Long]()
+    val uf = new UnionFind
+    pairs.foreach(p => uf.union(p.getLong(0), p.getLong(1)))
+    val nodes = pairs.iterator.flatMap(p => Iterator(p.getLong(0), p.getLong(1)))
+      .toArray.distinct.sorted
+    val rows: Seq[Row] = nodes.toIndexedSeq.map(n => Row(n, uf.find(n)))
+    s.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("id", LongType), StructField("component", LongType))))
+  }
+
+  /** Union-find over long ids with path compression; every root is the
+    * minimum id of its set, the min-id component label. Shared by the
+    * local finish and [[Mst]]'s in-process Kruskal. */
+  private[graph] final class UnionFind {
+    private val parent = new java.util.HashMap[Long, Long]()
+
     def find(x: Long): Long = {
       var r = x
       while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
@@ -219,14 +221,12 @@ object ConnectedComponents {
       while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    pairs.foreach { p =>
-      val a = find(p.getLong(0)); val b = find(p.getLong(1))
-      if (a != b) { if (a < b) parent.put(b, a) else parent.put(a, b) }
+
+    /** Merges the sets of `a` and `b`; false when they were one set. */
+    def union(a: Long, b: Long): Boolean = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
+      ra != rb
     }
-    val nodes = pairs.iterator.flatMap(p => Iterator(p.getLong(0), p.getLong(1)))
-      .toArray.distinct.sorted
-    val rows: Seq[Row] = nodes.toIndexedSeq.map(n => Row(n, find(n)))
-    s.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("id", LongType), StructField("component", LongType))))
   }
 }

@@ -86,28 +86,30 @@ class GraphDB(s: SparkSession, root: String) {
     * once (first-seen wins). Returns the final snapshot version.
     */
   def addExpansion(seeds: DataFrame, rule: DataFrame => DataFrame, depth: Int): Int = {
-    var version = GraphStore.latestVersion(s, root)
-    require(version > 0, s"GraphDB at $root is empty - call init() first")
-    var frontier = seeds.select(col("node")).distinct().localCheckpoint(eager = false)
-    var seen = frontier
-    var wave = 0
-    while (wave < depth && !frontier.isEmpty) {
-      wave += 1
-      // Materialize the rule's derivation ONCE: it has two consumers
-      // (the upsert write and the next frontier), and an uncached
-      // re-evaluation would run the rule twice per wave — with
-      // different rows, if the rule is nondeterministic, expanding a
-      // frontier that differs from the edges actually persisted.
-      val newEdges = rule(frontier).localCheckpoint()
-      // an empty wave has nothing to persist — don't rewrite the
-      // whole store into a byte-identical snapshot
-      if (!newEdges.isEmpty) version = addRelations(newEdges)
-      frontier = newEdges.select(col("dst").as("node")).distinct()
-        .join(seen, Seq("node"), "left_anti")
-        .localCheckpoint(eager = false)
-      seen = seen.union(frontier).localCheckpoint(eager = false)
+    val version0 = GraphStore.latestVersion(s, root)
+    require(version0 > 0, s"GraphDB at $root is empty - call init() first")
+    Superstep.run { sc =>
+      val (f0, n0) = sc.count(seeds.select(col("node")).distinct())
+      // (every wave's frontier pin — together the seen set — the last
+      // frontier's size, the latest version)
+      val (_, _, version) = sc.loop((Vector(f0), n0, version0), depth,
+          (_: (Vector[DataFrame], Long, Int)) => "expansion")(_._1)(
+          (st, done) => st._2 == 0L || done >= depth) { case ((fronts, _, version), _) =>
+        // Pin the rule's derivation ONCE: it has two consumers (the
+        // upsert write and the next frontier), and an uncached
+        // re-evaluation would run the rule twice per wave — with
+        // different rows, if the rule is nondeterministic, expanding a
+        // frontier that differs from the edges actually persisted.
+        val (newEdges, m) = sc.count(rule(fronts.last))
+        // an empty wave has nothing to persist — don't rewrite the
+        // whole store into a byte-identical snapshot
+        val committed = if (m > 0) addRelations(newEdges) else version
+        val (next, n) = sc.count(newEdges.select(col("dst").as("node")).distinct()
+          .join(fronts.reduce(_ union _), Seq("node"), "left_anti"))
+        (fronts :+ next, n, committed)
+      }
+      version
     }
-    version
   }
 
   /** BFS shortest path from `src` to `dst` in wave counts: the source

@@ -143,11 +143,8 @@ object GraphPack extends QueryPack {
     * g_modularity evaluate the SAME 4-round labeling, so the second
     * consumer reuses the first's result instead of re-running the
     * iterative program ([[graft.SessionCache]]'s discipline). The
-    * cached DataFrame is the run's own lazily-checkpointed final
-    * labels — NO extra eager materialization here, so merely
-    * BUILDING a consumer's plan (PlanShapeSpec, explain()) stays
-    * cheap and only one copy of the label blocks is ever
-    * persisted. */
+    * cached DataFrame is the run's own eager pin of the final labels,
+    * so only one copy of the label blocks is ever persisted. */
   private val lpaCache = new graft.SessionCache[DataFrame]
 
   private def lpaLabels(s: SparkSession, d: String): DataFrame =
@@ -497,12 +494,11 @@ object GraphPack extends QueryPack {
     // A9: fixed-iteration PageRank as a deterministic DataFrame plan
     // (decimal-quantized messages — see PageRank.scala's contract).
     // tradeEdges is bidirectional by construction, and its node set is
-    // the nation dimension (bounded at any fact scale), so smallRanks
+    // the nation dimension (bounded at any fact scale), so the probe
     // routes it to the in-process rank vector; past the probe bound
     // each iteration is one shuffle.
     "g_pagerank" -> { (s, d) =>
-      PageRank.run(GraphBuilder.tradeEdges(s, d), PR_ITERS,
-        bidirectional = true, smallRanks = true)
+      PageRank.run(GraphBuilder.tradeEdges(s, d), PR_ITERS, bidirectional = true)
     },
 
     // A30: HITS hubs & authorities over the DIRECTED size-up part

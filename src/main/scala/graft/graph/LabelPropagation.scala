@@ -18,115 +18,41 @@ import org.apache.spark.sql.functions._
   * then per-dst argmax via max(struct(count, -label)) — followed by a
   * left join back to the full vertex set; everything shuffles on the
   * vertex key, nothing is collected. Lineage is truncated per round
-  * (lazy localCheckpoint), so K rounds cost K bounded stage chains at
-  * any graph size. Rounds are FIXED (not run to convergence): LPA on
-  * bidirectional graphs can oscillate under synchronous updates, so a
-  * fixed-round contract is both the deterministic and the honest one.
+  * (a lazy [[Superstep]] pin), so K rounds cost K bounded stage chains
+  * at any graph size, and one eager pin of the result lets the run
+  * free every round's pin. Rounds are FIXED (not run to convergence):
+  * LPA on bidirectional graphs can oscillate under synchronous
+  * updates, so a fixed-round contract is both the deterministic and
+  * the honest one.
   */
 object LabelPropagation {
 
-  /** @param smallGraph caller's ASSERTION that the graph is
-    *        dimension-bounded (≤ 2^20 edges and vertices at ANY fact
-    *        scale): edges and vertex ids are then collected once and
-    *        the label rounds run in-process, replacing iters × (join +
-    *        two aggregations) scheduler rounds with one job —
-    *        bit-identical output because LPA is pure integer
-    *        arithmetic with a total (count DESC, label ASC) order
-    *        ([[PersonalizedPageRank]]'s guarded fast-path pattern).
-    *        Refused with an exception if the assertion is false. The
-    *        distributed loop stays the default and is what the
-    *        benchmark exercises. */
-  def run(s: SparkSession, vertices: DataFrame, edges: DataFrame, iters: Int,
-          smallGraph: Boolean = false): DataFrame = {
-    if (smallGraph) runDimBounded(s, vertices, edges, iters)
-    else runDistributed(s, vertices, edges, iters)
-  }
-
-  private def runDistributed(s: SparkSession, vertices: DataFrame, edges: DataFrame,
-                             iters: Int): DataFrame = {
+  def run(s: SparkSession, vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     import s.implicits._
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // Derived once, hash-partitioned on the join key: localCheckpoint
-    // preserves outputPartitioning, and the per-round join builds the
-    // vertex-sized label vector (shuffle_hash hint) while STREAMING
-    // the edges — no exchange and no per-round sort of the edge side.
-    val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .repartition(col("src"))
-      .localCheckpoint(false)
-    var labels = vertices.select(col("id").cast("long").as("id"))
-      .withColumn("label", $"id")
-      .repartition(col("id"))
-      .localCheckpoint(false)
-    for (_ <- 1 to iters) {
-      val counts = e.join(labels.select($"id".as("src"), $"label").hint("shuffle_hash"), "src")
-        .groupBy($"dst".as("id"), $"label").agg(count(lit(1)).as("c"))
-      // mode with min-label tie-break: max over (count, -label)
-      val upd = counts.groupBy($"id")
-        .agg(max(struct($"c", (-$"label").as("nl"))).as("m"))
-        .select($"id", (-$"m.nl").as("new_label"))
-      labels = labels.join(upd.hint("shuffle_hash"), Seq("id"), "left")
-        .select($"id", coalesce($"new_label", $"label").as("label"))
-        .localCheckpoint(false)
-    }
-    labels
-  }
-
-  /** Dimension-bounded fast path: one distributed job ships the edge
-    * list and vertex ids (limits INSIDE the collects — a fact-sized
-    * graph is refused after at most limit+1 rows, never an OOM-sized
-    * collect); the synchronous rounds then run in-process. Integer
-    * counts, max over (count, −label) — the exact argmax the
-    * distributed struct-max computes — so the result is bit-identical
-    * by construction (spec-asserted). */
-  private def runDimBounded(s: SparkSession, vertices: DataFrame, edges: DataFrame,
-                            iters: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import scala.collection.mutable
-    import scala.jdk.CollectionConverters._
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    // single-sourced route bound (round-13, verdict #6)
-    val limit = Quotient.probeBound(s)
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .limit(limit + 1).collect().map(r => (r.getLong(0), r.getLong(1)))
-    require(e.length <= limit,
-      s"smallGraph is set but the edge set exceeds $limit rows — " +
-        "not dimension-bounded; use the distributed path")
-    val vRows = vertices.select(col("id").cast("long")).limit(limit + 1).collect()
-    require(vRows.length <= limit,
-      s"smallGraph is set but the vertex set exceeds $limit rows — " +
-        "not dimension-bounded; use the distributed path")
-    // degenerate inputs fail loudly rather than silently diverging
-    // from the distributed path: getLong would read a NULL id as 0,
-    // and a duplicated vertex row would multiply that source's votes
-    // in the distributed edges⋈labels join — semantics this in-process
-    // count can't (and shouldn't) reproduce
-    require(vRows.forall(!_.isNullAt(0)), "smallGraph path: null vertex id")
-    val v = vRows.map(_.getLong(0))
-    require(v.distinct.length == v.length,
-      "smallGraph path: duplicate vertex ids (deduplicate the vertex set first)")
-    var label = mutable.HashMap(v.map(n => n -> n).toIndexedSeq: _*)
-    for (_ <- 1 to iters) {
-      val counts = mutable.HashMap.empty[(Long, Long), Long]
-      e.foreach { case (src, dst) =>
-        // only labeled sources vote, exactly like the edges⋈labels join
-        label.get(src).foreach { l =>
-          counts.update((dst, l), counts.getOrElse((dst, l), 0L) + 1L)
-        }
+    Superstep.run { sc =>
+      // Derived once, hash-partitioned on the join key: a pin preserves
+      // outputPartitioning, and the per-round join builds the
+      // vertex-sized label vector (shuffle_hash hint) while STREAMING
+      // the edges — no exchange and no per-round sort of the edge side.
+      val e = sc.pin(edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst")).repartition(col("src")), eager = false)
+      val labels0 = sc.pin(vertices.select(col("id").cast("long").as("id"))
+        .withColumn("label", $"id")
+        .repartition(col("id")), eager = false)
+      val labels = sc.rounds(labels0, iters)(Seq(_)) { (labels, _) =>
+        val counts = e.join(labels.select($"id".as("src"), $"label").hint("shuffle_hash"), "src")
+          .groupBy($"dst".as("id"), $"label").agg(count(lit(1)).as("c"))
+        // mode with min-label tie-break: max over (count, -label)
+        val upd = counts.groupBy($"id")
+          .agg(max(struct($"c", (-$"label").as("nl"))).as("m"))
+          .select($"id", (-$"m.nl").as("new_label"))
+        sc.pin(labels.join(upd.hint("shuffle_hash"), Seq("id"), "left")
+          .select($"id", coalesce($"new_label", $"label").as("label")), eager = false)
       }
-      // per-dst argmax over (count, −label): lexicographic tuple max ==
-      // the distributed max(struct(c, −label))
-      val best = mutable.HashMap.empty[Long, (Long, Long)]
-      counts.foreach { case ((dst, l), c) =>
-        val cand = (c, -l)
-        if (best.get(dst).forall(b => Ordering[(Long, Long)].lt(b, cand)))
-          best.update(dst, cand)
-      }
-      label = label.map { case (n, old) => n -> best.get(n).map(b => -b._2).getOrElse(old) }
+      // no action ran inside the loop: one eager pin of the result, so
+      // the run frees every round's lazy pin
+      sc.pin(labels)
     }
-    val rows = v.sorted.map(n => Row(n, label(n))).toSeq
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("label", LongType)))
-    s.createDataFrame(rows.asJava, schema)
   }
 }

@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
   */
 object Mst {
 
-  /** Routed entry (round 16 — the Dispatch/localFinishThreshold
-    * discipline applied to the forest): the weighted edge set is
+  /** Routed entry (round 16 — the Dispatch discipline applied to the
+    * forest): the weighted edge set is
     * probed ONCE with the limit inside the collect; within the bound
     * the unique MSF closes in-process with Kruskal under the same
     * (w, a, b) total order (distinct effective weights ⇒ the MSF is
@@ -73,69 +73,54 @@ object Mst {
       else if (r1.getLong(0) != r2.getLong(0)) r1.getLong(0) < r2.getLong(0)
       else r1.getLong(1) < r2.getLong(1)
     }
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-      var c = x
-      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-      r
-    }
-    val kept = sorted.filter { r =>
-      val ra = find(r.getLong(0)); val rb = find(r.getLong(1))
-      if (ra == rb) false
-      else { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb); true }
-    }
+    val uf = new ConnectedComponents.UnionFind
+    val kept = sorted.filter(r => uf.union(r.getLong(0), r.getLong(1)))
     s.createDataFrame(kept.toIndexedSeq.asJava, schema)
   }
 
-  private def distributed(s: SparkSession, edges0: DataFrame, maxRounds: Int): DataFrame = {
-    import s.implicits._
-    val edges = edges0.localCheckpoint(false)
-    val nodes = edges.select($"a".as("id")).union(edges.select($"b".as("id"))).distinct()
-    var comp = nodes.select($"id", $"id".as("component")).localCheckpoint(false)
-    val forest = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      round += 1
-      // edges whose endpoints live in different components, with the
-      // current component of each endpoint attached
-      val ec = edges
-        .join(comp.select($"id".as("a"), $"component".as("ca")), Seq("a"))
-        .join(comp.select($"id".as("b"), $"component".as("cb")), Seq("b"))
-        .filter($"ca" =!= $"cb")
-        .localCheckpoint(false)
-      if (ec.isEmpty) done = true
-      else {
+  /** The Borůvka rounds on one [[Superstep]]. The state is the edge
+    * set still crossing two components, each edge tagged with its
+    * endpoints' current components (ca, cb): a contraction relabels
+    * both tags and drops the edges it closed, so no per-vertex
+    * component table is carried. Each round's crossing set is one
+    * eager pin whose job also counts it (the halt statistic); the
+    * contraction's own pins (the nested [[ConnectedComponents]] run)
+    * die with the round. */
+  private def distributed(s: SparkSession, edges0: DataFrame, maxRounds: Int): DataFrame =
+    Superstep.run { sc =>
+      import s.implicits._
+      val (ec0, n0) = sc.count(edges0.filter($"a" =!= $"b")
+        .select($"a", $"b", $"w", $"a".as("ca"), $"b".as("cb")))
+      // (crossing edges, their count, the forest's per-round pins)
+      val (_, _, forest) = sc.loop((ec0, n0, Vector.empty[DataFrame]),
+          maxRounds, (st: (DataFrame, Long, Vector[DataFrame])) => s"Borůvka (${st._2} crossing edges)")(
+          st => st._1 +: st._3)((st, _) => st._2 == 0L) { case ((ec, _, forest), _) =>
         // every component nominates its minimum outgoing edge under
         // the (w, a, b) total order; a component pair may nominate the
         // same edge from both sides → distinct. Unique minima under a
         // total order cannot close a cycle (a cycle of per-component
         // minima would be strictly decreasing around itself).
         val e = struct($"w", $"a", $"b", $"ca", $"cb")
-        val chosen = ec.select($"ca".as("c"), e.as("e"))
+        val chosen = sc.pin(ec.select($"ca".as("c"), e.as("e"))
           .union(ec.select($"cb".as("c"), e.as("e")))
           .groupBy($"c").agg(min($"e").as("e"))
           .select($"e.w".as("w"), $"e.a".as("a"), $"e.b".as("b"),
             $"e.ca".as("ca"), $"e.cb".as("cb"))
-          .distinct()
-          .localCheckpoint(false)
-        forest += chosen.select($"a", $"b", $"w")
-        // contract: connected components of the chosen component graph
-        val labels = ConnectedComponents.run(s,
-          comp.select($"component".as("id")).distinct(),
-          chosen.select($"ca".as("src"), $"cb".as("dst")))
-        comp = comp
-          .join(labels.select($"id".as("component"), $"component".as("nc")), Seq("component"))
-          .select($"id", $"nc".as("component"))
-          .localCheckpoint(false)
+          .distinct())
+        // contract: connected components of the chosen component
+        // graph; every component still crossing nominated an edge, so
+        // the labels cover every tag in ec
+        val labels = ConnectedComponents.run(sc, s,
+          chosen.select($"ca".as("id")).union(chosen.select($"cb".as("id"))).distinct(),
+          chosen.select($"ca".as("src"), $"cb".as("dst")), maxRounds = 50)
+        val (next, n) = sc.count(ec
+          .join(labels.select($"id".as("ca"), $"component".as("na")), "ca")
+          .join(labels.select($"id".as("cb"), $"component".as("nb")), "cb")
+          .filter($"na" =!= $"nb")
+          .select($"a", $"b", $"w", $"na".as("ca"), $"nb".as("cb")))
+        (next, n, forest :+ chosen)
       }
+      sc.pin(forest.map(_.select($"a", $"b", $"w")).reduceOption(_ union _)
+        .getOrElse(edges0.filter(lit(false)).select($"a", $"b", $"w")))
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"Borůvka did not converge in $maxRounds rounds — raise maxRounds")
-    forest.reduceOption(_ union _)
-      .getOrElse(edges.filter(lit(false)).select($"a", $"b", $"w"))
-  }
 }

@@ -22,39 +22,32 @@ import org.apache.spark.sql.types.DecimalType
 object PageRank {
   private val M = DecimalType(28, 12)
 
-  /** @param edges directed (src, dst); every node must appear as a src
+  /** Routed on the message graph's size: when the (src, dst, outdeg)
+    * message graph is within [[Quotient.probeBound]] rows (e.g. the
+    * nation trade graph: deriving its edges scans the facts, but the
+    * graph itself is ≤ |dims|² rows), the ONE bounded collect that
+    * probes it is also the in-process iteration's input — dim-sized
+    * state, exactly like any broadcast-dimension computation — instead
+    * of paying a shuffle per iteration to update 25 numbers.
+    * Bit-identical to the distributed loop (same Decimal quantization,
+    * exact decimal sums); past the bound the distributed loop runs.
+    *
+    * @param edges directed (src, dst); every node must appear as a src
     *              (true for bidirectional graphs).
     * @param bidirectional caller asserts every node also appears as a
     *              dst (symmetric edge set). Then every node receives
     *              ≥ 1 message per iteration, so the dangling-node left
     *              join is provably a no-op and is skipped — one join
     *              fewer per iteration, same result.
-    * @param smallRanks route on the message graph's size: when the
-    *              (src, dst, outdeg) message graph is within
-    *              [[Quotient.probeBound]] rows (e.g. the nation trade
-    *              graph: deriving its edges scans the facts, but the
-    *              graph itself is ≤ |dims|² rows), the ONE bounded
-    *              collect that probes it is also the in-process
-    *              iteration's input — dim-sized state, exactly like any
-    *              broadcast-dimension computation — instead of paying a
-    *              shuffle per iteration to update 25 numbers.
-    *              Bit-identical to the distributed path (same Decimal
-    *              quantization, exact decimal sums). Past the bound the
-    *              distributed loop below runs. Leave false for graphs
-    *              whose node count scales with the data: the probe
-    *              would be wasted.
     * @return (node, rank) with rank as a raw double.
     */
-  def run(edges: DataFrame, iters: Int, bidirectional: Boolean = false,
-          smallRanks: Boolean = false): DataFrame = {
+  def run(edges: DataFrame, iters: Int, bidirectional: Boolean = false): DataFrame = {
     val e = edges.select("src", "dst")
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
     val msgGraph = e.join(deg, e("src") === deg("node"))
       .select(e("src"), e("dst"), col("outdeg"))
-    if (smallRanks) {
-      val probed = Quotient.probeRows(msgGraph, Quotient.probeBound(e.sparkSession))
-      if (probed.isDefined) return ranksInProcess(e, probed.get, iters, bidirectional)
-    }
+    val probed = Quotient.probeRows(msgGraph, Quotient.probeBound(e.sparkSession))
+    if (probed.isDefined) return ranksInProcess(e, probed.get, iters, bidirectional)
     Superstep.run { sc =>
       val ed = sc.persist(msgGraph.repartition(col("src")), Superstep.Memory)
       val ranks0 = sc.pin(deg.select(col("node"), lit(1.0).as("rank")), eager = false)

@@ -37,23 +37,6 @@ import org.apache.spark.sql.types.DecimalType
 object PersonalizedPageRank {
   private val M = DecimalType(28, 12)
 
-  /** @param seeds single column "node"; deduplicated here.
-    * @param smallRanks caller's ASSERTION that the graph is
-    *        dimension-bounded (≤ 2^20 edges at ANY fact scale — e.g. a
-    *        derived nation-level graph): the message graph is then
-    *        collected once and the rank iteration runs in-process,
-    *        replacing iters × (join + aggregation) scheduler rounds
-    *        with one job — bit-identical output by the same
-    *        quantization contract ([[PageRank]]'s guarded fast-path
-    *        pattern). Refused with an exception if the assertion is
-    *        false. The distributed loop stays the default and is what
-    *        the benchmark exercises. */
-  def run(s: SparkSession, edges: DataFrame, seeds: DataFrame, iters: Int,
-          smallRanks: Boolean = false): DataFrame = {
-    if (smallRanks) runDimBounded(s, edges, seeds, iters)
-    else runDistributed(s, edges, seeds, iters)
-  }
-
   /** Round-loop storage: the per-round rank checkpoint is EAGER on
     * DISK and the [[Superstep]] driver frees the previous round's
     * blocks as soon as the successor materializes —
@@ -65,8 +48,8 @@ object PersonalizedPageRank {
     * I/O trades for pool headroom at any edge count. */
   private val ROUND_LEVEL = org.apache.spark.storage.StorageLevel.DISK_ONLY
 
-  private def runDistributed(s: SparkSession, edges: DataFrame, seeds: DataFrame,
-                             iters: Int): DataFrame = {
+  /** @param seeds single column "node"; deduplicated here. */
+  def run(s: SparkSession, edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     // The SLIM 2-column edge list is the only big table, checkpointed
     // once hash-partitioned on src. outdeg does NOT ride the edges
     // (that tripled the cached bytes and forced a second edge-wide
@@ -114,68 +97,6 @@ object PersonalizedPageRank {
       }
       sc.pin(ranks.select(col("node"), col("rank")))
     }
-  }
-
-  /** Dimension-bounded fast path: ONE distributed job derives the
-    * dim-sized (src, dst, outdeg) message graph; the rank iteration
-    * then runs over that in-memory vector. Bit-identical to the
-    * distributed path: per-contribution quantization uses Spark's own
-    * [[org.apache.spark.sql.types.Decimal]] double→DECIMAL(28,12)
-    * cast (HALF_UP), the teleport contribution p(v)/α quantizes ONCE
-    * (as tpRows does), message sums are exact java.math.BigDecimal
-    * additions (order-free), and the final update is the same IEEE
-    * expression 0.85 * sum.doubleValue. */
-  private def runDimBounded(s: SparkSession, edges: DataFrame, seeds: DataFrame,
-                            iters: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{Decimal, DoubleType, LongType, StructField, StructType}
-    import scala.collection.mutable
-    import scala.jdk.CollectionConverters._
-    // single-sourced route bound (round-13, verdict #6)
-    val limit = Quotient.probeBound(s)
-    // limit rides INSIDE the collect: a fact-sized edge set is refused
-    // after shipping at most limit+1 rows, never an OOM-sized collect
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-    val ed = e.join(deg, e("src") === deg("node"))
-      .select(e("src"), e("dst"), col("outdeg")).limit(limit + 1).collect()
-    require(ed.length <= limit,
-      s"smallRanks is set but the edge set exceeds $limit rows — " +
-        "not dimension-bounded; use the distributed path")
-    val sd = seeds.select(col("node").cast("long")).distinct()
-      .limit(limit + 1).collect().map(_.getLong(0)).toSet
-    require(sd.nonEmpty, "personalized PageRank needs at least one seed")
-    require(sd.size <= limit, "seed set not dimension-bounded")
-    val base = 0.15 / sd.size.toDouble
-    val nodes = ed.map(_.getLong(0)).distinct
-    // static teleport contribution p(v)/α, quantized once like tpRows
-    val tp: Map[Long, java.math.BigDecimal] = nodes.map { n =>
-      val t = if (sd(n)) base else 0.0
-      val d = Decimal(t / 0.85); d.changePrecision(28, 12)
-      n -> d.toJavaBigDecimal
-    }.toMap
-    var rank: mutable.HashMap[Long, Double] =
-      mutable.HashMap(nodes.map(n => n -> (if (sd(n)) base else 0.0)).toIndexedSeq: _*)
-    for (_ <- 1 to iters) {
-      val msg = mutable.HashMap.empty[Long, java.math.BigDecimal]
-      tp.foreach { case (n, c) => msg.update(n, c) }
-      ed.foreach { r =>
-        rank.get(r.getLong(0)).foreach { rk =>
-          val contrib = Decimal(rk / r.getLong(2))
-          contrib.changePrecision(28, 12)
-          val d = r.getLong(1)
-          msg.update(d,
-            msg.getOrElse(d, java.math.BigDecimal.ZERO).add(contrib.toJavaBigDecimal))
-        }
-      }
-      val next = mutable.HashMap.empty[Long, Double]
-      msg.foreach { case (n, m) => next.update(n, 0.85 * m.doubleValue) }
-      rank = next
-    }
-    val rows = rank.toSeq.sortBy(_._1).map { case (n, r) => Row(n, r) }
-    val schema = StructType(Seq(
-      StructField("node", LongType), StructField("rank", DoubleType)))
-    s.createDataFrame(rows.asJava, schema)
   }
 
   /** REFINED-QUOTIENT fast path for the bidirectional (brand,

@@ -22,9 +22,10 @@ object Quotient {
   /** Conf keys for the routing bounds: a deployment can move each
     * in-process/distributed crossover without a rebuild. `maxClasses`
     * governs every class-domain probe; `probeBound` governs the
-    * row-probe sweeps (bounded BFS spine, Brandes σ, the dimension-
-    * bounded PageRank/PPR/label-propagation variants). DispatchSpec
-    * pins both values AND each operator's route at the shipped SFs. */
+    * row-probe routes: the BFS spine, the [[GraphDB]] edge handle,
+    * Brandes σ, PageRank, KCore, KTruss, Louvain, Mst and the
+    * connected-components local finish. DispatchSpec pins both values
+    * AND each operator's route at the shipped SFs. */
   val MAX_CLASSES_KEY = "spark.graft.quotient.maxClasses"
   val PROBE_BOUND_KEY = "spark.graft.dispatch.probeBound"
 

@@ -3,7 +3,7 @@ package graft.graph
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count => countRows, lit}
 import org.apache.spark.storage.StorageLevel
@@ -29,8 +29,9 @@ import org.apache.spark.storage.StorageLevel
   *     "did not converge within N rounds" error: a mid-iteration state
   *     is never returned as an answer.
   *   - When the run ends, every checkpoint the result's plan does not
-  *     read is freed (every lazy pin stays if the result reads one),
-  *     and every persisted frame is unpersisted; on any
+  *     read is freed (every lazy pin stays if the result reads one;
+  *     a result that is not a Dataset keeps no pin), and every
+  *     persisted frame is unpersisted; on any
   *     throw every checkpoint is freed (try/finally), so a failed run
   *     leaks no blocks into the caller's session.
   *
@@ -111,7 +112,7 @@ final class Superstep private {
       lazyPins -= id
     }
 
-  private def release(result: Option[DataFrame]): Unit = {
+  private def release(result: Option[Dataset[_]]): Unit = {
     val read = result.toSeq.flatMap(Superstep.rdds).map(_.id).toSet
     // a lazy pin the result reads may still read the others
     free(if (read.exists(lazyPins)) read ++ lazyPins else read)
@@ -127,16 +128,16 @@ object Superstep {
 
   /** Runs `body` with a fresh [[Superstep]]; see the class doc for
     * what is freed when it returns or throws. */
-  def run(body: Superstep => DataFrame): DataFrame = {
+  def run[A](body: Superstep => A): A = {
     val sc = new Superstep
-    var out: Option[DataFrame] = None
+    var out: Option[A] = None
     try {
       out = Some(body(sc))
       out.get
-    } finally sc.release(out)
+    } finally sc.release(out.collect { case ds: Dataset[_] => ds })
   }
 
   /** The checkpointed RDDs a frame's plan reads. */
-  private def rdds(df: DataFrame): Seq[RDD[_]] =
+  private def rdds(df: Dataset[_]): Seq[RDD[_]] =
     df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
 }

@@ -60,30 +60,6 @@ class RoundFourOpsSpec extends SparkSpec {
     assert(math.abs(out.values.sum - expected) < 1e-9)
   }
 
-  test("PersonalizedPageRank: the dim-bounded fast path is bit-identical to the distributed loop") {
-    // the guarded driver iteration (smallRanks) must replay the same
-    // quantize-then-exact-sum contract: compare on the sf0.001 part
-    // edit-graph (sinks, multi-component, real seed set), all 64 bits
-    val edges = graft.graph.GraphBuilder.partEdges(spark, sfDir)
-    val seeds = Tables.part(spark, sfDir).filter(col("p_partkey") % 100 === 0)
-      .select(col("p_partkey").as("node"))
-    def ranks(small: Boolean) =
-      graft.graph.PersonalizedPageRank.run(spark, edges, seeds, iters = 4, smallRanks = small)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dist = ranks(small = false)
-    val fast = ranks(small = true)
-    assert(fast.keySet === dist.keySet)
-    assert(fast.forall { case (n, r) =>
-      java.lang.Double.doubleToLongBits(r) == java.lang.Double.doubleToLongBits(dist(n))
-    }, "fast-path ranks must match the distributed loop bit-for-bit")
-    // and the guard refuses a caller lying about boundedness
-    val big = spark.range((1L << 20) + 2L).select(col("id").as("src"), lit(2L).as("dst"))
-    intercept[IllegalArgumentException] {
-      graft.graph.PersonalizedPageRank.run(spark, big,
-        Seq(1L).toDF("node"), iters = 1, smallRanks = true)
-    }
-  }
-
   test("e_spike: per-type counts sum to event totals; flag matches the cross-multiplication") {
     val sp = graft.streaming.EventsPack.queries("e_spike")(spark, sfDir).cache()
     val evTotals = Tables.events(spark, sfDir)

@@ -2,32 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-6 additions: the label-propagation dim-bounded fast path. */
+/** Round-6 additions. */
 class RoundSixOpsSpec extends SparkSpec {
-
-  test("LabelPropagation: the dim-bounded fast path is bit-identical to the distributed loop") {
-    // the guarded driver iteration (smallGraph) must replay the same
-    // integer argmax with the (count DESC, label ASC) total order:
-    // compare on the sf0.001 widened part edit-graph (the g_labelprop
-    // input — multi-community, asymmetric degrees), every label
-    import spark.implicits._
-    val vertices = Tables.part(spark, sfDir).select($"p_partkey".cast("long").as("id"))
-    val edges = graft.graph.GraphBuilder.partEdgesWide(spark, sfDir)
-    def labels(small: Boolean) =
-      graft.graph.LabelPropagation.run(spark, vertices, edges, iters = 4, smallGraph = small)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = labels(small = false)
-    val fast = labels(small = true)
-    assert(fast.keySet === dist.keySet)
-    assert(fast.forall { case (n, l) => dist(n) == l },
-      "fast-path labels must match the distributed loop exactly")
-    // and the guard refuses a caller lying about boundedness
-    val big = spark.range((1L << 20) + 2L).select(col("id").as("src"), lit(2L).as("dst"))
-    intercept[IllegalArgumentException] {
-      graft.graph.LabelPropagation.run(spark,
-        Seq(1L).toDF("id"), big, iters = 1, smallGraph = true)
-    }
-  }
 
   test("g_dag_depth: the fact scan joins the class depths exactly once, broadcast") {
     // The quotient-graph promise: facts never iterate — the returned

@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared task-metrics accounting for the measured-evidence specs
   * (ShuffleVolumeSpec, ZOrderLayoutSpec) — one listener + quiesce
-  * loop, so a fix to the accounting applies to every byte ceiling. */
+  * loop, so a fix to the accounting applies to every byte ceiling —
+  * and the persisted-RDD readout the pin-lifetime specs share. */
 object TestMetrics {
 
   /** Sum `field` over every task that runs during `action`. The
@@ -60,6 +61,12 @@ object TestMetrics {
       jobs.get()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** Ids of the RDDs the session keeps persisted — checkpoint pins
+    * and cached frames. A run that frees its pins leaves this set as
+    * it found it, apart from its result's own pin. */
+  def persistent(spark: SparkSession): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   private def quiesce(events: AtomicLong): Unit = {
     var last = -1L

@@ -38,9 +38,9 @@ class BetweennessSpec extends SparkSpec {
     assert(b === Map(1L -> 0.0, 2L -> 1.0, 3L -> 0.0, 10L -> 0.0, 11L -> 0.0))
   }
 
-  test("sigmaBounded counts shortest paths exactly (diamond)") {
+  test("σ counts shortest paths exactly (diamond)") {
     // 1-2, 1-3, 2-4, 3-4: two shortest 1→4 paths
-    val sig = Betweenness.sigmaBounded(bidir(Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L))))
+    val sig = Betweenness.sigma(bidir(Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L))))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
     assert(sig((1L, 4L)) === ((3L, 2L))) // wave 3, two paths
     assert(sig((1L, 2L)) === ((2L, 1L)))

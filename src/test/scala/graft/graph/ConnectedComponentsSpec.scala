@@ -9,15 +9,20 @@ import scala.util.Random
   * plus the shapes Pregel is worst at: long chains and singletons. */
 class ConnectedComponentsSpec extends SparkSpec {
 
+  /** Labels at the default probe bound (the union-find local finish),
+    * or with `distributed` at a conf bound of 1 (the star-contraction
+    * rounds down to a single pair). */
   private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)],
-                 localFinishThreshold: Int = 1 << 16): Map[Long, Long] = {
+                 distributed: Boolean = false): Map[Long, Long] = {
     import spark.implicits._
     val v = nodes.toDF("id")
     val e =
       if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("src", "dst")
       else edges.toDF("src", "dst")
-    ConnectedComponents.run(spark, v, e, localFinishThreshold = localFinishThreshold)
+    if (distributed) spark.conf.set(Quotient.PROBE_BOUND_KEY, "1")
+    try ConnectedComponents.run(spark, v, e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
   }
 
   test("matches GraphX min-id labeling on 20 seeded random graphs (both finish paths)") {
@@ -33,10 +38,10 @@ class ConnectedComponentsSpec extends SparkSpec {
         val want = GraphXAlgos
           .connectedComponents(spark, nodes.toDF("id"), edges.toDF("src", "dst"))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // Default threshold: the union-find local finish. Threshold 0:
-        // pure distributed star-contraction rounds. Same labels.
+        // Default bound: the union-find local finish. Bound 1: the
+        // distributed star-contraction rounds. Same labels.
         assert(cc(nodes, edges) === want, s"local-finish path, edges=$edges")
-        assert(cc(nodes, edges, localFinishThreshold = 0) === want,
+        assert(cc(nodes, edges, distributed = true) === want,
           s"distributed path, edges=$edges")
       }
     }

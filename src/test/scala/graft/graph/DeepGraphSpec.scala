@@ -18,9 +18,12 @@ class DeepGraphSpec extends SparkSpec {
     val edges = spark.range(n - 1)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
     val t0 = System.nanoTime()
-    // Threshold 0: the distributed star-contraction rounds are the
-    // thing under stress here, so the union-find local finish is off.
-    val cc = ConnectedComponents.run(spark, vertices, edges, localFinishThreshold = 0)
+    // Conf bound 1: the distributed star-contraction rounds are the
+    // thing under stress here, so the union-find local finish waits
+    // for a single remaining pair.
+    spark.conf.set(Quotient.PROBE_BOUND_KEY, "1")
+    val cc = try ConnectedComponents.run(spark, vertices, edges)
+      finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
     val distinctComponents = cc.select("component").distinct().as[Long].collect().toSeq
     val dt = (System.nanoTime() - t0) / 1e9
     assert(distinctComponents === Seq(0L), "chain must collapse to component 0")
@@ -34,8 +37,8 @@ class DeepGraphSpec extends SparkSpec {
     val vertices = spark.range(n).select(col("id"))
     val edges = spark.range(n - 1)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
-    // 29999 canonical pairs < the default 65536 threshold, so this
-    // exercises round-0 collection + driver union-find end to end.
+    // 29999 canonical pairs are within the default probe bound, so
+    // this exercises round-0 collection + driver union-find end to end.
     val cc = ConnectedComponents.run(spark, vertices, edges)
     assert(cc.select("component").distinct().as[Long].collect().toSeq === Seq(0L))
     assert(cc.count() === n)

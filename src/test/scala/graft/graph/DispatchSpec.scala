@@ -231,21 +231,19 @@ class DispatchSpec extends SparkSpec {
     assert(trade <= Quotient.probeBound(spark),
       s"$trade trade edges exceed probeBound — the BFS spine would fall back")
     // single-sourcing is LIVE in the formerly-hardcoded sites: a conf
-    // bound of 1 must route bfsAuto to its distributed loop (which
-    // answers as its default in-process sweep does) and reach
-    // sigmaBounded's guard
+    // bound of 1 must route bfsAuto and σ to their distributed loops
+    // (which answer as their default in-process sweeps do)
     import spark.implicits._
     val tiny = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
     val tinySeeds = Seq((1L, 1L), (3L, 3L)).toDF("root", "node")
     val bfsDefault = asRows(Bfs.bfsAuto(tiny, tinySeeds))
+    val sigmaDefault = asRows(Betweenness.sigma(tiny))
     spark.conf.set(Quotient.PROBE_BOUND_KEY, "1")
     try {
       assert(asRows(Bfs.bfsAuto(tiny, tinySeeds)) === bfsDefault,
         "bfsAuto conf-forced distributed route diverged from the in-process sweep")
-      val exS = intercept[IllegalArgumentException] {
-        Betweenness.sigmaBounded(tiny).collect()
-      }
-      assert(exS.getMessage.contains("exceeds 1 rows"))
+      assert(asRows(Betweenness.sigma(tiny)) === sigmaDefault,
+        "σ conf-forced distributed route diverged from the in-process sweep")
     } finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
     // DagDepth consults maxClasses: a conf cap of 1 must route its
     // class DP to the distributed fallback — which still answers and

@@ -63,7 +63,7 @@ class FallbackRoutingSpec extends SparkSpec {
   test("betweenness: σ routes agree and the composed centrality is route-invariant") {
     val edges = testEdges
     assertRoutesAgree(
-      Betweenness.sigmaBounded(edges),
+      Betweenness.sigma(edges),
       Betweenness.sigmaDistributed(edges),
       "sigma")
     val fast = Betweenness.run(spark, edges)
@@ -146,12 +146,12 @@ class FallbackRoutingSpec extends SparkSpec {
     assert(e(11L) === 1L && e(10L) === 2L && e(12L) === 2L)
   }
 
-  test("pagerank: smallRanks past a conf bound of 1 equals the in-process route") {
+  test("pagerank: past a conf bound of 1 equals the in-process route") {
     val edges = testEdges
-    val fast = PageRank.run(edges, 5, bidirectional = true, smallRanks = true)
+    val fast = PageRank.run(edges, 5, bidirectional = true)
     spark.conf.set(Quotient.PROBE_BOUND_KEY, "1")
     val fallback =
-      try PageRank.run(edges, 5, bidirectional = true, smallRanks = true).localCheckpoint()
+      try PageRank.run(edges, 5, bidirectional = true).localCheckpoint()
       finally spark.conf.unset(Quotient.PROBE_BOUND_KEY)
     assertRoutesAgree(fast, fallback, "pagerank")
     // anchor: the 3-path's ends are symmetric and rank below its middle

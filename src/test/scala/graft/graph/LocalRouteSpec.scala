@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, TestMetrics}
+import graft.TestMetrics.persistent
 
 /** The bounded local finish: within [[Quotient.probeBound]] KCore,
   * general KTruss and the Louvain quotient sweeps run in-process on
@@ -18,8 +19,6 @@ class LocalRouteSpec extends SparkSpec {
   }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
-
-  private def persistent(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** A seeded random directed bag over `n` vertices: duplicate edges,
     * self-loops and destination-only vertices (ids past `n`). */
@@ -130,11 +129,11 @@ class LocalRouteSpec extends SparkSpec {
     val edges = (0L until 24L).flatMap(i => Seq((i, (i + 1) % 24), ((i + 1) % 24, i),
       (i, (i + 5) % 24), ((i + 5) % 24, i))).toDF("src", "dst")
     for (broadcastState <- Seq(true, false)) {
-      val before = persistent()
+      val before = persistent(spark)
       val out = Louvain.run(spark, verts, edges, 5, broadcastState = broadcastState)
-      val afterRun = persistent()
+      val afterRun = persistent(spark)
       out.collect()
-      assert(persistent() === afterRun, s"broadcastState=$broadcastState")
+      assert(persistent(spark) === afterRun, s"broadcastState=$broadcastState")
       // the result reads one pinned label table, never a sweep chain
       assert((afterRun -- before).size <= 1, s"broadcastState=$broadcastState")
     }

@@ -3,13 +3,12 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, TestMetrics}
+import graft.TestMetrics.persistent
 
 /** The loop driver: halt statistics from the checkpoint's own job,
   * generation lifetimes, the round cap, and no leaked blocks when an
   * engine's run throws. */
 class SuperstepSpec extends SparkSpec {
-
-  private def persistent(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("the observed count equals count() of the checkpointed frame, empty frames too") {
     import spark.implicits._
@@ -32,7 +31,7 @@ class SuperstepSpec extends SparkSpec {
 
   test("one round costs one job, and the loop frees each dead generation") {
     import spark.implicits._
-    val before = persistent()
+    val before = persistent(spark)
     val rounds = 5
     var out: DataFrame = null
     val jobs = TestMetrics.jobCount(spark) {
@@ -43,19 +42,19 @@ class SuperstepSpec extends SparkSpec {
           sc.count(v.filter($"v" > done))
         }
         // only the live generation is pinned once the loop is done
-        assert((persistent() -- before).size === 1)
+        assert((persistent(spark) -- before).size === 1)
         last
       }
     }
     // one job per round plus the initial pin
     assert(jobs === rounds + 1L)
-    assert((persistent() -- before).size === 1, "the result's own checkpoint stays pinned")
+    assert((persistent(spark) -- before).size === 1, "the result's own checkpoint stays pinned")
     assert(out.count() === 0L)
   }
 
   test("past the round cap the loop throws and the run frees every checkpoint") {
     import spark.implicits._
-    val before = persistent()
+    val before = persistent(spark)
     val e = intercept[IllegalStateException] {
       Superstep.run { sc =>
         val (v0, n0) = sc.count(spark.range(0, 10).toDF("v"))
@@ -66,7 +65,25 @@ class SuperstepSpec extends SparkSpec {
       }
     }
     assert(e.getMessage === "shrink (7 left) did not converge within 3 rounds")
-    assert(persistent() -- before === Set.empty)
+    assert(persistent(spark) -- before === Set.empty)
+  }
+
+  test("a result that is not a Dataset keeps no pin, lazy or eager") {
+    import spark.implicits._
+    val before = persistent(spark)
+    val sizes: Seq[Long] = Superstep.run { sc =>
+      val lazyPin = sc.pin(spark.range(1, 4).toDF("v"), eager = false)
+      val (v0, n0) = sc.count(spark.range(0, 4).toDF("v"))
+      val (_, ns) = sc.loop((v0, Vector(n0)), 100, (_: (DataFrame, Vector[Long])) => "shrink")(
+          st => Seq(st._1))((st, _) => st._2.last == 0L) { case ((v, ns), done) =>
+        val (next, n) = sc.count(v.filter($"v" > done))
+        (next, ns :+ n)
+      }
+      assert(lazyPin.count() === 3L)
+      ns
+    }
+    assert(sizes === Seq(4L, 3L, 2L, 1L, 0L))
+    assert(persistent(spark) -- before === Set.empty)
   }
 
   test("KCore, KTruss and Mis past their round caps throw and leak no RDD") {
@@ -86,10 +103,10 @@ class SuperstepSpec extends SparkSpec {
     // KCore and KTruss run in-process within the probe bound and
     // distributed at bound 1: both routes throw the same message
     def throws(): Map[String, String] = runs.map { case (name, run) =>
-      val before = persistent()
+      val before = persistent(spark)
       val e = intercept[IllegalStateException](run().collect())
       assert(e.getMessage.contains("did not converge"), name)
-      assert(persistent() -- before === Set.empty, s"$name leaked checkpoints")
+      assert(persistent(spark) -- before === Set.empty, s"$name leaked checkpoints")
       name -> e.getMessage
     }.toMap
     val local = throws()
