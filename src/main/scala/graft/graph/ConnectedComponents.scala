@@ -33,6 +33,9 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** Default round cap: star contraction needs O(log n) rounds. */
+  val MaxRounds = 50
+
   /** Internal edge orientation: (hi, lo) with hi > lo always. */
   private def canonical(edges: DataFrame): DataFrame =
     edges.select(
@@ -102,7 +105,7 @@ object ConnectedComponents {
     * rounds — and the tail rounds it replaces are exactly the ones
     * where per-round scheduling overhead dwarfs the (tiny) data. */
   def run(s: SparkSession, vertices: DataFrame, edges: DataFrame,
-          maxRounds: Int = 50): DataFrame =
+          maxRounds: Int = MaxRounds): DataFrame =
     Superstep.run(run(_, s, vertices, edges, maxRounds))
 
   /** [[run]] on the caller's [[Superstep]], so a caller's own loop

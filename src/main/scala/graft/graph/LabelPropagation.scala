@@ -28,31 +28,42 @@ import org.apache.spark.sql.functions._
 object LabelPropagation {
 
   def run(s: SparkSession, vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    import s.implicits._
     require(iters >= 1, s"iters must be >= 1, got $iters")
     Superstep.run { sc =>
-      // Derived once, hash-partitioned on the join key: a pin preserves
-      // outputPartitioning, and the per-round join builds the
-      // vertex-sized label vector (shuffle_hash hint) while STREAMING
-      // the edges — no exchange and no per-round sort of the edge side.
-      val e = sc.pin(edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst")).repartition(col("src")), eager = false)
-      val labels0 = sc.pin(vertices.select(col("id").cast("long").as("id"))
-        .withColumn("label", $"id")
-        .repartition(col("id")), eager = false)
+      val (e, labels0) = inputs(sc, vertices, edges)
       val labels = sc.rounds(labels0, iters)(Seq(_)) { (labels, _) =>
-        val counts = e.join(labels.select($"id".as("src"), $"label").hint("shuffle_hash"), "src")
-          .groupBy($"dst".as("id"), $"label").agg(count(lit(1)).as("c"))
-        // mode with min-label tie-break: max over (count, -label)
-        val upd = counts.groupBy($"id")
-          .agg(max(struct($"c", (-$"label").as("nl"))).as("m"))
-          .select($"id", (-$"m.nl").as("new_label"))
-        sc.pin(labels.join(upd.hint("shuffle_hash"), Seq("id"), "left")
-          .select($"id", coalesce($"new_label", $"label").as("label")), eager = false)
+        sc.pin(round(e, labels), eager = false)
       }
       // no action ran inside the loop: one eager pin of the result, so
       // the run frees every round's lazy pin
       sc.pin(labels)
     }
+  }
+
+  /** The (src, dst) edges and the initial (id, label) vector, each
+    * lazily pinned and hash-partitioned on its join key. */
+  private[graft] def inputs(sc: Superstep, vertices: DataFrame,
+                            edges: DataFrame): (DataFrame, DataFrame) = {
+    val e = sc.pin(edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst")).repartition(col("src")), eager = false)
+    val labels0 = sc.pin(vertices.select(col("id").cast("long").as("id"))
+      .withColumn("label", col("id"))
+      .repartition(col("id")), eager = false)
+    (e, labels0)
+  }
+
+  /** One synchronous round: every vertex with in-neighbors adopts
+    * their most frequent label, the smallest on a tie. Both joins
+    * build the vertex-sized side (shuffle_hash hint), so the edges
+    * stream through unsorted. */
+  private[graft] def round(e: DataFrame, labels: DataFrame): DataFrame = {
+    val counts = e.join(labels.select(col("id").as("src"), col("label")).hint("shuffle_hash"), "src")
+      .groupBy(col("dst").as("id"), col("label")).agg(count(lit(1)).as("c"))
+    // mode with min-label tie-break: max over (count, -label)
+    val upd = counts.groupBy(col("id"))
+      .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
+      .select(col("id"), (-col("m.nl")).as("new_label"))
+    labels.join(upd.hint("shuffle_hash"), Seq("id"), "left")
+      .select(col("id"), coalesce(col("new_label"), col("label")).as("label"))
   }
 }

@@ -45,7 +45,9 @@ object Mst {
     * overhead; the fact-scale work (the weighted-edge aggregation) is
     * exactly what the probe's collect executes. A null weight routes
     * to the engine (SQL min/struct-ordering semantics stay
-    * authoritative for that corner). */
+    * authoritative for that corner). `maxRounds` caps the Borůvka
+    * contraction rounds: a forest that needs R contractions runs at
+    * `maxRounds = R`. */
   def run(s: SparkSession, wedges: DataFrame, maxRounds: Int = 25,
           bound: Int = -1): DataFrame = {
     val edges0 = wedges
@@ -112,7 +114,7 @@ object Mst {
         // the labels cover every tag in ec
         val labels = ConnectedComponents.run(sc, s,
           chosen.select($"ca".as("id")).union(chosen.select($"cb".as("id"))).distinct(),
-          chosen.select($"ca".as("src"), $"cb".as("dst")), maxRounds = 50)
+          chosen.select($"ca".as("src"), $"cb".as("dst")), ConnectedComponents.MaxRounds)
         val (next, n) = sc.count(ec
           .join(labels.select($"id".as("ca"), $"component".as("na")), "ca")
           .join(labels.select($"id".as("cb"), $"component".as("nb")), "cb")

@@ -30,8 +30,9 @@ import org.apache.spark.storage.StorageLevel
   *     is never returned as an answer.
   *   - When the run ends, every checkpoint the result's plan does not
   *     read is freed (every lazy pin stays if the result reads one;
-  *     a result that is not a Dataset keeps no pin), and every
-  *     persisted frame is unpersisted; on any
+  *     a driver value keeps no pin, and a value that holds a Dataset
+  *     — a tuple, collection or Option of frames — is rejected), and
+  *     every persisted frame is unpersisted; on any
   *     throw every checkpoint is freed (try/finally), so a failed run
   *     leaks no blocks into the caller's session.
   *
@@ -127,14 +128,28 @@ object Superstep {
   val Disk: StorageLevel = StorageLevel.DISK_ONLY
 
   /** Runs `body` with a fresh [[Superstep]]; see the class doc for
-    * what is freed when it returns or throws. */
+    * what is freed when it returns or throws. The result is either a
+    * Dataset, which keeps the pins its plan reads, or a driver value
+    * holding no Dataset, which keeps none. */
   def run[A](body: Superstep => A): A = {
     val sc = new Superstep
     var out: Option[A] = None
     try {
-      out = Some(body(sc))
-      out.get
+      val a = body(sc)
+      require(a.isInstanceOf[Dataset[_]] || !holdsDataset(a),
+        "a Superstep run returns a Dataset or a value that holds none: " +
+          "the pins of a nested frame would be freed")
+      out = Some(a)
+      a
     } finally sc.release(out.collect { case ds: Dataset[_] => ds })
+  }
+
+  private def holdsDataset(v: Any): Boolean = v match {
+    case _: Dataset[_] => true
+    case xs: Iterable[_] => xs.exists(holdsDataset)
+    case p: Product => p.productIterator.exists(holdsDataset)
+    case xs: Array[_] => xs.exists(holdsDataset)
+    case _ => false
   }
 
   /** The checkpointed RDDs a frame's plan reads. */

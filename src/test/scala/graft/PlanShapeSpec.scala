@@ -53,6 +53,9 @@ class PlanShapeSpec extends SparkSpec {
   // LocalRelation scans for it. Its PRE-checkpoint shape is asserted
   // directly: the trainer is join-free by construction (windows +
   // partial-aggregable groupBy + TakeOrderedAndProject only).
+  // g_labelprop and g_modularity read the label-propagation run's
+  // eager result pin, so the sweeps see one checkpoint scan for them
+  // too; RoundFourOpsSpec asserts the plan of one round directly.
 
   private def df(name: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)

@@ -29,6 +29,25 @@ class RoundFourOpsSpec extends SparkSpec {
     assert(out(99L) === 99L)
   }
 
+  test("LabelPropagation: a round joins by two shuffled hash joins that build the label side") {
+    // the run returns its eager result pin, so PlanShapeSpec's all-keys
+    // sweep sees g_labelprop and g_modularity as one checkpoint scan;
+    // the plan of a round is asserted here
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 10L))
+    val edges = (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
+    val vertices = Seq(1L, 2L, 3L, 10L).toDF("id")
+    graft.graph.Superstep.run { sc =>
+      val (e, labels0) = graft.graph.LabelPropagation.inputs(sc, vertices, edges)
+      val plan = graft.graph.LabelPropagation.round(e, labels0)
+        .queryExecution.executedPlan.toString
+      // the shuffle_hash hints: the edges stream unsorted past the
+      // vertex-sized labels, and the update joins back the same way
+      assert("ShuffledHashJoin".r.findAllIn(plan).size === 2, plan)
+      assert("BuildRight".r.findAllIn(plan).size === 2, plan)
+      assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"), plan)
+    }
+  }
+
   test("g_labelprop: total vertex coverage; labels are existing vertex ids") {
     val lp = graft.graph.GraphPack.queries("g_labelprop")(spark, sfDir).cache()
     val parts = Tables.part(spark, sfDir).select(col("p_partkey").cast("long").as("id"))

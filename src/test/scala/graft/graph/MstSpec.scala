@@ -39,6 +39,18 @@ class MstSpec extends SparkSpec {
     }.toSet
   }
 
+  test("maxRounds counts Borůvka contractions: a two-contraction path passes at 2, throws at 1") {
+    // weights alternate 1, 2, 1, …: the first contraction only merges
+    // pairs, the second closes the path
+    val path = (0L until 9L).map(i => (i, i + 1, if (i % 2 == 0) 1.0 else 2.0))
+    val forest = Mst.run(spark, path.toDF("a", "b", "w"), maxRounds = 2, bound = 0)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(forest === kruskal(path))
+    val e = intercept[IllegalStateException](
+      Mst.run(spark, path.toDF("a", "b", "w"), maxRounds = 1, bound = 0).collect())
+    assert(e.getMessage === "Borůvka (4 crossing edges) did not converge within 1 rounds")
+  }
+
   test("triangle keeps its two lightest edges") {
     val e = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (1L, 3L, 5.0))
     assert(mst(e) === Set((1L, 2L, 1.0), (2L, 3L, 2.0)))

@@ -86,6 +86,19 @@ class SuperstepSpec extends SparkSpec {
     assert(persistent(spark) -- before === Set.empty)
   }
 
+  test("a value that holds a Dataset is rejected, and the run keeps no pin") {
+    val before = persistent(spark)
+    val holders: Seq[(String, Superstep => Any)] = Seq(
+      "tuple" -> (sc => (sc.pin(spark.range(0, 4).toDF("v")), 4L)),
+      "Seq" -> (sc => Seq(sc.pin(spark.range(0, 4).toDF("v")))),
+      "Option" -> (sc => Option(sc.pin(spark.range(0, 4).toDF("v")))))
+    holders.foreach { case (what, body) =>
+      val e = intercept[IllegalArgumentException](Superstep.run(body))
+      assert(e.getMessage.contains("holds none"), what)
+    }
+    assert(persistent(spark) -- before === Set.empty)
+  }
+
   test("KCore, KTruss and Mis past their round caps throw and leak no RDD") {
     import spark.implicits._
     // a 20-node path: the 2-core peels one vertex off each end per round
